@@ -7,24 +7,30 @@ import graft.sinks._
 /** Coordinator facade with the reference's entry-point shape
   * (`/root/reference/exporter.go:17-48`): pair a source DataFrame with a
   * codec, then `writeString` (≈ `Write(io.Writer)`) or `writeFile`
-  * (single local file, ≈ `WriteFile`). Distributed directory writes go
+  * (single local file, ≈ `WriteFile`). Like the reference, there is one
+  * coordinator loop (`SinkIO.stream`) and each codec plugs into it: a
+  * `Frame` (`head ++ (no kept rows ? empty : open ++ rows.mkString(sep)
+  * ++ close)`) plus a row encoder. Distributed directory writes go
   * through each sink's `writeDir` — the scale path the reference's
   * single-writer design cannot express. */
 final case class Exporter(df: DataFrame) {
-  def csv(opts: CsvOptions = CsvOptions()): Exporter.Bound =
-    new Exporter.Bound(() => CsvSink.writeString(df, opts), p => CsvSink.writeFile(df, p, opts))
-  def json(opts: JsonOptions = JsonOptions()): Exporter.Bound =
-    new Exporter.Bound(() => JsonSink.writeString(df, opts), p => JsonSink.writeFile(df, p, opts))
-  def xml(opts: XmlOptions = XmlOptions()): Exporter.Bound =
-    new Exporter.Bound(() => XmlSink.writeString(df, opts), p => XmlSink.writeFile(df, p, opts))
-  def html(opts: HtmlOptions = HtmlOptions()): Exporter.Bound =
-    new Exporter.Bound(() => HtmlSink.writeString(df, opts), p => HtmlSink.writeFile(df, p, opts))
+  def csv(opts: CsvOptions = CsvOptions()): Exporter.Bound = CsvSink.bound(df, opts)
+  def json(opts: JsonOptions = JsonOptions()): Exporter.Bound = JsonSink.bound(df, opts)
+  def xml(opts: XmlOptions = XmlOptions()): Exporter.Bound = XmlSink.bound(df, opts)
+  def html(opts: HtmlOptions = HtmlOptions()): Exporter.Bound = HtmlSink.bound(df, opts)
 }
 
 object Exporter {
-  /** A (source, codec) pair ready to write. */
-  final class Bound(content: () => String, fileWriter: String => Unit) {
-    def writeString: String = content()
-    def writeFile(path: String): Unit = fileWriter(path)
+  /** A (source, codec) pair ready to write: `content` yields the codec's
+    * driver-stream chunks afresh on each call. */
+  final class Bound(content: () => Iterator[String]) {
+    def writeString: String = content().mkString
+
+    /** Streams the chunks to a single local file — the `exporter.WriteFile`
+      * coordinator (`exporter.go:36-48`): one writer, constant memory. */
+    def writeFile(path: String): Unit = {
+      val w = new java.io.BufferedWriter(new java.io.FileWriter(path), 1 << 16)
+      try content().foreach(w.write) finally w.close()
+    }
   }
 }

@@ -175,12 +175,18 @@ object Render {
                 mappers: Seq[(DataType, Column => Column)] = Nil,
                 ctxMappers: Seq[(DataType, (MapperContext, Column) => Column)] = Nil): DataFrame = {
     val cols = df.schema.fields.map { f =>
-      ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
-          fn(MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
-        .orElse(mappers.collectFirst { case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
-        .getOrElse(render(col(f.name), f.dataType))
-        .as(f.name)
+      mapped(f, mappers, ctxMappers).getOrElse(render(col(f.name), f.dataType)).as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
   }
+
+  /** Column `f` through the first custom mapper whose DataType matches
+    * it — a context mapper before a plain one — or None when none does,
+    * leaving the caller's own default in force. */
+  def mapped(f: StructField,
+             mappers: Seq[(DataType, Column => Column)],
+             ctxMappers: Seq[(DataType, (MapperContext, Column) => Column)]): Option[Column] =
+    ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
+        fn(MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
+      .orElse(mappers.collectFirst { case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
 }

@@ -14,6 +14,14 @@ import graft.sources.Tables
   * strftime + trailing-zero trim). */
 object Export {
 
+  /** A graft-framed output directory's document: its non-hidden files
+    * concatenated in name order. */
+  private def framedDocument(out: String): String =
+    Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.getName)
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // render layer as a query: every lineitem column → reference string form
@@ -68,11 +76,7 @@ object Export {
         .repartitionByRange(4, $"doc_id").sortWithinPartitions($"doc_id")
       graft.sinks.JsonSink.objects(src)
         .write.format("graft-framed").mode("overwrite").save(out)
-      val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .sortBy(_.getName)
-      val whole = files.map(f =>
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString
+      val whole = framedDocument(out)
       import org.apache.spark.sql.Dataset
       val oneDoc: Dataset[String] = Seq(whole).toDS()
       s.read.schema(src.schema).option("multiLine", "true").json(oneDoc)
@@ -96,11 +100,7 @@ object Export {
         .orderBy($"doc_id").limit(100)
         .repartitionByRange(4, $"doc_id").sortWithinPartitions($"doc_id")
       graft.sinks.HtmlSink.writeDirFramed(src, out)
-      val files = Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .sortBy(_.getName)
-      val whole = files.map(f =>
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString
+      val whole = framedDocument(out)
       val body = whole.substring(whole.indexOf("<tbody>") + "<tbody>".length,
         whole.indexOf("</tbody>"))
       val cell = "<td>(.*?)</td>".r

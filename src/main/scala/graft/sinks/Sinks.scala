@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.io.{BufferedWriter, FileWriter}
+import scala.collection.AbstractIterator
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
@@ -24,8 +25,20 @@ object SinkTypes {
 }
 import SinkTypes._
 
+/** The framing law every codec obeys, on both write paths:
+  * `head ++ (if no rows were kept: empty, else: open ++ rows.mkString(sep) ++ close)`.
+  * `head` is the eager header — its own first chunk, emitted before any
+  * Spark job runs — and is `""` for the codecs that have none. The DSv2
+  * commit ([[graft.sinks.v2.FramedTextSink]]) has no separate head and
+  * takes `head + open` and `head + empty`. */
+private[sinks] final case class Frame(open: String, sep: String, close: String,
+                                      empty: String = "", head: String = "")
+
 private[sinks] object SinkIO {
   implicit val stringEnc: Encoder[String] = Encoders.STRING
+
+  def limited(df: DataFrame, limit: Int): DataFrame =
+    if (limit >= 0) df.limit(limit) else df
 
   /** Rendered rows as string arrays; `null` entries are NULL cells. */
   def renderedRows(df: DataFrame, mappers: Mappers,
@@ -39,13 +52,72 @@ private[sinks] object SinkIO {
     }
   }
 
-  /** Stream an iterator of chunks to a single local file — the
-    * `exporter.WriteFile` coordinator (`exporter.go:36-48`): one writer,
-    * constant memory. */
-  def writeFile(path: String, chunks: Iterator[String]): Unit = {
-    val w = new BufferedWriter(new FileWriter(path), 1 << 16)
-    try chunks.foreach(w.write) finally w.close()
+  /** The one driver-stream loop — the `exporter.Write` coordinator
+    * (`exporter.go:17-48`) with the codec plugged in as a [[Frame]] and a
+    * row step. `step` gets the 1-based rowID, counting KEPT rows, and
+    * returns the encoded row or None to drop it. The loop stops pulling
+    * from `source` once `limit` rows are kept (so `limit == 0` never
+    * opens it), and opens `source` only after `head` is consumed. */
+  def stream[A](frame: Frame, limit: Int, source: => Iterator[A])(
+      step: (Int, A) => Option[String]): Iterator[String] = {
+    var kept = 0
+    val rows = new AbstractIterator[String] {
+      private lazy val src = source
+      private var pending: String = null
+      private def advance(): Unit =
+        while (pending == null && (limit < 0 || kept < limit) && src.hasNext)
+          step(kept + 1, src.next()).foreach { s =>
+            pending = (if (kept == 0) frame.open else frame.sep) + s
+            kept += 1
+          }
+      def hasNext: Boolean = { advance(); pending != null }
+      def next(): String = {
+        if (!hasNext) Iterator.empty.next()
+        val s = pending; pending = null; s
+      }
+    }
+    def chunk(s: String) = if (s.isEmpty) Iterator.empty else Iterator.single(s)
+    // `++` is lazy: the trailer is chosen once the rows are exhausted
+    chunk(frame.head) ++ rows ++ chunk(if (kept > 0) frame.close else frame.empty)
   }
+
+  /** Pre-encoded rows of a distributed row builder, framed on the driver. */
+  def stream(frame: Frame, limit: Int, rows: => Dataset[String]): Iterator[String] =
+    stream(frame, limit, rows.toLocalIterator().asScala)((_, s) => Some(s))
+
+  /** Rows through a [[PreProcessor]]: the hook sees NULL cells as
+    * `nullAs`; `encode` gets the original cells (their NULL mask) and the
+    * hook's row. */
+  def hooked(frame: Frame, limit: Int, cells: => Dataset[Array[String]], nullAs: String,
+             hook: PreProcessor)(encode: (Array[String], IndexedSeq[String]) => String): Iterator[String] =
+    stream(frame, limit, cells.toLocalIterator().asScala) { (rowID, raw) =>
+      val (row, keep) = hook(rowID, raw.toIndexedSeq.map(c => if (c == null) nullAs else c))
+      if (keep) Some(encode(raw, row)) else None
+    }
+
+  /** Distributed write of pre-encoded rows under `frame`, via the DSv2
+    * [[graft.sinks.v2.FramedTextSink]] commit. */
+  def writeFramed(rows: Dataset[String], path: String, frame: Frame): Unit =
+    rows.write.format("graft-framed")
+      .option("open", frame.head + frame.open)
+      .option("sep", frame.sep)
+      .option("close", frame.close)
+      .option("empty", frame.head + frame.empty)
+      .mode("overwrite").save(path)
+}
+
+/** A codec's driver-stream surface: its [[contentIterator]] chunks, and
+  * the string and single-file writers over them. */
+private[graft] abstract class Codec[O](defaults: O) {
+  def contentIterator(df: DataFrame, opts: O = defaults): Iterator[String]
+
+  private[graft] def bound(df: DataFrame, opts: O): graft.Exporter.Bound =
+    new graft.Exporter.Bound(() => contentIterator(df, opts))
+
+  def writeString(df: DataFrame, opts: O = defaults): String = bound(df, opts).writeString
+
+  def writeFile(df: DataFrame, path: String, opts: O = defaults): Unit =
+    bound(df, opts).writeFile(path)
 }
 
 // ---------------------------------------------------------------------------
@@ -67,19 +139,14 @@ final case class CsvOptions(
   def eol: String = if (useCRLF) "\r\n" else "\n"
 }
 
-object CsvSink {
+object CsvSink extends Codec(CsvOptions()) {
 
   /** Header row (custom header validated for arity exactly like
     * `csv.go:134-139`). */
   def header(df: DataFrame, opts: CsvOptions): Seq[String] = {
-    val names = df.schema.fieldNames.toSeq
-    opts.customHeader match {
-      case Some(h) =>
-        if (h.length != names.length)
-          throw new IllegalArgumentException("invalid header length")
-        h
-      case None => names
-    }
+    val h = opts.customHeader.getOrElse(df.schema.fieldNames.toSeq)
+    if (h.length != df.schema.length) throw new IllegalArgumentException("invalid header length")
+    h
   }
 
   /** Distributed CSV records (no header, no EOL) — rendering is a
@@ -90,81 +157,40 @@ object CsvSink {
       "sequential preProcessor requires the driver-stream path (writeString/writeFile); " +
       "use ops.Pipeline filter/project for distributed writes")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
     val (d, crlf, nv) = (opts.delimiter, opts.useCRLF, opts.nullValue)
-    SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers).map { cells =>
+    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers).map { cells =>
       Format.csvLine(cells.toIndexedSeq.map(c => if (c == null) nv else c), d, crlf)
     }
   }
 
-  /** Exact reference byte output (header/limit/preprocessor semantics from
-    * `csv.go:124-190`), streamed through the driver. */
-  def contentIterator(df: DataFrame, opts: CsvOptions): Iterator[String] = {
+  /** `csv.go:124-190`: the header line is eager (written for zero rows
+    * too, `csv.go:147-151`) or lazy (written with the first kept row,
+    * `csv.go:175-179`); every record ends in the EOL. */
+  private def frame(df: DataFrame, opts: CsvOptions): Frame = {
     val hdr = header(df, opts)
-    val eagerHeader = opts.writeHeader && opts.writeHeaderWhenNoData && hdr.nonEmpty
-    val head =
-      if (eagerHeader) Iterator.single(Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol)
-      else Iterator.empty
-    if (opts.limit == 0) return head
-
-    val source =
-      if (opts.preProcessor.isEmpty && opts.limit > 0)
-        SinkIO.renderedRows(df.limit(opts.limit), opts.mappers, opts.ctxMappers).toLocalIterator()
-      else SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers).toLocalIterator()
-
-    var rowID = 1
-    var done = false
-    val body = new Iterator[String] {
-      private var pending: Option[String] = None
-      private def advance(): Unit = {
-        while (pending.isEmpty && !done && source.hasNext) {
-          val raw = source.next().toIndexedSeq.map(c => if (c == null) opts.nullValue else c)
-          val (row, keep) = opts.preProcessor match {
-            case Some(f) => f(rowID, raw)
-            case None    => (raw, true)
-          }
-          if (keep) {
-            pending = Some(Format.csvLine(row, opts.delimiter, opts.useCRLF) + opts.eol)
-            if (opts.limit >= 0 && rowID >= opts.limit) done = true
-            rowID += 1
-          }
-        }
-      }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): String = { advance(); val s = pending.get; pending = None; s }
-    }
-
-    // lazy header (`csv.go:175-179`): written before the first KEPT row only
-    val lazyHeaderNeeded = opts.writeHeader && !opts.writeHeaderWhenNoData && hdr.nonEmpty
-    if (lazyHeaderNeeded) {
-      val buffered = body.buffered
-      val lazyHead =
-        if (buffered.hasNext)
-          Iterator.single(Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol)
-        else Iterator.empty
-      head ++ lazyHead ++ buffered
-    } else head ++ body
+    val line =
+      if (opts.writeHeader && hdr.nonEmpty)
+        Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol
+      else ""
+    if (opts.writeHeaderWhenNoData) Frame("", opts.eol, opts.eol, head = line)
+    else Frame(line, opts.eol, opts.eol)
   }
 
-  def writeString(df: DataFrame, opts: CsvOptions = CsvOptions()): String =
-    contentIterator(df, opts).mkString
-
-  def writeFile(df: DataFrame, path: String, opts: CsvOptions = CsvOptions()): Unit =
-    SinkIO.writeFile(path, contentIterator(df, opts))
+  def contentIterator(df: DataFrame, opts: CsvOptions): Iterator[String] = {
+    val f = frame(df, opts)
+    opts.preProcessor.fold(SinkIO.stream(f, opts.limit, lines(df, opts))) { hook =>
+      SinkIO.hooked(f, opts.limit, SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers),
+        opts.nullValue, hook)((_, row) => Format.csvLine(row, opts.delimiter, opts.useCRLF))
+    }
+  }
 
   /** Distributed directory write via Spark's native CSV writer — the
     * scale path (header per part-file, quote-doubling like Go). */
   def writeDir(df: DataFrame, path: String, opts: CsvOptions = CsvOptions()): Unit = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
-    val renamed = opts.customHeader match {
-      case Some(h) =>
-        if (h.length != df.schema.length)
-          throw new IllegalArgumentException("invalid header length")
-        limited.toDF(h: _*)
-      case None => limited
-    }
-    Render.renderAll(renamed, opts.mappers, opts.ctxMappers).write
+    val limited = SinkIO.limited(df, opts.limit)
+    val named = if (opts.customHeader.isDefined) limited.toDF(header(df, opts): _*) else limited
+    Render.renderAll(named, opts.mappers, opts.ctxMappers).write
       .option("header", opts.writeHeader.toString)
       .option("sep", opts.delimiter.toString)
       .option("lineSep", opts.eol)
@@ -193,7 +219,7 @@ final case class JsonOptions(
     escapeHtml: Boolean = true,
     preProcessor: Option[(Int, Map[String, Any]) => (Map[String, Any], Boolean)] = None)
 
-object JsonSink {
+object JsonSink extends Codec(JsonOptions()) {
 
   /** One JSON object per row. Keys are sorted alphabetically — the
     * reference marshals a `map[string]any` with a std-lib-compatible
@@ -204,22 +230,15 @@ object JsonSink {
     require(opts.preProcessor.isEmpty,
       "the map-based preProcessor runs on the driver-stream path (writeString/writeFile)")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
+    val limited = SinkIO.limited(df, opts.limit)
     val fields = limited.schema.fields.sortBy(_.name)
     val cols = fields.map { f =>
-      val base = col(f.name)
-      val mapped = opts.ctxMappers.collectFirst {
-        case (dt, fn) if dt == f.dataType =>
-          fn(Render.MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), base)
-      }.orElse(opts.mappers.collectFirst {
-        case (dt, fn) if dt == f.dataType => fn(base)
-      }).getOrElse {
+      Render.mapped(f, opts.mappers, opts.ctxMappers).getOrElse {
         f.dataType match {
-          case TimestampType | TimestampNTZType => Render.rfc3339NanoRaw(base)
-          case _ => base
+          case TimestampType | TimestampNTZType => Render.rfc3339NanoRaw(col(f.name))
+          case _ => col(f.name)
         }
-      }
-      mapped.as(f.name)
+      }.as(f.name)
     }
     val j = to_json(struct(cols.toIndexedSeq: _*), Map("ignoreNullFields" -> "false"))
     // `<>&` never appear structurally in JSON, so a global replace only
@@ -232,76 +251,31 @@ object JsonSink {
     limited.select(escaped.as("j")).as[String]
   }
 
-  /** Driver-path objects with the map hook: native-value maps, sorted
-    * keys, kept-row rowIDs, std-compatible serialization (GoJson). */
-  private def hookedObjects(df: DataFrame, opts: JsonOptions): Iterator[String] = {
-    val hook = opts.preProcessor.get
-    // custom mappers apply BEFORE the hook, like `json.go:111-128`
-    val mapped = df.select(df.schema.fields.map { f =>
-      opts.ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
-          fn(Render.MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
-        .orElse(opts.mappers.collectFirst {
-          case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
-        .getOrElse(col(f.name)).as(f.name)
-    }.toIndexedSeq: _*)
-    val schema = mapped.schema
-    val rows = scala.jdk.CollectionConverters
-      .IteratorHasAsScala(mapped.toLocalIterator()).asScala
-    var rowID = 1
-    var emitted = 0
-    val out = rows.flatMap { row =>
-      if (opts.limit >= 0 && emitted >= opts.limit) None
-      else {
-        val m: Map[String, Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-          f.name -> (if (row.isNullAt(i)) null else row.get(i))
-        }.toMap
+  /** Array mode (`json.go:94-98,135-147`) opens `[` lazily with the
+    * first row, so zero rows → EMPTY output, not `[]`. The graft-framed
+    * sink defaults to it. */
+  private[sinks] val arrayFrame = Frame("[\n", ",\n", "\n]\n")
+
+  def contentIterator(df: DataFrame, opts: JsonOptions): Iterator[String] = {
+    val frame = if (opts.newlineDelimited) Frame("", "\n", "\n") else arrayFrame
+    opts.preProcessor.fold(SinkIO.stream(frame, opts.limit, objects(df, opts))) { hook =>
+      // the map hook sees native values; custom mappers apply BEFORE it,
+      // like `json.go:111-128`; GoJson serializes std-compatibly
+      val mapped = df.select(df.schema.fields.map { f =>
+        Render.mapped(f, opts.mappers, opts.ctxMappers).getOrElse(col(f.name)).as(f.name)
+      }.toIndexedSeq: _*)
+      val names = mapped.schema.fieldNames
+      SinkIO.stream(frame, opts.limit, mapped.toLocalIterator().asScala) { (rowID, row) =>
+        val m: Map[String, Any] = names.indices.map(i => names(i) -> row.get(i)).toMap
         val (rewritten, keep) = hook(rowID, m)
-        if (keep) {
-          rowID += 1; emitted += 1
-          Some(Format.GoJson.writeRow(rewritten))
-        } else None
+        if (keep) Some(Format.GoJson.writeRow(rewritten)) else None
       }
     }
-    out
   }
-
-  /** Array-mode / NDJSON framing (`json.go:94-98,135-147`): array mode
-    * opens `[` lazily with the first row, so zero rows → EMPTY output,
-    * not `[]`. */
-  def contentIterator(df: DataFrame, opts: JsonOptions = JsonOptions()): Iterator[String] = {
-    if (opts.limit == 0) return Iterator.empty
-    val rows =
-      if (opts.preProcessor.isDefined) hookedObjects(df, opts)
-      else scala.jdk.CollectionConverters
-        .IteratorHasAsScala(objects(df, opts).toLocalIterator()).asScala
-    if (opts.newlineDelimited) rows.map(_ + "\n")
-    else {
-      var first = true
-      val body = rows.map { r =>
-        val s = if (first) "[\n" + r else ",\n" + r
-        first = false
-        s
-      }
-      val close = new Iterator[String] {
-        private var emitted = false
-        def hasNext: Boolean = !emitted && !first
-        def next(): String = { emitted = true; "\n]\n" }
-      }
-      body ++ close
-    }
-  }
-
-  def writeString(df: DataFrame, opts: JsonOptions = JsonOptions()): String =
-    contentIterator(df, opts).mkString
-
-  def writeFile(df: DataFrame, path: String, opts: JsonOptions = JsonOptions()): Unit =
-    SinkIO.writeFile(path, contentIterator(df, opts))
 
   /** Distributed NDJSON directory write — the scale path. */
-  def writeDir(df: DataFrame, path: String, opts: JsonOptions = JsonOptions()): Unit = {
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
-    objects(limited, opts.copy(limit = -1)).write.mode("overwrite").text(path)
-  }
+  def writeDir(df: DataFrame, path: String, opts: JsonOptions = JsonOptions()): Unit =
+    objects(df, opts).write.mode("overwrite").text(path)
 }
 
 // ---------------------------------------------------------------------------
@@ -315,87 +289,43 @@ final case class XmlOptions(
     mappers: Mappers = Nil,
     ctxMappers: CtxMappers = Nil)
 
-object XmlSink {
+object XmlSink extends Codec(XmlOptions()) {
 
   /** Distributed `<row>` fragments: NULL elements omitted, values
     * escaped, element names raw (`xml.go:111-122`). */
   def rows(df: DataFrame, opts: XmlOptions = XmlOptions()): Dataset[String] = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
+    val limited = SinkIO.limited(df, opts.limit)
     val names = limited.schema.fieldNames.toIndexedSeq
     SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers)
       .map(cells => Format.xmlRow(names, cells.toIndexedSeq))
   }
 
-  /** Exact reference output (`xml.go:67-130`): declaration + `<data>`
-    * written lazily with the first kept row; zero kept rows → EMPTY
-    * output; limit counts kept rows; limit=0 short-circuits. */
-  def contentIterator(df: DataFrame, opts: XmlOptions = XmlOptions()): Iterator[String] = {
-    if (opts.limit == 0) return Iterator.empty
-    val names = df.schema.fieldNames.toIndexedSeq
-    val source =
-      if (opts.preProcessor.isEmpty && opts.limit > 0)
-        SinkIO.renderedRows(df.limit(opts.limit), opts.mappers, opts.ctxMappers).toLocalIterator()
-      else SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers).toLocalIterator()
+  /** `xml.go:67-130`: declaration + `<data>` written lazily with the
+    * first kept row; zero kept rows → EMPTY output. */
+  private val frame = Frame(Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n")
 
-    var rowID = 0
-    var done = false
-    var any = false
-    val body = new Iterator[String] {
-      private var pending: Option[String] = None
-      private def advance(): Unit = {
-        while (pending.isEmpty && !done && source.hasNext) {
-          val cells = source.next().toIndexedSeq
-          val strs = cells.map(c => if (c == null) "" else c)
-          val (row, keep) = opts.preProcessor match {
-            case Some(f) => f(rowID + 1, strs)
-            case None    => (strs, true)
-          }
-          if (keep) {
-            // NULL-omission follows the ORIGINAL null mask even if the
-            // preprocessor rewrote the cell (`xml.go:94-96,113-115`)
-            val masked = row.zipWithIndex.map { case (s, i) =>
-              if (cells(i) == null) null else s
-            }
-            val opener = if (!any) Format.xmlDeclaration + "\n<data>\n" else ""
-            any = true
-            pending = Some(opener + Format.xmlRow(names, masked) + "\n")
-            rowID += 1
-            if (opts.limit >= 0 && rowID >= opts.limit) done = true
-          }
-        }
+  def contentIterator(df: DataFrame, opts: XmlOptions): Iterator[String] =
+    opts.preProcessor.fold(SinkIO.stream(frame, opts.limit, rows(df, opts))) { hook =>
+      val names = df.schema.fieldNames.toIndexedSeq
+      SinkIO.hooked(frame, opts.limit, SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers),
+        "", hook) { (cells, row) =>
+        // NULL-omission follows the ORIGINAL null mask even if the
+        // preprocessor rewrote the cell (`xml.go:94-96,113-115`)
+        Format.xmlRow(names, row.zipWithIndex.map { case (s, i) => if (cells(i) == null) null else s })
       }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): String = { advance(); val s = pending.get; pending = None; s }
     }
-    val close = new Iterator[String] {
-      private var emitted = false
-      def hasNext: Boolean = !emitted && any && !body.hasNext
-      def next(): String = { emitted = true; "</data>\n" }
-    }
-    body ++ close
-  }
 
-  def writeString(df: DataFrame, opts: XmlOptions = XmlOptions()): String =
-    contentIterator(df, opts).mkString
-
-  def writeFile(df: DataFrame, path: String, opts: XmlOptions = XmlOptions()): Unit =
-    SinkIO.writeFile(path, contentIterator(df, opts))
-
-  /** Distributed write WITH the reference's global framing (declaration
-    * + `<data>` root + empty→empty law), via the DSv2
-    * [[graft.sinks.v2.FramedTextSink]] commit protocol — the directory's
+  /** Distributed write WITH the reference's global framing — the same
+    * [[Frame]] as [[contentIterator]] — via the DSv2
+    * [[graft.sinks.v2.FramedTextSink]] commit protocol: the directory's
     * non-hidden files concatenated in name order are byte-identical to
     * [[writeString]] when the input's partition order is its global
     * order (see DsvWriteSpec). Use this instead of `rows().write.text`
     * when the consumer expects a well-formed XML document. */
   def writeDirFramed(df: DataFrame, path: String, opts: XmlOptions = XmlOptions()): Unit =
-    rows(df, opts).write.format("graft-framed")
-      .option("open", Format.xmlDeclaration + "\n<data>\n")
-      .option("sep", "\n")
-      .option("close", "\n</data>\n")
-      .mode("overwrite").save(path)
+    SinkIO.writeFramed(rows(df, opts), path, frame)
 }
 
 // ---------------------------------------------------------------------------
@@ -412,7 +342,7 @@ final case class HtmlOptions(
     mappers: Mappers = Nil,
     ctxMappers: CtxMappers = Nil)
 
-object HtmlSink {
+object HtmlSink extends Codec(HtmlOptions()) {
 
   /** `<thead>` block with per-column name + lowercased type
     * (`html.go:102-110`). The reference shows the SOURCE database's type
@@ -432,96 +362,37 @@ object HtmlSink {
   def rows(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Dataset[String] = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
     import SinkIO.stringEnc
-    val limited = if (opts.limit >= 0) df.limit(opts.limit) else df
     val nv = opts.nullValue
-    SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers)
+    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers)
       .map(cells => Format.htmlRow(cells.toIndexedSeq.map(c => if (c == null) nv else c)))
   }
 
-  /** Exact reference output (`html.go:96-171`): eager/lazy header,
-    * `<tbody>` with the first kept row, closers depending on what was
-    * written. */
-  def contentIterator(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Iterator[String] = {
-    val hasCols = df.schema.nonEmpty
-    val eagerHeader = opts.writeHeader && opts.writeHeaderWhenNoData && hasCols
-    val head = if (eagerHeader) Iterator.single(headerBlock(df)) else Iterator.empty
-
-    if (opts.limit == 0)
-      return head ++ (if (eagerHeader) Iterator.single("</table></body></html>") else Iterator.empty)
-
-    val source =
-      if (opts.preProcessor.isEmpty && opts.limit > 0)
-        SinkIO.renderedRows(df.limit(opts.limit), opts.mappers, opts.ctxMappers).toLocalIterator()
-      else SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers).toLocalIterator()
-
-    var rowID = 1
-    var done = false
-    var any = false
-    val body = new Iterator[String] {
-      private var pending: Option[String] = None
-      private def advance(): Unit = {
-        while (pending.isEmpty && !done && source.hasNext) {
-          val raw = source.next().toIndexedSeq.map(c => if (c == null) opts.nullValue else c)
-          val (row, keep) = opts.preProcessor match {
-            case Some(f) => f(rowID, raw)
-            case None    => (raw, true)
-          }
-          if (keep) {
-            val lazyHeader =
-              if (opts.writeHeader && rowID == 1 && !opts.writeHeaderWhenNoData && hasCols)
-                headerBlock(df)
-              else ""
-            val tbodyOpen = if (!any) "<tbody>" else ""
-            any = true
-            pending = Some(lazyHeader + tbodyOpen + Format.htmlRow(row))
-            if (opts.limit >= 0 && rowID >= opts.limit) done = true
-            rowID += 1
-          }
-        }
-      }
-      def hasNext: Boolean = { advance(); pending.nonEmpty }
-      def next(): String = { advance(); val s = pending.get; pending = None; s }
-    }
-    val close = new Iterator[String] {
-      private var emitted = false
-      def hasNext: Boolean = !emitted && !body.hasNext
-      def next(): String = {
-        emitted = true
-        if (any) "</tbody></table></body></html>"
-        else if (eagerHeader) "</table></body></html>"
-        else ""
-      }
-    }
-    head ++ body ++ close
+  /** `html.go:96-171`: `<tbody>` opens with the first kept row. The
+    * header is eager (written for zero rows too, then closed by the
+    * table closers alone) or lazy (written with the first kept row) —
+    * HTML is the one codec whose empty output can be non-empty. */
+  private def frame(df: DataFrame, opts: HtmlOptions): Frame = {
+    val header = if (opts.writeHeader && df.schema.nonEmpty) headerBlock(df) else ""
+    val close = "</tbody></table></body></html>"
+    if (opts.writeHeaderWhenNoData && header.nonEmpty)
+      Frame("<tbody>", "", close, "</table></body></html>", head = header)
+    else Frame(header + "<tbody>", "", close)
   }
 
-  def writeString(df: DataFrame, opts: HtmlOptions = HtmlOptions()): String =
-    contentIterator(df, opts).mkString
-
-  def writeFile(df: DataFrame, path: String, opts: HtmlOptions = HtmlOptions()): Unit =
-    SinkIO.writeFile(path, contentIterator(df, opts))
-
-  /** Distributed write WITH the reference's whole-document framing
-    * (document+CSS+`<thead>` opener, `<tbody>` wrap, closers), via the
-    * DSv2 [[graft.sinks.v2.FramedTextSink]] — the HTML twin of
-    * `XmlSink.writeDirFramed`, closing the last driver-only sink path.
-    * Framing law mirrors [[contentIterator]]: rows exist → header (when
-    * `writeHeader`) + `<tbody>` + raw `<tr>` fragments + closers; zero
-    * rows → header+closers when the header is eager, EMPTY otherwise
-    * (the `empty` option — HTML is the one codec whose empty output is
-    * not empty). Directory files concatenated in name order are
-    * byte-identical to [[writeString]] when partition order is global
-    * order (DsvWriteSpec). */
-  def writeDirFramed(df: DataFrame, path: String, opts: HtmlOptions = HtmlOptions()): Unit = {
-    val hasCols = df.schema.nonEmpty
-    val header = if (opts.writeHeader && hasCols) headerBlock(df) else ""
-    val eagerHeader = opts.writeHeader && opts.writeHeaderWhenNoData && hasCols
-    rows(df, opts).write.format("graft-framed")
-      .option("open", header + "<tbody>")
-      .option("sep", "")
-      .option("close", "</tbody></table></body></html>")
-      .option("empty",
-        if (eagerHeader) header + "</table></body></html>" else "")
-      .mode("overwrite").save(path)
+  def contentIterator(df: DataFrame, opts: HtmlOptions): Iterator[String] = {
+    val f = frame(df, opts)
+    opts.preProcessor.fold(SinkIO.stream(f, opts.limit, rows(df, opts))) { hook =>
+      SinkIO.hooked(f, opts.limit, SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers),
+        opts.nullValue, hook)((_, row) => Format.htmlRow(row))
+    }
   }
+
+  /** Distributed write WITH the reference's whole-document framing —
+    * the same [[Frame]] as [[contentIterator]] — via the DSv2
+    * [[graft.sinks.v2.FramedTextSink]]; the HTML twin of
+    * `XmlSink.writeDirFramed`. Directory files concatenated in name
+    * order are byte-identical to [[writeString]] when partition order is
+    * global order (DsvWriteSpec). */
+  def writeDirFramed(df: DataFrame, path: String, opts: HtmlOptions = HtmlOptions()): Unit =
+    SinkIO.writeFramed(rows(df, opts), path, frame(df, opts))
 }

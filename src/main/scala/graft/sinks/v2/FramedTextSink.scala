@@ -12,13 +12,16 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sinks.{Frame, JsonSink}
+
 /** DataSource V2 WRITE showcase: GLOBALLY-FRAMED text output as a
-  * distributed batch sink — `open` + rows joined by `sep` + `close`,
-  * and EMPTY output for zero rows.
+  * distributed batch sink — the [[graft.sinks.Frame]] law the
+  * driver-stream loop (`SinkIO.stream`) follows: `open` + rows joined
+  * by `sep` + `close`, or `empty` for zero rows.
   *
   * Spark's built-in file sinks cannot express this family: the framing
   * is GLOBAL state (one opener, a separator between every adjacent pair
-  * of rows ACROSS partitions, one closer, and the empty→empty law needs
+  * of rows ACROSS partitions, one closer, and the empty law needs
   * the global row count), which is why these formats previously existed
   * only on the single-`io.Writer` driver path. The DSv2 commit protocol
   * is exactly the right hook:
@@ -30,12 +33,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     global framing down as tiny files whose NAMES interleave
   *     lexicographically with the data files: `a-open`,
   *     `b-<pid>-sep` (after each non-empty part except the last),
-  *     `z-close` — plus `_SUCCESS`. Zero total rows → only `_SUCCESS`.
+  *     `z-close` — plus `_SUCCESS`. Zero total rows → `empty` as
+  *     `a-open` when it is non-empty, and `_SUCCESS`.
   *
-  * Options (all optional) default to the reference's JSON-ARRAY format
-  * (`json/json.go:83-156`): `open` = `"[\n"`, `sep` = `",\n"`,
-  * `close` = `"\n]\n"`. The reference XML layout (`xml.go:67-130`) is
-  * the same shape — see `XmlSink.writeDirFramed`.
+  * Options `open`, `sep`, `close` and `empty` (all optional) default to
+  * the reference's JSON-ARRAY frame (`json/json.go:83-156`) with `empty`
+  * = `""`. `XmlSink.writeDirFramed` and `HtmlSink.writeDirFramed` pass
+  * the very `Frame` their `contentIterator` streams with; a frame's
+  * eager `head` has no file of its own and rides in `open` and `empty`.
   *
   * The directory's NON-HIDDEN files concatenated in NAME order are
   * byte-identical to the corresponding driver path (`JsonSink.
@@ -60,20 +65,12 @@ class FramedTextSink extends TableProvider with DataSourceRegister {
     require(schema.fields.length == 1 && schema.fields(0).dataType == StringType,
       s"graft-framed expects exactly one string column of pre-rendered " +
         s"rows (use JsonSink.objects / XmlSink.rows); got ${schema.simpleString}")
-    val frame = Frame(
-      Option(properties.get("open")).getOrElse("[\n"),
-      Option(properties.get("sep")).getOrElse(",\n"),
-      Option(properties.get("close")).getOrElse("\n]\n"),
-      Option(properties.get("empty")).getOrElse(""))
+    def opt(key: String, default: String) = Option(properties.get(key)).getOrElse(default)
+    val d = JsonSink.arrayFrame
+    val frame = Frame(opt("open", d.open), opt("sep", d.sep), opt("close", d.close), opt("empty", d.empty))
     new FramedTable(properties.get("path"), schema, frame)
   }
 }
-
-/** `empty` is the whole-document content for ZERO input rows: "" keeps
-  * the JSON/XML empty→empty law (only `_SUCCESS` lands); HTML's
-  * eager-header law needs header+closers there instead
-  * (`HtmlSink.writeDirFramed`). */
-private case class Frame(open: String, sep: String, close: String, empty: String)
 
 private class FramedTable(path: String, writeSchema: StructType, frame: Frame)
     extends Table with SupportsWrite {

@@ -8,17 +8,15 @@ import graft.sources.Tables
 /** DSv2 write path (graft-framed): the reference's global-array
   * framing produced distributedly must match the single-writer driver
   * path byte for byte, including the zero-rows → empty-output law. */
-class DsvWriteSpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def outDir(tag: String) =
+object DsvWriteSpec {
+  def outDir(tag: String) =
     s"${System.getProperty("java.io.tmpdir")}/graft_dsvw_$tag"
 
   /** The directory's NON-HIDDEN files concatenated in name order ARE
     * the output byte stream (framing files interleave with data files
     * by name; `.`/`_`-prefixed entries are Hadoop metadata — local-FS
     * `.crc` sidecars, `_SUCCESS`). */
-  private def concatenated(dir: String): String = {
+  def concatenated(dir: String): String = {
     val d = new java.io.File(dir)
     val fs = Option(d.listFiles()).getOrElse(Array.empty)
     fs.filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -26,6 +24,11 @@ class DsvWriteSpec extends SparkTestBase {
       .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
       .mkString
   }
+}
+
+class DsvWriteSpec extends SparkTestBase {
+  import spark.implicits._
+  import DsvWriteSpec._
 
   test("distributed JSON-array write is byte-identical to the driver path") {
     val src = Tables.documents(spark, sf0001)

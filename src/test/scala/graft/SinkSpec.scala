@@ -348,4 +348,65 @@ class SinkSpec extends SparkTestBase {
     val xmlRows = XmlSink.rows(df3).collect()
     assert(xmlRows.length == 3 && xmlRows.forall(_.startsWith("<row>")))
   }
+
+  // ---- the framing law shared by every codec and both write paths ----
+
+  test("a drop-all hook leaves exactly each codec's empty law, on both write paths") {
+    import org.apache.spark.sql.functions.lit
+    val dropAll: SinkTypes.PreProcessor = (_, row) => (row, false)
+    val dropAllJson = Some((_: Int, m: Map[String, Any]) => (m, false))
+    val htmlHead = HtmlSink.headerBlock(df3)
+    val cases = Seq(
+      "csv eager" -> (CsvSink.writeString(df3, CsvOptions(preProcessor = Some(dropAll))),
+        "column_0,column_1\n"),
+      "csv lazy" -> (CsvSink.writeString(df3,
+        CsvOptions(writeHeaderWhenNoData = false, preProcessor = Some(dropAll))), ""),
+      "json array" -> (JsonSink.writeString(df3, JsonOptions(preProcessor = dropAllJson)), ""),
+      "ndjson" -> (JsonSink.writeString(df3,
+        JsonOptions(newlineDelimited = true, preProcessor = dropAllJson)), ""),
+      "xml" -> (XmlSink.writeString(df3, XmlOptions(preProcessor = Some(dropAll))), ""),
+      "html eager" -> (HtmlSink.writeString(df3, HtmlOptions(preProcessor = Some(dropAll))),
+        htmlHead + "</table></body></html>"),
+      "html lazy" -> (HtmlSink.writeString(df3,
+        HtmlOptions(writeHeaderWhenNoData = false, preProcessor = Some(dropAll))), ""))
+    cases.foreach { case (name, (got, want)) => assert(got == want, name) }
+
+    // the distributed twins frame zero rows the same way
+    import DsvWriteSpec.{concatenated, outDir}
+    val none = df3.filter(lit(false))
+    XmlSink.writeDirFramed(none, outDir("law_xml"))
+    assert(concatenated(outDir("law_xml")) ==
+      XmlSink.writeString(df3, XmlOptions(preProcessor = Some(dropAll))))
+    for (eager <- Seq(true, false)) {
+      val dir = outDir(s"law_html_$eager")
+      HtmlSink.writeDirFramed(none, dir, HtmlOptions(writeHeaderWhenNoData = eager))
+      assert(concatenated(dir) == HtmlSink.writeString(df3,
+        HtmlOptions(writeHeaderWhenNoData = eager, preProcessor = Some(dropAll))), s"html eager=$eager")
+    }
+  }
+
+  test("csv and html: the first chunk is the eager header, produced without reading the source") {
+    import org.apache.spark.sql.functions._
+    // evaluating any row of this source throws
+    val boom = spark.range(0, 8, 1, 2)
+      .select(when(col("id") >= 0, raise_error(lit("source read"))).cast("string").as("v"))
+    val csv = CsvSink.contentIterator(boom, CsvOptions())
+    assert(csv.next() == "v\n")
+    val html = HtmlSink.contentIterator(boom)
+    assert(html.next() == HtmlSink.headerBlock(boom))
+    // ... and the rows really are unreadable
+    intercept[Exception](csv.next())
+    intercept[Exception](html.next())
+  }
+
+  test("json: the hook path stops reading the source once limit rows are kept") {
+    import org.apache.spark.sql.functions._
+    // four partitions of ten ids; every row past the first partition throws
+    val src = spark.range(0, 40, 1, 4)
+      .select(col("id"), when(col("id") >= 10, raise_error(lit("read past the limit")))
+        .otherwise(col("id")).as("v"))
+    val keepAll = (_: Int, m: Map[String, Any]) => (m, true)
+    assert(JsonSink.writeString(src, JsonOptions(limit = 1, preProcessor = Some(keepAll))) ==
+      "[\n{\"id\":0,\"v\":0}\n]\n")
+  }
 }
