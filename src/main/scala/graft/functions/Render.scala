@@ -1,11 +1,17 @@
 package graft.functions
 
+import java.time.{Instant, ZoneId, ZoneOffset}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes,
+  TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+import org.apache.spark.sql.graft.{ColumnBridge, TypeBridge}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Value→string rendering helpers shared by eval and codegen paths.
@@ -73,6 +79,208 @@ case class GoFormatFloat(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): GoFormatFloat = copy(c)
 }
 
+/** Go `time.Time` in RFC3339Nano form (`tostring.go:65-70`), written
+  * straight into UTF-8 bytes: `yyyy-MM-dd'T'HH:mm:ss`, the fraction with
+  * trailing zeros trimmed (omitted when zero), then `Z` or `±hh:mm`.
+  *
+  * The bytes are those of Spark's `date_format` under the session zone,
+  * pattern by pattern (`yyyy-MM-dd'T'HH:mm:ss`, `SSSSSS` with trailing
+  * zeros dropped, `XXX`): a TimestampNTZ value is first cast to a
+  * timestamp in the zone (a DST-gap wall clock moves forward), and `XXX`
+  * drops the seconds of an LMT offset (`-04:56:02` → `-04:56`). The date
+  * comes from the day number (proleptic Gregorian, like `java.time`);
+  * UTC and fixed offsets touch no `java.time` object per value, other
+  * zones ask their `ZoneRules` for the offset. Local years outside
+  * 0000–9999, where `date_format` signs the year, go to Spark's own
+  * `TimestampFormatter` with the same three patterns.
+  */
+object GoTime {
+  /** Go's zero `time.Time`, 0001-01-01T00:00:00Z, in epoch micros: the one
+    * instant `IsZero` reports, whatever the zone it is shown in. */
+  final val ZeroMicros = -62135596800000000L
+
+  private final val MicrosPerSecond = 1000000L
+  private final val NotFixed = Int.MinValue
+
+  // called from generated Java
+  def rfc3339Nano(us: Long, ntz: Boolean, zone: ZoneId): UTF8String = {
+    val fixed = fixedOffset(zone)
+    val micro = Math.floorMod(us, MicrosPerSecond).toInt
+    if (fixed != NotFixed) {
+      // an NTZ value is its own wall clock under a fixed offset
+      val wall = Math.floorDiv(us, MicrosPerSecond) + (if (ntz) 0 else fixed)
+      val out = format(wall, micro, fixed)
+      if (out != null) out else fallback(instant(us, ntz, zone), zone)
+    } else {
+      val inst = instant(us, ntz, zone)
+      val secs = Math.floorDiv(inst, MicrosPerSecond)
+      val off = zone.getRules.getOffset(Instant.ofEpochSecond(secs)).getTotalSeconds
+      val out = format(secs + off, micro, off)
+      if (out != null) out else fallback(inst, zone)
+    }
+  }
+
+  private def fixedOffset(zone: ZoneId): Int = zone match {
+    case o: ZoneOffset => o.getTotalSeconds
+    case _ =>
+      val rules = zone.getRules
+      if (rules.isFixedOffset) rules.getOffset(Instant.EPOCH).getTotalSeconds else NotFixed
+  }
+
+  /** The instant `date_format` sees: NTZ is cast to the session zone. */
+  private def instant(us: Long, ntz: Boolean, zone: ZoneId): Long =
+    if (ntz) DateTimeUtils.convertTz(us, zone, ZoneOffset.UTC) else us
+
+  /** Local wall-clock seconds and micro-of-second at offset `off`, or
+    * null when the year needs a sign. */
+  private def format(wall: Long, micro: Int, off: Int): UTF8String = {
+    val days = Math.floorDiv(wall, 86400L)
+    val sod = Math.floorMod(wall, 86400L).toInt
+    // civil-from-days over 400-year eras, the year starting in March
+    val z = days + 719468L
+    val era = Math.floorDiv(z, 146097L)
+    val doe = (z - era * 146097L).toInt
+    val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
+    val doy = doe - (365 * yoe + yoe / 4 - yoe / 100)
+    val mp = (5 * doy + 2) / 153
+    val day = doy - (153 * mp + 2) / 5 + 1
+    val month = if (mp < 10) mp + 3 else mp - 9
+    val year = yoe + era * 400 + (if (month <= 2) 1 else 0)
+    if (year < 0 || year > 9999) return null
+
+    var frac = micro
+    var digits = 0
+    if (frac != 0) {
+      digits = 6
+      while (frac % 10 == 0) { frac /= 10; digits -= 1 }
+    }
+    // `XXX`: hours and minutes of the offset, `Z` when both are zero
+    val offH = Math.abs(off / 3600 % 100)
+    val offM = Math.abs(off / 60 % 60)
+    val zulu = offH == 0 && offM == 0
+
+    val b = new Array[Byte](19 + (if (digits > 0) digits + 1 else 0) + (if (zulu) 1 else 6))
+    put2(b, 0, year.toInt / 100); put2(b, 2, year.toInt % 100); b(4) = '-'
+    put2(b, 5, month); b(7) = '-'
+    put2(b, 8, day); b(10) = 'T'
+    put2(b, 11, sod / 3600); b(13) = ':'
+    put2(b, 14, sod / 60 % 60); b(16) = ':'
+    put2(b, 17, sod % 60)
+    var i = 19
+    if (digits > 0) {
+      b(i) = '.'
+      var j = i + digits
+      while (j > i) { b(j) = ('0' + frac % 10).toByte; frac /= 10; j -= 1 }
+      i += digits + 1
+    }
+    if (zulu) b(i) = 'Z'
+    else {
+      b(i) = (if (off < 0) '-' else '+').toByte
+      put2(b, i + 1, offH); b(i + 3) = ':'; put2(b, i + 4, offM)
+    }
+    UTF8String.fromBytes(b)
+  }
+
+  private def put2(b: Array[Byte], at: Int, v: Int): Unit = {
+    b(at) = ('0' + v / 10).toByte
+    b(at + 1) = ('0' + v % 10).toByte
+  }
+
+  /** The three `date_format` calls the kernel replaces, for the years it
+    * does not write itself. */
+  private def fallback(us: Long, zone: ZoneId): UTF8String = {
+    def fmt(pattern: String) = TimestampFormatter(pattern, zone,
+      LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false).format(us)
+    val frac = fmt("SSSSSS").replaceAll("0+$", "")
+    UTF8String.fromString(
+      fmt("yyyy-MM-dd'T'HH:mm:ss") + (if (frac.isEmpty) "" else "." + frac) + fmt("XXX"))
+  }
+}
+
+/** Codegen'd RFC3339Nano of a `TIMESTAMP` or `TIMESTAMP_NTZ` in the
+  * session zone ([[GoTime.rfc3339Nano]]). With `zeroIsNull`, Go's zero
+  * time renders as NULL (`tostring.go:65-67`); for NTZ the zero is the
+  * wall clock 0001-01-01T00:00:00. */
+case class GoRfc3339Nano(child: Expression, zeroIsNull: Boolean,
+                         timeZoneId: Option[String] = None)
+    extends UnaryExpression with TimeZoneAwareExpression with ImplicitCastInputTypes {
+  override def inputTypes = TypeBridge.anyTimestamp
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = child.nullable || zeroIsNull
+  private def ntz: Boolean = child.dataType == TimestampNTZType
+
+  override def withTimeZone(tz: String): GoRfc3339Nano = copy(timeZoneId = Some(tz))
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val us = v.asInstanceOf[Long]
+    if (zeroIsNull && us == GoTime.ZeroMicros) null else GoTime.rfc3339Nano(us, ntz, zoneId)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val zone = ctx.addReferenceObj("zoneId", zoneId, classOf[ZoneId].getName)
+    val c = child.genCode(ctx)
+    val call = s"${ev.value} = graft.functions.GoTime.rfc3339Nano(${c.value}, $ntz, $zone);"
+    val body =
+      if (zeroIsNull) s"if (${c.value} == ${GoTime.ZeroMicros}L) ${ev.isNull} = true; else $call"
+      else call
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = ${c.isNull};
+      UTF8String ${ev.value} = null;
+      if (!${ev.isNull}) { $body }""")
+  }
+
+  override protected def withNewChildInternal(c: Expression): GoRfc3339Nano = copy(child = c)
+}
+
+/** The `<>&` escape of Go's std JSON encoder (`json.go:108-130`) as one
+  * pass over UTF-8 bytes: `&` → `\u0026`, `<` → `\u003c`, `>` → `\u003e`.
+  * Applied to `to_json` output, where `<>&` only occur inside strings, and
+  * where every multi-byte UTF-8 unit is ≥ 0x80, so a byte test suffices. */
+object GoJsonEscape {
+  // called from generated Java; a string with nothing to escape comes back as is
+  def escapeHtml(s: UTF8String): UTF8String = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var hits = 0
+    var i = 0
+    while (i < n) {
+      val c = Platform.getByte(base, off + i)
+      if (c == '<' || c == '>' || c == '&') hits += 1
+      i += 1
+    }
+    if (hits == 0) return s
+    val out = new Array[Byte](n + 5 * hits)
+    var j = 0
+    i = 0
+    while (i < n) {
+      val c = Platform.getByte(base, off + i)
+      if (c == '<' || c == '>' || c == '&') {
+        out(j) = '\\'; out(j + 1) = 'u'; out(j + 2) = '0'; out(j + 3) = '0'
+        out(j + 4) = (if (c == '&') '2' else '3').toByte
+        out(j + 5) = (if (c == '&') '6' else if (c == '<') 'c' else 'e').toByte
+        j += 6
+      } else {
+        out(j) = c
+        j += 1
+      }
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
+}
+
+/** Codegen'd [[GoJsonEscape.escapeHtml]] over a JSON string. */
+case class GoJsonHtmlEscape(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+  override protected def nullSafeEval(v: Any): Any =
+    GoJsonEscape.escapeHtml(v.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.GoJsonEscape.escapeHtml($c)")
+  override protected def withNewChildInternal(c: Expression): GoJsonHtmlEscape = copy(c)
+}
+
 /** The render layer: one `Column`-in/`Column`-out string renderer per Spark
   * type, with the reference's NULL semantics
   * (`/root/reference/tostring/tostring.go:34-98`):
@@ -88,7 +296,8 @@ case class GoFormatFloat(child: Expression) extends UnaryExpression {
   *     NULL (`tostring.go:76-96`)
   *
   * Everything here is a Catalyst expression tree (codegen'd end to end);
-  * the only custom expressions are the two float formatters above.
+  * the custom expressions are the float formatters and the RFC3339Nano
+  * kernel above, each a single static call in generated code.
   */
 object Render {
 
@@ -98,29 +307,25 @@ object Render {
   def goFloat(c: Column): Column =
     ColumnBridge.column(GoFormatFloat(ColumnBridge.expression(c)))
 
-  /** Go zero time: `time.Time{}.IsZero()` ⇔ 0001-01-01T00:00:00 UTC. */
-  private val zeroTime: Column = to_timestamp(lit("0001-01-01 00:00:00"))
-
-  /** RFC3339Nano: fractional seconds trimmed of trailing zeros and omitted
-    * entirely when zero; UTC renders as `Z`. Spark timestamps are µs so at
+  /** RFC3339Nano in the session zone: fractional seconds trimmed of
+    * trailing zeros and omitted entirely when zero; UTC renders as `Z`.
+    * Go's zero time (`time.Time{}.IsZero()`, the instant
+    * 0001-01-01T00:00:00Z) renders as NULL. Spark timestamps are µs so at
     * most 6 fractional digits appear (the reference's ns tail is truncated
     * upstream by the parquet reader — divergence documented in FIXTURES.md).
     */
   def rfc3339Nano(c: Column): Column =
-    when(c === zeroTime, lit(null).cast(StringType)).otherwise(rfc3339NanoRaw(c))
+    ColumnBridge.column(GoRfc3339Nano(ColumnBridge.expression(c), zeroIsNull = true))
 
   /** RFC3339Nano without the zero-time→NULL coercion — the form Go's
     * `json.Marshal(time.Time)` uses (the JSON codec passes values
     * natively and never consults tostring, `json.go:108-120`). */
-  def rfc3339NanoRaw(c: Column): Column = {
-    val base = date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
-    val frac = regexp_replace(date_format(c, "SSSSSS"), "0+$", "")
-    val zone = date_format(c, "XXX") // "Z" at UTC, else ±hh:mm
-    concat(
-      base,
-      when(frac === lit(""), lit("")).otherwise(concat(lit("."), frac)),
-      zone)
-  }
+  def rfc3339NanoRaw(c: Column): Column =
+    ColumnBridge.column(GoRfc3339Nano(ColumnBridge.expression(c), zeroIsNull = false))
+
+  /** Go's std JSON `<>&` escape over JSON text ([[GoJsonEscape]]). */
+  def jsonHtmlEscape(c: Column): Column =
+    ColumnBridge.column(GoJsonHtmlEscape(ColumnBridge.expression(c)))
 
   /** JSON-rendered complex value with empty/null coercion
     * (`tostring.go:79-83,91-95`). */

@@ -1,5 +1,11 @@
 package graft.sinks
 
+import java.time.ZoneId
+
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+
+import graft.functions.GoTime
+
 /** Pure row→string formatting, shared by the distributed path
   * (`Dataset.map` over rendered rows) and the driver-stream path (exact
   * sequential semantics for rowID-dependent hooks). Mirrors the byte-level
@@ -123,40 +129,45 @@ object Format {
   /** Go-std-compatible JSON value writer for the driver-path JSON hook
     * (`json.go:108-130` marshals `map[string]any` with a std-compatible
     * encoder: SORTED keys, HTML escaping of `<>&`, RFC3339Nano times,
-    * base64 `[]byte`). Number formatting matches the distributed
-    * `to_json` path (JVM `toString`) so both paths emit identical bytes
-    * for the same rows. */
+    * base64 `[]byte`). Top-level timestamps go through the same
+    * [[graft.functions.GoTime]] formatter, in the same session zone, as
+    * the distributed `JsonSink.objects`; number formatting matches its
+    * `to_json` (JVM `toString`), so both paths emit identical bytes for
+    * the same rows. */
   object GoJson {
     /** One row (the hook's `Map[String, Any]`): sorted keys like the
       * reference's map[string]any marshal; DIRECT values are top-level
       * columns, where the distributed path re-formats timestamps to
-      * RFC3339Nano — everything deeper is `write` (nested) territory. */
-    def writeRow(m: scala.collection.Map[String, Any]): String =
+      * RFC3339Nano — everything deeper is `write` (nested) territory.
+      * `zone` is the session time zone both paths render in. */
+    def writeRow(m: scala.collection.Map[String, Any], zone: ZoneId): String =
       m.toSeq.sortBy(_._1)
-        .map { case (k, x) => quote(k) + ":" + writeTop(x) }
+        .map { case (k, x) => quote(k) + ":" + writeTop(x, zone) }
         .mkString("{", ",", "}")
 
     /** A top-level column value: timestamps render RFC3339Nano (matching
-      * `JsonSink.objects`' rfc3339NanoRaw reformatting of top-level
-      * TimestampType columns); all other values share nested semantics. */
-    def writeTop(v: Any): String = v match {
-      case t: java.sql.Timestamp => quote(rfc3339Nano(t))
-      case i: java.time.Instant => quote(rfc3339NanoInstant(i))
-      // TimestampNTZ surfaces as LocalDateTime; the distributed path
-      // (`rfc3339NanoRaw`) formats NTZ like a UTC instant (probe-pinned:
-      // "…T10:00:00Z", fraction trimmed) under the UTC session zone the
-      // graft sessions run with
-      case ldt: java.time.LocalDateTime =>
-        quote(rfc3339NanoInstant(ldt.toInstant(java.time.ZoneOffset.UTC)))
-      case other => write(other)
+      * `JsonSink.objects`' rfc3339NanoRaw of top-level timestamp
+      * columns); all other values share nested semantics. */
+    def writeTop(v: Any, zone: ZoneId): String = {
+      def rfc3339Nano(us: Long, ntz: Boolean) = quote(GoTime.rfc3339Nano(us, ntz, zone).toString)
+      v match {
+        case t: java.sql.Timestamp => rfc3339Nano(DateTimeUtils.fromJavaTimestamp(t), ntz = false)
+        case i: java.time.Instant => rfc3339Nano(DateTimeUtils.instantToMicros(i), ntz = false)
+        // TimestampNTZ surfaces as LocalDateTime; like the distributed
+        // path, its wall clock is read in the session zone
+        case ldt: java.time.LocalDateTime =>
+          rfc3339Nano(DateTimeUtils.localDateTimeToMicros(ldt), ntz = true)
+        case other => write(other, zone)
+      }
     }
 
     /** A NESTED value (inside a struct, array, or map). Timestamps at
       * any nesting depth use `to_json`'s DEFAULT rendering (millis,
-      * always 3 digits, Z) — the distributed path can only re-format
-      * top-level timestamp COLUMNS, so byte parity below the top level
-      * means matching what `to_json` does there, not RFC3339Nano. */
-    def write(v: Any): String = v match {
+      * always 3 digits, session-zone offset) — the distributed path can
+      * only re-format top-level timestamp COLUMNS, so byte parity below
+      * the top level means matching what `to_json` does there, not
+      * RFC3339Nano. */
+    def write(v: Any, zone: ZoneId): String = v match {
       case null => "null"
       case s: String => quote(s)
       case b: Boolean => b.toString
@@ -169,8 +180,8 @@ object Format {
       case d: java.math.BigDecimal => d.toPlainString
       case d: scala.math.BigDecimal => d.bigDecimal.toPlainString
       case b: Array[Byte] => quote(java.util.Base64.getEncoder.encodeToString(b))
-      case t: java.sql.Timestamp => quote(sparkJsonTs(t.toInstant))
-      case i: java.time.Instant => quote(sparkJsonTs(i))
+      case t: java.sql.Timestamp => quote(sparkJsonTs(DateTimeUtils.fromJavaTimestamp(t), zone))
+      case i: java.time.Instant => quote(sparkJsonTs(DateTimeUtils.instantToMicros(i), zone))
       // nested TimestampNTZ: `to_json` default = millis, NO zone suffix
       // (probe-pinned: "2024-03-01T10:00:00.000")
       case ldt: java.time.LocalDateTime => quote(sparkJsonTsNtz(ldt))
@@ -183,41 +194,30 @@ object Format {
         require(sch != null, "nested Row without schema on the JSON driver path")
         sch.fields.zipWithIndex
           .map { case (f, i) =>
-            quote(f.name) + ":" + write(if (r.isNullAt(i)) null else r.get(i))
+            quote(f.name) + ":" + write(if (r.isNullAt(i)) null else r.get(i), zone)
           }
           .mkString("{", ",", "}")
       case m: scala.collection.Map[_, _] =>
         m.toSeq.map { case (k, x) => (k.toString, x) }.sortBy(_._1)
-          .map { case (k, x) => quote(k) + ":" + write(x) }
+          .map { case (k, x) => quote(k) + ":" + write(x, zone) }
           .mkString("{", ",", "}")
-      case s: Iterable[_] => s.map(write).mkString("[", ",", "]")
+      case s: Iterable[_] => s.map(write(_, zone)).mkString("[", ",", "]")
       case other => throw new IllegalArgumentException(
         s"unsupported JSON value: ${other.getClass.getName}")
     }
 
-    def rfc3339Nano(ts: java.sql.Timestamp): String = rfc3339NanoInstant(ts.toInstant)
-
-    private val secondsFmt = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss")
-      .withZone(java.time.ZoneOffset.UTC)
-
-    /** Spark `to_json`'s default timestamp rendering: exactly 3 fraction
-      * digits (micros truncated to millis) and `Z` at UTC — what nested
-      * timestamps get on the distributed path. */
-    def sparkJsonTs(instant: java.time.Instant): String =
-      f"${secondsFmt.format(instant)}.${instant.getNano / 1000000}%03dZ"
+    /** Spark `to_json`'s default timestamp rendering — its own formatter
+      * and pattern: exactly 3 fraction digits (micros truncated to
+      * millis) and the zone's offset, `Z` at UTC. What nested timestamps
+      * get on the distributed path. */
+    def sparkJsonTs(us: Long, zone: ZoneId): String =
+      TimestampFormatter("yyyy-MM-dd'T'HH:mm:ss.SSSXXX", zone,
+        LegacyDateFormats.FAST_DATE_FORMAT, isParsing = false).format(us)
 
     /** `to_json`'s default TimestampNTZ rendering: exactly 3 fraction
       * digits and no zone suffix (a naive wall-clock value). */
     def sparkJsonTsNtz(ldt: java.time.LocalDateTime): String =
       f"${ldt.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))}.${ldt.getNano / 1000000}%03d"
-
-    def rfc3339NanoInstant(instant: java.time.Instant): String = {
-      val base = secondsFmt.format(instant)
-      val nanos = instant.getNano
-      if (nanos == 0) base + "Z"
-      else base + "." + f"$nanos%09d".reverse.dropWhile(_ == '0').reverse + "Z"
-    }
 
     /** std-JSON string escaping incl. the HTML set (`<>&` → \u00XX). */
     def quote(s: String): String = {

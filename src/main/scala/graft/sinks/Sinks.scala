@@ -4,6 +4,7 @@ import scala.collection.AbstractIterator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -241,13 +242,9 @@ object JsonSink extends Codec(JsonOptions()) {
       }.as(f.name)
     }
     val j = to_json(struct(cols.toIndexedSeq: _*), Map("ignoreNullFields" -> "false"))
-    // `<>&` never appear structurally in JSON, so a global replace only
+    // `<>&` never appear structurally in JSON, so a global escape only
     // touches string contents — matching the reference encoder exactly
-    val escaped =
-      if (opts.escapeHtml)
-        regexp_replace(regexp_replace(regexp_replace(j,
-          "&", "\\\\u0026"), "<", "\\\\u003c"), ">", "\\\\u003e")
-      else j
+    val escaped = if (opts.escapeHtml) Render.jsonHtmlEscape(j) else j
     limited.select(escaped.as("j")).as[String]
   }
 
@@ -265,10 +262,11 @@ object JsonSink extends Codec(JsonOptions()) {
         Render.mapped(f, opts.mappers, opts.ctxMappers).getOrElse(col(f.name)).as(f.name)
       }.toIndexedSeq: _*)
       val names = mapped.schema.fieldNames
+      val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get("spark.sql.session.timeZone"))
       SinkIO.stream(frame, opts.limit, mapped.toLocalIterator().asScala) { (rowID, row) =>
         val m: Map[String, Any] = names.indices.map(i => names(i) -> row.get(i)).toMap
         val (rewritten, keep) = hook(rowID, m)
-        if (keep) Some(Format.GoJson.writeRow(rewritten)) else None
+        if (keep) Some(Format.GoJson.writeRow(rewritten, zone)) else None
       }
     }
   }

@@ -1,8 +1,12 @@
 package graft
 
+import java.time.{LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
+
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 
-import graft.functions.GoFormat
+import graft.functions.{GoFormat, GoJsonEscape, GoTime}
 import graft.sinks.Format
 
 /** ScalaCheck property suites over the pure kernels (no SparkSession —
@@ -117,5 +121,44 @@ object FormatProps extends Properties("graft.format") {
             java.util.Arrays.copyOfRange(avi, off, off + len), orig)
         }
       }
+    }
+
+  private val secondsFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss")
+
+  property("RFC3339Nano at UTC matches a java.time rendering, TIMESTAMP and NTZ") =
+    Prop.forAll(Gen.chooseNum(GoTime.ZeroMicros, 253402300799999999L)) { us =>
+      val t = LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+        Math.floorMod(us, 1000000L).toInt * 1000, ZoneOffset.UTC)
+      val frac = f"${t.getNano / 1000}%06d".reverse.dropWhile(_ == '0').reverse
+      val want = secondsFmt.format(t) + (if (frac.isEmpty) "" else "." + frac) + "Z"
+      GoTime.rfc3339Nano(us, ntz = false, ZoneOffset.UTC).toString == want &&
+        GoTime.rfc3339Nano(us, ntz = true, ZoneOffset.UTC).toString == want
+    }
+
+  /** Text mixing `<>&`, JSON quoting, and 2-, 3- and 4-byte UTF-8. */
+  private val jsonTextGen: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.alphaNumChar.map(_.toString),
+    3 -> Gen.oneOf("<", ">", "&"),
+    2 -> Gen.oneOf("\"", "\\", "\\u0026", ":", ","),
+    2 -> Gen.oneOf("é", "€", "\u00a0", "😀"))).map(_.mkString)
+
+  /** `s`'s UTF-8 bytes inside a larger buffer: a string that does not
+    * start at the array's first byte. */
+  private def sliced(s: String): UTF8String = {
+    val b = s.getBytes("UTF-8")
+    UTF8String.fromBytes(Array[Byte]('<', '&') ++ b ++ Array[Byte]('>'), 2, b.length)
+  }
+
+  property("JSON <>& escape matches the replace chain on mixed UTF-8 text") =
+    Prop.forAll(jsonTextGen) { s =>
+      val want = s.replace("&", "\\u0026").replace("<", "\\u003c").replace(">", "\\u003e")
+      GoJsonEscape.escapeHtml(UTF8String.fromString(s)).toString == want &&
+        GoJsonEscape.escapeHtml(sliced(s)).toString == want
+    }
+
+  property("JSON <>& escape returns its input when there is nothing to escape") =
+    Prop.forAll(jsonTextGen.map(_.filterNot(c => c == '<' || c == '>' || c == '&'))) { s =>
+      val u = sliced(s)
+      GoJsonEscape.escapeHtml(u) eq u
     }
 }

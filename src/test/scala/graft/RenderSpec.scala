@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.Row
+import java.time.{LocalDateTime, ZoneOffset}
+
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{GoFormat, Render}
+import graft.functions.{GoFormat, GoTime, Render}
 
 /** Parity tests for the tostring render layer against the semantics of
   * `/root/reference/tostring/tostring.go:34-98`. */
@@ -80,6 +82,89 @@ class RenderSpec extends SparkTestBase {
     val zero = Seq("0001-01-01 00:00:00").toDF("s")
       .select(Render.rfc3339Nano(to_timestamp($"s")).as("r"))
     assert(zero.collect()(0).isNullAt(0))
+  }
+
+  /** Reference RFC3339Nano built from Spark's own `date_format`: three
+    * calls, a `regexp_replace` and a `concat`. */
+  private def treeRfc3339NanoRaw(c: Column): Column = {
+    val base = date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
+    val frac = regexp_replace(date_format(c, "SSSSSS"), "0+$", "")
+    concat(base, when(frac === lit(""), lit("")).otherwise(concat(lit("."), frac)),
+      date_format(c, "XXX"))
+  }
+
+  /** Epoch micros → the NTZ value with that UTC wall clock. */
+  private def wall(us: Long): LocalDateTime =
+    LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+      Math.floorMod(us, 1000000L).toInt * 1000, ZoneOffset.UTC)
+
+  private def micros(ldt: String): Long = {
+    val t = LocalDateTime.parse(ldt)
+    t.toEpochSecond(ZoneOffset.UTC) * 1000000L + t.getNano / 1000
+  }
+
+  /** Rows of (micros, the NTZ wall clock of the same number) in one
+    * partition of an RDD, so the projection over them runs in the
+    * configured codegen mode rather than being folded by the optimizer. */
+  private def timeRows(us: Seq[Long]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(us.map(u => Row(u, wall(u))), 1),
+      StructType(Seq(StructField("us", LongType), StructField("ntz", TimestampNTZType))))
+
+  test("rfc3339Nano: the kernel emits the old Column tree's bytes in every zone and codegen mode") {
+    val lo = GoTime.ZeroMicros                  // 0001-01-01T00:00:00Z
+    val hi = micros("9999-12-31T23:59:59.999999")
+    val rnd = new java.util.SplittableRandom(20241017L)
+    val edges = Seq(0L, -1L, 1L, 100000L, lo, hi) ++ Seq(
+      "2024-03-01T23:59:59.999999", "2000-02-29T12:00:00.5", "1900-03-01T00:00:00",
+      "0999-12-31T23:59:59.25", "1000-01-01T00:00:00", "9999-01-01T00:00:00.000001",
+      "9999-12-31T23:00:00.5", // year 10000 in Kolkata: `date_format` signs it
+      // New York 2024: the spring-forward gap and fall-back overlap as
+      // wall clocks (NTZ) and as instants, and an LMT (-04:56:02) instant
+      "2024-03-10T02:30:00", "2024-03-10T07:30:00", "2024-11-03T01:30:00",
+      "2024-11-03T05:30:00", "2024-11-03T06:30:00", "1850-06-01T12:00:00.123"
+    ).map(micros)
+    val inputs = edges ++ Seq.fill(2000)(rnd.nextLong(lo, hi + 1))
+    val zeroNtz = to_timestamp(lit("0001-01-01 00:00:00"))
+    val modes = Seq(
+      "whole-stage" -> Seq("spark.sql.codegen.wholeStage" -> "true"),
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (zone <- Seq("UTC", "America/New_York", "Asia/Kolkata", "+05:45");
+         (mode, confs) <- modes) withConf(confs :+ ("spark.sql.session.timeZone" -> zone): _*) {
+      val ts = timestamp_micros($"us")
+      val out = timeRows(inputs).select(
+        Render.rfc3339NanoRaw(ts), treeRfc3339NanoRaw(ts),
+        Render.rfc3339Nano(ts),
+        when($"us" === lit(GoTime.ZeroMicros), lit(null)).otherwise(treeRfc3339NanoRaw(ts)),
+        Render.rfc3339NanoRaw($"ntz"), treeRfc3339NanoRaw($"ntz"),
+        Render.rfc3339Nano($"ntz"),
+        when($"ntz" === zeroNtz, lit(null)).otherwise(treeRfc3339NanoRaw($"ntz")))
+      val wholeStage = out.queryExecution.executedPlan.collectFirst {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+      assert(wholeStage.isDefined == (mode == "whole-stage"), s"$zone/$mode plan")
+      out.collect().zip(inputs).foreach { case (r, us) =>
+        Seq(0, 2, 4, 6).foreach { i =>
+          assert(r.getString(i) == r.getString(i + 1),
+            s"$zone/$mode column $i for $us µs (${wall(us)})")
+        }
+      }
+    }
+  }
+
+  test("rfc3339Nano: Go's zero time is NULL in every session zone; wall clocks keep their offsets") {
+    withConf("spark.sql.session.timeZone" -> "America/New_York") {
+      val rows = Seq(
+        GoTime.ZeroMicros,              // the zero instant: NULL, shown in any zone
+        micros("0001-01-01T04:56:02"),  // New York's own 0001-01-01 00:00 wall clock
+        micros("1850-06-01T12:00:00"))  // LMT: -04:56:02 prints as -04:56
+      val out = timeRows(rows).select(Render.rfc3339Nano(timestamp_micros($"us")))
+        .collect().map(r => Option(r.getString(0))).toSeq
+      assert(out == Seq(None, Some("0001-01-01T00:00:00-04:56"), Some("1850-06-01T07:03:58-04:56")))
+      // an NTZ wall clock in the DST gap moves forward, as the zone cast does
+      val gap = timeRows(Seq(micros("2024-03-10T02:30:00"))).select(Render.rfc3339Nano($"ntz"))
+      assert(gap.as[String].collect().toSeq == Seq("2024-03-10T03:30:00-04:00"))
+    }
   }
 
   // ---- full render dispatch (type switch, tostring.go:38-97) ----

@@ -230,6 +230,41 @@ class SinkSpec extends SparkTestBase {
       preProcessor = Some((_, r) => (r, true)))) == want)
   }
 
+  test("json: objects escapes <>& byte for byte beside quotes and multibyte UTF-8") {
+    val text = "a<b>&\"c\" é€😀 \\u0026 <</>>&&"
+    val df = Slice.fromData(spark, Seq(Seq(text), Seq("plain é")))
+    val want = Seq(
+      "{\"column_0\":\"a\\u003cb\\u003e\\u0026\\\"c\\\" é€😀 \\\\u0026 " +
+        "\\u003c\\u003c/\\u003e\\u003e\\u0026\\u0026\"}",
+      "{\"column_0\":\"plain é\"}")
+    assert(JsonSink.objects(df).collect().toSeq == want)
+  }
+
+  test("json: the hook path renders timestamps in the session zone, like the plain path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    withConf("spark.sql.session.timeZone" -> "America/New_York") {
+      val schema = StructType(Seq(
+        StructField("id", IntegerType),
+        StructField("t", TimestampType),
+        StructField("ntz", TimestampNTZType),
+        StructField("s", StructType(Seq(StructField("t", TimestampType))))))
+      val t = java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T10:00:00.5Z"))
+      val rows = Seq(
+        Row(1, t, java.time.LocalDateTime.parse("2024-03-10T02:30:00"), Row(t)),
+        Row(2, java.sql.Timestamp.from(java.time.Instant.parse("1850-06-01T12:00:00Z")),
+          java.time.LocalDateTime.parse("2024-11-03T01:30:00.25"), null))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema).orderBy("id")
+      val plain = JsonSink.writeString(df, JsonOptions(newlineDelimited = true))
+      val hooked = JsonSink.writeString(df, JsonOptions(newlineDelimited = true,
+        preProcessor = Some((_, row) => (row, true))))
+      assert(plain.contains("\"t\":\"2024-03-01T05:00:00.5-05:00\""), plain)
+      assert(plain.contains("\"ntz\":\"2024-03-10T03:30:00-04:00\""), plain)
+      assert(plain.contains("\"t\":\"1850-06-01T07:03:58-04:56\""), plain)
+      assert(hooked == plain, s"hooked=$hooked plain=$plain")
+    }
+  }
+
   // ---- HTML (html.go:96-171) ----
 
   test("html: typed sticky header + tbody + closers (html.go:102-120)") {

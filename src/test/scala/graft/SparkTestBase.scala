@@ -10,6 +10,14 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf0001 = "/root/testdata/sf0.001"
   def sf01 = "/root/testdata/sf0.1"
+
+  /** Runs `body` with the given session confs, then restores them. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
 
 object SparkTestBase {
