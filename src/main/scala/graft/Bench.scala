@@ -95,8 +95,11 @@ object Bench {
   // shared battery core (runs inside a worker JVM or in-process fallback)
   // ---------------------------------------------------------------------
 
-  private def newSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The local session the `Bench`, `Verify` and `BenchOne` mains run
+    * on: `local[$SPARK_GRAFT_CPUS]` (else `defaultCpus`) with as many
+    * shuffle partitions, UTC, the graft extensions and AQE. */
+  private[graft] def newSession(defaultCpus: String = "32"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

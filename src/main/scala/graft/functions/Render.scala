@@ -365,33 +365,28 @@ object Render {
     *
     * `mappers` is the per-DataType custom-mapper surface
     * (`/root/reference/codec/csv/csv.go:52-63,199-205`): the first entry
-    * whose DataType matches a column overrides its default rendering. The
-    * mapper returns a string Column whose NULL is the reference's
-    * `tostring.String{IsNULL: true}`. Go dispatches on per-cell runtime
-    * type; Spark's schema makes that per-column static type — a deliberate
-    * semantic tightening (SURVEY.md §7f).
-    *
-    * `ctxMappers` is the context-aware variant: it additionally receives
-    * the [[MapperContext]] (column name + source driver, read from the
+    * whose DataType matches a column overrides its default rendering. Like
+    * the reference's `(value, Metadata)` mapper, it receives the
+    * [[MapperContext]] (column name + source driver, read from the
     * [[graft.sources.SourceMeta]] schema metadata that `Slice.fromSql`
-    * attaches). Context mappers win over plain mappers on a type clash.
+    * attaches) and the column, and returns a string Column whose NULL is
+    * the reference's `tostring.String{IsNULL: true}`. Go dispatches on
+    * per-cell runtime type; Spark's schema makes that per-column static
+    * type — a deliberate semantic tightening (SURVEY.md §7f).
     */
   def renderAll(df: DataFrame,
-                mappers: Seq[(DataType, Column => Column)] = Nil,
-                ctxMappers: Seq[(DataType, (MapperContext, Column) => Column)] = Nil): DataFrame = {
+                mappers: Seq[(DataType, (MapperContext, Column) => Column)] = Nil): DataFrame = {
     val cols = df.schema.fields.map { f =>
-      mapped(f, mappers, ctxMappers).getOrElse(render(col(f.name), f.dataType)).as(f.name)
+      mapped(f, mappers).getOrElse(render(col(f.name), f.dataType)).as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
   }
 
   /** Column `f` through the first custom mapper whose DataType matches
-    * it — a context mapper before a plain one — or None when none does,
-    * leaving the caller's own default in force. */
+    * it, or None when none does, leaving the caller's own default in
+    * force. */
   def mapped(f: StructField,
-             mappers: Seq[(DataType, Column => Column)],
-             ctxMappers: Seq[(DataType, (MapperContext, Column) => Column)]): Option[Column] =
-    ctxMappers.collectFirst { case (dt, fn) if dt == f.dataType =>
-        fn(MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
-      .orElse(mappers.collectFirst { case (dt, fn) if dt == f.dataType => fn(col(f.name)) })
+             mappers: Seq[(DataType, (MapperContext, Column) => Column)]): Option[Column] =
+    mappers.collectFirst { case (dt, fn) if dt == f.dataType =>
+      fn(MapperContext(f.name, graft.sources.SourceMeta.driverOf(f)), col(f.name)) }
 }

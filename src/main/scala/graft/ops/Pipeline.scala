@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.sinks.SinkIO
+
 /** The reference's row-level dataflow surface (SURVEY.md §2.4) as
   * first-class, distributable operations.
   *
@@ -31,13 +33,7 @@ final case class Pipeline(
     val rewritten = rewrite.foldLeft(filtered) { case (d, (name, expr)) =>
       d.withColumn(name, expr)
     }
-    val renamed = header match {
-      case Some(h) =>
-        if (h.length != rewritten.schema.length)
-          throw new IllegalArgumentException("invalid header length")
-        rewritten.toDF(h: _*)
-      case None => rewritten
-    }
-    if (limit >= 0) renamed.limit(limit) else renamed
+    val renamed = header.fold(rewritten)(h => rewritten.toDF(SinkIO.checkedHeader(rewritten, h): _*))
+    SinkIO.limited(renamed, limit)
   }
 }

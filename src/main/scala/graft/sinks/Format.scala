@@ -81,14 +81,16 @@ object Format {
 
   /** One `<row>` element: NULL cells omitted entirely, values escaped,
     * element names taken raw from column names (`xml.go:111-122`). `null`
-    * entries in `cells` mark NULL. */
-  def xmlRow(names: IndexedSeq[String], cells: IndexedSeq[String]): String = {
+    * entries in `mask` (the rendered cells) mark NULL; the other cells
+    * are written from `row`, so a row rewritten by a hook never brings a
+    * NULL back (`xml.go:94-96,113-115`). */
+  def xmlRow(names: IndexedSeq[String], mask: Array[String], row: IndexedSeq[String]): String = {
     val sb = new java.lang.StringBuilder("<row>")
     var i = 0
     while (i < names.length) {
-      if (cells(i) != null) {
+      if (mask(i) != null) {
         sb.append('<').append(names(i)).append('>')
-        sb.append(xmlEscape(cells(i)))
+        sb.append(xmlEscape(row(i)))
         sb.append("</").append(names(i)).append('>')
       }
       i += 1

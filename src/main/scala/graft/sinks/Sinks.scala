@@ -1,6 +1,7 @@
 package graft.sinks
 
 import scala.collection.AbstractIterator
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
@@ -18,11 +19,11 @@ import graft.functions.Render
   * filter/project split in [[graft.ops.Pipeline]] instead. */
 object SinkTypes {
   type PreProcessor = (Int, IndexedSeq[String]) => (IndexedSeq[String], Boolean)
-  type Mappers = Seq[(DataType, Column => Column)]
-  /** Context-aware mappers: additionally receive the plan-time
-    * `Metadata` slice (column name + source driver) — see
-    * [[graft.functions.Render.MapperContext]]. */
-  type CtxMappers = Seq[(DataType, (Render.MapperContext, Column) => Column)]
+  /** Per-DataType custom mappers in the reference's `(value, Metadata)`
+    * shape: each receives the plan-time `Metadata` slice (column name +
+    * source driver, [[graft.functions.Render.MapperContext]]) and the
+    * column. */
+  type Mappers = Seq[(DataType, (Render.MapperContext, Column) => Column)]
 }
 import SinkTypes._
 
@@ -35,16 +36,22 @@ import SinkTypes._
 private[sinks] final case class Frame(open: String, sep: String, close: String,
                                       empty: String = "", head: String = "")
 
-private[sinks] object SinkIO {
+private[graft] object SinkIO {
   implicit val stringEnc: Encoder[String] = Encoders.STRING
 
+  /** The row cap every sink and [[graft.ops.Pipeline]] apply. */
   def limited(df: DataFrame, limit: Int): DataFrame =
     if (limit >= 0) df.limit(limit) else df
 
+  /** `header` checked against `df`'s arity like `csv.go:134-139`. */
+  def checkedHeader(df: DataFrame, header: Seq[String]): Seq[String] = {
+    if (header.length != df.schema.length) throw new IllegalArgumentException("invalid header length")
+    header
+  }
+
   /** Rendered rows as string arrays; `null` entries are NULL cells. */
-  def renderedRows(df: DataFrame, mappers: Mappers,
-                   ctxMappers: CtxMappers = Nil): Dataset[Array[String]] = {
-    val rendered = Render.renderAll(df, mappers, ctxMappers)
+  def renderedRows(df: DataFrame, mappers: Mappers): Dataset[Array[String]] = {
+    val rendered = Render.renderAll(df, mappers)
     val n = rendered.schema.length
     val sp = rendered.sparkSession
     import sp.implicits._
@@ -86,16 +93,6 @@ private[sinks] object SinkIO {
   def stream(frame: Frame, limit: Int, rows: => Dataset[String]): Iterator[String] =
     stream(frame, limit, rows.toLocalIterator().asScala)((_, s) => Some(s))
 
-  /** Rows through a [[PreProcessor]]: the hook sees NULL cells as
-    * `nullAs`; `encode` gets the original cells (their NULL mask) and the
-    * hook's row. */
-  def hooked(frame: Frame, limit: Int, cells: => Dataset[Array[String]], nullAs: String,
-             hook: PreProcessor)(encode: (Array[String], IndexedSeq[String]) => String): Iterator[String] =
-    stream(frame, limit, cells.toLocalIterator().asScala) { (rowID, raw) =>
-      val (row, keep) = hook(rowID, raw.toIndexedSeq.map(c => if (c == null) nullAs else c))
-      if (keep) Some(encode(raw, row)) else None
-    }
-
   /** Distributed write of pre-encoded rows under `frame`, via the DSv2
     * [[graft.sinks.v2.FramedTextSink]] commit. */
   def writeFramed(rows: Dataset[String], path: String, frame: Frame): Unit =
@@ -121,6 +118,58 @@ private[graft] abstract class Codec[O](defaults: O) {
     bound(df, opts).writeFile(path)
 }
 
+/** The option fields of the codecs whose rows are rendered cells. */
+private[sinks] trait CellOptions {
+  def limit: Int
+  def preProcessor: Option[PreProcessor]
+  def mappers: Mappers
+}
+
+/** What a codec whose rows are rendered cells states: its [[Frame]], the
+  * string NULL cells become, and one row encoder. The encoder gets the
+  * rendered cells (`null` marks a NULL) and the row to write. */
+private[sinks] final case class CellFormat(frame: Frame, nullAs: String,
+                                           encode: (Array[String], IndexedSeq[String]) => String)
+
+/** CSV, XML and HTML: both write paths derived from one [[CellFormat]].
+  * The distributed builder renders in a codegen'd projection and encodes
+  * each row with its own cells in one narrow map, the same shape as
+  * Spark's own CSV `FileFormatWriter`. The driver stream frames the
+  * builder's rows; with a hook, it encodes the hook's rows instead, and
+  * the hook sees NULL cells as `nullAs`. */
+private[sinks] abstract class CellCodec[O <: CellOptions](defaults: O) extends Codec[O](defaults) {
+  protected def format(df: DataFrame, opts: O): CellFormat
+
+  /** The distributed row builder: encoded rows, unframed. */
+  protected def encoded(df: DataFrame, opts: O): Dataset[String] = {
+    require(opts.preProcessor.isEmpty,
+      "the sequential preProcessor runs on the driver-stream path (writeString/writeFile); " +
+      "use ops.Pipeline filter/project for distributed writes")
+    import SinkIO.stringEnc
+    val fmt = format(df, opts)
+    val (nv, encode) = (fmt.nullAs, fmt.encode)
+    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers)
+      .map(cells => encode(cells, CellCodec.filled(cells, nv)))
+  }
+
+  def contentIterator(df: DataFrame, opts: O): Iterator[String] = {
+    val fmt = format(df, opts)
+    opts.preProcessor.fold(SinkIO.stream(fmt.frame, opts.limit, encoded(df, opts))) { hook =>
+      SinkIO.stream(fmt.frame, opts.limit, SinkIO.renderedRows(df, opts.mappers).toLocalIterator().asScala) {
+        (rowID, cells) =>
+          val (row, keep) = hook(rowID, CellCodec.filled(cells, fmt.nullAs))
+          if (keep) Some(fmt.encode(cells, row)) else None
+      }
+    }
+  }
+}
+
+private object CellCodec {
+  /** `cells` with each NULL as `nullAs`, in one new array. */
+  def filled(cells: Array[String], nullAs: String): IndexedSeq[String] =
+    ArraySeq.unsafeWrapArray(cells).map(c => if (c == null) nullAs else c)
+}
+
 // ---------------------------------------------------------------------------
 // CSV (`/root/reference/codec/csv/csv.go`)
 // ---------------------------------------------------------------------------
@@ -135,68 +184,47 @@ final case class CsvOptions(
     nullValue: String = "",
     limit: Int = -1,
     preProcessor: Option[PreProcessor] = None,
-    mappers: Mappers = Nil,
-    ctxMappers: CtxMappers = Nil) {
+    mappers: Mappers = Nil) extends CellOptions {
   def eol: String = if (useCRLF) "\r\n" else "\n"
 }
 
-object CsvSink extends Codec(CsvOptions()) {
+object CsvSink extends CellCodec(CsvOptions()) {
 
   /** Header row (custom header validated for arity exactly like
     * `csv.go:134-139`). */
-  def header(df: DataFrame, opts: CsvOptions): Seq[String] = {
-    val h = opts.customHeader.getOrElse(df.schema.fieldNames.toSeq)
-    if (h.length != df.schema.length) throw new IllegalArgumentException("invalid header length")
-    h
-  }
+  def header(df: DataFrame, opts: CsvOptions): Seq[String] =
+    SinkIO.checkedHeader(df, opts.customHeader.getOrElse(df.schema.fieldNames.toSeq))
 
-  /** Distributed CSV records (no header, no EOL) — rendering is a
-    * codegen'd projection; line assembly is one narrow map, the same
-    * shape as Spark's own CSV `FileFormatWriter`. */
-  def lines(df: DataFrame, opts: CsvOptions): Dataset[String] = {
-    require(opts.preProcessor.isEmpty,
-      "sequential preProcessor requires the driver-stream path (writeString/writeFile); " +
-      "use ops.Pipeline filter/project for distributed writes")
-    import SinkIO.stringEnc
-    val (d, crlf, nv) = (opts.delimiter, opts.useCRLF, opts.nullValue)
-    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers).map { cells =>
-      Format.csvLine(cells.toIndexedSeq.map(c => if (c == null) nv else c), d, crlf)
-    }
-  }
+  /** Distributed CSV records (no header, no EOL). */
+  def lines(df: DataFrame, opts: CsvOptions): Dataset[String] = encoded(df, opts)
 
   /** `csv.go:124-190`: the header line is eager (written for zero rows
     * too, `csv.go:147-151`) or lazy (written with the first kept row,
     * `csv.go:175-179`); every record ends in the EOL. */
-  private def frame(df: DataFrame, opts: CsvOptions): Frame = {
-    val hdr = header(df, opts)
-    val line =
-      if (opts.writeHeader && hdr.nonEmpty)
-        Format.csvLine(hdr.toIndexedSeq, opts.delimiter, opts.useCRLF) + opts.eol
-      else ""
-    if (opts.writeHeaderWhenNoData) Frame("", opts.eol, opts.eol, head = line)
-    else Frame(line, opts.eol, opts.eol)
-  }
-
-  def contentIterator(df: DataFrame, opts: CsvOptions): Iterator[String] = {
-    val f = frame(df, opts)
-    opts.preProcessor.fold(SinkIO.stream(f, opts.limit, lines(df, opts))) { hook =>
-      SinkIO.hooked(f, opts.limit, SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers),
-        opts.nullValue, hook)((_, row) => Format.csvLine(row, opts.delimiter, opts.useCRLF))
-    }
+  protected def format(df: DataFrame, opts: CsvOptions): CellFormat = {
+    val (d, crlf, eol, hdr) = (opts.delimiter, opts.useCRLF, opts.eol, header(df, opts))
+    val line = if (opts.writeHeader && hdr.nonEmpty) Format.csvLine(hdr.toIndexedSeq, d, crlf) + eol else ""
+    CellFormat(
+      if (opts.writeHeaderWhenNoData) Frame("", eol, eol, head = line) else Frame(line, eol, eol),
+      opts.nullValue, (_, row) => Format.csvLine(row, d, crlf))
   }
 
   /** Distributed directory write via Spark's native CSV writer — the
-    * scale path (header per part-file, quote-doubling like Go). */
+    * scale path (header per part-file, quote-doubling like Go). Cells are
+    * written as rendered: Spark's writer would otherwise trim their
+    * leading and trailing whitespace. */
   def writeDir(df: DataFrame, path: String, opts: CsvOptions = CsvOptions()): Unit = {
     require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
     val limited = SinkIO.limited(df, opts.limit)
     val named = if (opts.customHeader.isDefined) limited.toDF(header(df, opts): _*) else limited
-    Render.renderAll(named, opts.mappers, opts.ctxMappers).write
+    Render.renderAll(named, opts.mappers).write
       .option("header", opts.writeHeader.toString)
       .option("sep", opts.delimiter.toString)
       .option("lineSep", opts.eol)
       .option("nullValue", opts.nullValue)
       .option("emptyValue", "")
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
       .option("quote", "\"").option("escape", "\"")
       .mode("overwrite").csv(path)
   }
@@ -209,15 +237,13 @@ object CsvSink extends Codec(CsvOptions()) {
 /** Option surface of the reference JSON codec (`json.go:28-80`).
   * `preProcessor` is the map-based hook (`json.go:44-48`): it receives
   * the 1-based rowID (counting kept rows) and the row as a
-  * name→native-value map, and runs on the driver-stream path.
-  * `escapeHtml` matches the reference's std-compatible encoder, which
-  * escapes `<>&` inside JSON strings. */
+  * name→native-value map, and runs on the driver-stream path. Both
+  * paths escape strings like the reference's std-compatible encoder,
+  * `<>&` included. */
 final case class JsonOptions(
     newlineDelimited: Boolean = false,
     limit: Int = -1,
     mappers: Mappers = Nil,
-    ctxMappers: CtxMappers = Nil,
-    escapeHtml: Boolean = true,
     preProcessor: Option[(Int, Map[String, Any]) => (Map[String, Any], Boolean)] = None)
 
 object JsonSink extends Codec(JsonOptions()) {
@@ -234,7 +260,7 @@ object JsonSink extends Codec(JsonOptions()) {
     val limited = SinkIO.limited(df, opts.limit)
     val fields = limited.schema.fields.sortBy(_.name)
     val cols = fields.map { f =>
-      Render.mapped(f, opts.mappers, opts.ctxMappers).getOrElse {
+      Render.mapped(f, opts.mappers).getOrElse {
         f.dataType match {
           case TimestampType | TimestampNTZType => Render.rfc3339NanoRaw(col(f.name))
           case _ => col(f.name)
@@ -244,8 +270,7 @@ object JsonSink extends Codec(JsonOptions()) {
     val j = to_json(struct(cols.toIndexedSeq: _*), Map("ignoreNullFields" -> "false"))
     // `<>&` never appear structurally in JSON, so a global escape only
     // touches string contents — matching the reference encoder exactly
-    val escaped = if (opts.escapeHtml) Render.jsonHtmlEscape(j) else j
-    limited.select(escaped.as("j")).as[String]
+    limited.select(Render.jsonHtmlEscape(j).as("j")).as[String]
   }
 
   /** Array mode (`json.go:94-98,135-147`) opens `[` lazily with the
@@ -259,7 +284,7 @@ object JsonSink extends Codec(JsonOptions()) {
       // the map hook sees native values; custom mappers apply BEFORE it,
       // like `json.go:111-128`; GoJson serializes std-compatibly
       val mapped = df.select(df.schema.fields.map { f =>
-        Render.mapped(f, opts.mappers, opts.ctxMappers).getOrElse(col(f.name)).as(f.name)
+        Render.mapped(f, opts.mappers).getOrElse(col(f.name)).as(f.name)
       }.toIndexedSeq: _*)
       val names = mapped.schema.fieldNames
       val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get("spark.sql.session.timeZone"))
@@ -284,36 +309,22 @@ object JsonSink extends Codec(JsonOptions()) {
 final case class XmlOptions(
     limit: Int = -1,
     preProcessor: Option[PreProcessor] = None,
-    mappers: Mappers = Nil,
-    ctxMappers: CtxMappers = Nil)
+    mappers: Mappers = Nil) extends CellOptions
 
-object XmlSink extends Codec(XmlOptions()) {
+object XmlSink extends CellCodec(XmlOptions()) {
 
   /** Distributed `<row>` fragments: NULL elements omitted, values
     * escaped, element names raw (`xml.go:111-122`). */
-  def rows(df: DataFrame, opts: XmlOptions = XmlOptions()): Dataset[String] = {
-    require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
-    import SinkIO.stringEnc
-    val limited = SinkIO.limited(df, opts.limit)
-    val names = limited.schema.fieldNames.toIndexedSeq
-    SinkIO.renderedRows(limited, opts.mappers, opts.ctxMappers)
-      .map(cells => Format.xmlRow(names, cells.toIndexedSeq))
-  }
+  def rows(df: DataFrame, opts: XmlOptions = XmlOptions()): Dataset[String] = encoded(df, opts)
 
   /** `xml.go:67-130`: declaration + `<data>` written lazily with the
-    * first kept row; zero kept rows → EMPTY output. */
-  private val frame = Frame(Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n")
-
-  def contentIterator(df: DataFrame, opts: XmlOptions): Iterator[String] =
-    opts.preProcessor.fold(SinkIO.stream(frame, opts.limit, rows(df, opts))) { hook =>
-      val names = df.schema.fieldNames.toIndexedSeq
-      SinkIO.hooked(frame, opts.limit, SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers),
-        "", hook) { (cells, row) =>
-        // NULL-omission follows the ORIGINAL null mask even if the
-        // preprocessor rewrote the cell (`xml.go:94-96,113-115`)
-        Format.xmlRow(names, row.zipWithIndex.map { case (s, i) => if (cells(i) == null) null else s })
-      }
-    }
+    * first kept row; zero kept rows → EMPTY output. NULL elements stay
+    * omitted even where a hook rewrote the cell (`xml.go:94-96,113-115`). */
+  protected def format(df: DataFrame, opts: XmlOptions): CellFormat = {
+    val names = df.schema.fieldNames.toIndexedSeq
+    CellFormat(Frame(Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n"), "",
+      (cells, row) => Format.xmlRow(names, cells, row))
+  }
 
   /** Distributed write WITH the reference's global framing — the same
     * [[Frame]] as [[contentIterator]] — via the DSv2
@@ -323,7 +334,7 @@ object XmlSink extends Codec(XmlOptions()) {
     * order (see DsvWriteSpec). Use this instead of `rows().write.text`
     * when the consumer expects a well-formed XML document. */
   def writeDirFramed(df: DataFrame, path: String, opts: XmlOptions = XmlOptions()): Unit =
-    SinkIO.writeFramed(rows(df, opts), path, frame)
+    SinkIO.writeFramed(rows(df, opts), path, format(df, opts).frame)
 }
 
 // ---------------------------------------------------------------------------
@@ -337,10 +348,9 @@ final case class HtmlOptions(
     nullValue: String = Format.htmlNullValue,
     limit: Int = -1,
     preProcessor: Option[PreProcessor] = None,
-    mappers: Mappers = Nil,
-    ctxMappers: CtxMappers = Nil)
+    mappers: Mappers = Nil) extends CellOptions
 
-object HtmlSink extends Codec(HtmlOptions()) {
+object HtmlSink extends CellCodec(HtmlOptions()) {
 
   /** `<thead>` block with per-column name + lowercased type
     * (`html.go:102-110`). The reference shows the SOURCE database's type
@@ -357,32 +367,20 @@ object HtmlSink extends Codec(HtmlOptions()) {
   }
 
   /** Distributed `<tr>` fragments (NULL → nullValue markup, raw cells). */
-  def rows(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Dataset[String] = {
-    require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
-    import SinkIO.stringEnc
-    val nv = opts.nullValue
-    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers, opts.ctxMappers)
-      .map(cells => Format.htmlRow(cells.toIndexedSeq.map(c => if (c == null) nv else c)))
-  }
+  def rows(df: DataFrame, opts: HtmlOptions = HtmlOptions()): Dataset[String] = encoded(df, opts)
 
   /** `html.go:96-171`: `<tbody>` opens with the first kept row. The
     * header is eager (written for zero rows too, then closed by the
     * table closers alone) or lazy (written with the first kept row) —
     * HTML is the one codec whose empty output can be non-empty. */
-  private def frame(df: DataFrame, opts: HtmlOptions): Frame = {
+  protected def format(df: DataFrame, opts: HtmlOptions): CellFormat = {
     val header = if (opts.writeHeader && df.schema.nonEmpty) headerBlock(df) else ""
     val close = "</tbody></table></body></html>"
-    if (opts.writeHeaderWhenNoData && header.nonEmpty)
-      Frame("<tbody>", "", close, "</table></body></html>", head = header)
-    else Frame(header + "<tbody>", "", close)
-  }
-
-  def contentIterator(df: DataFrame, opts: HtmlOptions): Iterator[String] = {
-    val f = frame(df, opts)
-    opts.preProcessor.fold(SinkIO.stream(f, opts.limit, rows(df, opts))) { hook =>
-      SinkIO.hooked(f, opts.limit, SinkIO.renderedRows(df, opts.mappers, opts.ctxMappers),
-        opts.nullValue, hook)((_, row) => Format.htmlRow(row))
-    }
+    CellFormat(
+      if (opts.writeHeaderWhenNoData && header.nonEmpty)
+        Frame("<tbody>", "", close, "</table></body></html>", head = header)
+      else Frame(header + "<tbody>", "", close),
+      opts.nullValue, (_, row) => Format.htmlRow(row))
   }
 
   /** Distributed write WITH the reference's whole-document framing —
@@ -392,5 +390,5 @@ object HtmlSink extends Codec(HtmlOptions()) {
     * order are byte-identical to [[writeString]] when partition order is
     * global order (DsvWriteSpec). */
   def writeDirFramed(df: DataFrame, path: String, opts: HtmlOptions = HtmlOptions()): Unit =
-    SinkIO.writeFramed(rows(df, opts), path, frame(df, opts))
+    SinkIO.writeFramed(rows(df, opts), path, format(df, opts).frame)
 }

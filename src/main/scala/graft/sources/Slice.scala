@@ -74,7 +74,7 @@ object Slice {
     * The source's own column type names (`sql.ColumnType.DatabaseTypeName`)
     * and the driver tag are attached to each `StructField.metadata` under
     * [[SourceMeta]]'s keys, so downstream consumers (the HTML typed
-    * header, context-aware mappers) can surface source-level context the
+    * header, the codecs' mappers) can surface source-level context the
     * Spark type alone loses. Resolution uses `PreparedStatement
     * .getMetaData` — schema only, the query is never executed twice —
     * but it does open a SECOND connection; pass `sourceMeta = false`

@@ -343,9 +343,54 @@ class SinkSpec extends SparkTestBase {
     import org.apache.spark.sql.types.IntegerType
     val df = Slice.fromData(spark, Seq(Seq(7, "x")))
     val out = CsvSink.writeString(df, CsvOptions(writeHeader = false,
-      mappers = Seq(IntegerType -> ((c: org.apache.spark.sql.Column) =>
-        concat(lit("int:"), c.cast("string"))))))
+      mappers = Seq(IntegerType -> ((_: graft.functions.Render.MapperContext,
+        c: org.apache.spark.sql.Column) => concat(lit("int:"), c.cast("string"))))))
     assert(out == "int:7,x\n")
+  }
+
+  test("a context mapper reaches every codec's cells, with and without a hook") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.IntegerType
+    import graft.functions.Render.MapperContext
+    val df = Slice.fromData(spark, Seq(Seq(1, "a"), Seq(2, null)))
+    val m: SinkTypes.Mappers = Seq(IntegerType -> ((ctx: MapperContext, c: Column) =>
+      concat(lit(s"<${ctx.driver}/${ctx.columnName}>"), c.cast("string"))))
+    val keep: SinkTypes.PreProcessor = (_, row) => (row, true)
+
+    val csv = CsvSink.writeString(df, CsvOptions(mappers = m))
+    assert(csv == "column_0,column_1\n<spark/column_0>1,a\n<spark/column_0>2,\n", csv)
+    assert(CsvSink.writeString(df, CsvOptions(mappers = m, preProcessor = Some(keep))) == csv)
+    assert(CsvSink.lines(df, CsvOptions(mappers = m)).collect().toSeq ==
+      Seq("<spark/column_0>1,a", "<spark/column_0>2,"))
+
+    val html = HtmlSink.writeString(df, HtmlOptions(mappers = m))
+    assert(html.contains("<tr><td><spark/column_0>1</td><td>a</td></tr>"), html)
+    assert(html.contains(s"<tr><td><spark/column_0>2</td><td>${HtmlOptions().nullValue}</td></tr>"), html)
+    assert(HtmlSink.writeString(df, HtmlOptions(mappers = m, preProcessor = Some(keep))) == html)
+
+    val xml = XmlSink.writeString(df, XmlOptions(mappers = m))
+    assert(xml.contains("<row><column_0>&lt;spark/column_0&gt;1</column_0><column_1>a</column_1></row>"), xml)
+    assert(xml.contains("<row><column_0>&lt;spark/column_0&gt;2</column_0></row>"), xml)
+    assert(XmlSink.writeString(df, XmlOptions(mappers = m, preProcessor = Some(keep))) == xml)
+
+    // JSON: the distributed objects and the map hook emit the same bytes
+    for (nd <- Seq(true, false)) {
+      val plain = JsonSink.writeString(df, JsonOptions(newlineDelimited = nd, mappers = m))
+      val hooked = JsonSink.writeString(df, JsonOptions(newlineDelimited = nd, mappers = m,
+        preProcessor = Some((_, row) => (row, true))))
+      assert(plain.contains("\"column_0\":\"\\u003cspark/column_0\\u003e1\""), plain)
+      assert(hooked == plain, s"newlineDelimited=$nd hooked=$hooked plain=$plain")
+    }
+  }
+
+  test("csv: writeDir keeps cells' leading and trailing whitespace") {
+    val df = Slice.fromData(spark, Seq(Seq(" lead", "trail "), Seq(" both ", "none")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ws").toString + "/csv"
+    CsvSink.writeDir(df, dir)
+    val back = spark.read.option("header", "true").csv(dir).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(back == Set((" lead", "trail "), (" both ", "none")), back)
   }
 
   // ---- exporter facade (exporter.go:17-48) ----

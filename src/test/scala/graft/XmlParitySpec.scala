@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Render.MapperContext
 import graft.sinks.{XmlOptions, XmlSink}
 import graft.sources.Slice
 
@@ -15,8 +16,8 @@ class XmlParitySpec extends SparkTestBase {
   // xml_test.go:27-54 — custom type mapper applied (int → "custom:42")
   test("custom type mapper applied to int column") {
     val df = Slice.fromData(spark, Seq(Seq(42)))
-    val mapper: (DataType, Column => Column) =
-      IntegerType -> ((c: Column) => concat(lit("custom:"), c.cast(StringType)))
+    val mapper: (DataType, (MapperContext, Column) => Column) =
+      IntegerType -> ((_: MapperContext, c: Column) => concat(lit("custom:"), c.cast(StringType)))
     val out = XmlSink.writeString(df, XmlOptions(mappers = Seq(mapper)))
     assert(out.contains("custom:42"), out)
   }
@@ -75,8 +76,8 @@ class XmlParitySpec extends SparkTestBase {
 
   // xml_test.go:186-230 — NULL / custom / default toString paths
   test("toString paths: custom string mapper and default conversion") {
-    val custom: (DataType, Column => Column) =
-      StringType -> ((c: Column) => concat(lit("CUSTOM:"), c))
+    val custom: (DataType, (MapperContext, Column) => Column) =
+      StringType -> ((_: MapperContext, c: Column) => concat(lit("CUSTOM:"), c))
     val out = XmlSink.writeString(
       Slice.fromData(spark, Seq(Seq("test"))),
       XmlOptions(mappers = Seq(custom)))
@@ -87,30 +88,16 @@ class XmlParitySpec extends SparkTestBase {
   }
 
   // scanner.go:27-31 — the mapper Metadata surface: plan-time context
-  // (column name + driver) reaches a context-aware mapper; RowID stays a
-  // driver-path PreProcessor concept (SURVEY §1)
+  // (column name + driver) reaches the mapper; RowID stays a driver-path
+  // PreProcessor concept (SURVEY §1)
   test("context mapper receives column name and driver") {
-    import graft.functions.Render.MapperContext
     val df = Slice.fromData(spark, Seq(Seq(1, 2)))
     val ctxMapper: (DataType, (MapperContext, Column) => Column) =
       IntegerType -> ((ctx: MapperContext, c: Column) =>
         concat(lit(s"${ctx.driver}/${ctx.columnName}="), c.cast(StringType)))
-    val out = XmlSink.writeString(df, XmlOptions(ctxMappers = Seq(ctxMapper)))
+    val out = XmlSink.writeString(df, XmlOptions(mappers = Seq(ctxMapper)))
     assert(out.contains("<column_0>spark/column_0=1</column_0>"), out)
     assert(out.contains("<column_1>spark/column_1=2</column_1>"), out)
-  }
-
-  // context mappers take precedence over plain mappers on a type clash
-  test("context mapper wins over plain mapper for the same type") {
-    import graft.functions.Render.MapperContext
-    val df = Slice.fromData(spark, Seq(Seq(7)))
-    val plain: (DataType, Column => Column) =
-      IntegerType -> ((c: Column) => lit("plain"))
-    val ctx: (DataType, (MapperContext, Column) => Column) =
-      IntegerType -> ((_: MapperContext, _: Column) => lit("ctx"))
-    val out = XmlSink.writeString(df,
-      XmlOptions(mappers = Seq(plain), ctxMappers = Seq(ctx)))
-    assert(out.contains("<column_0>ctx</column_0>"), out)
   }
 
   // xml_test.go preprocessor + null interplay (xml.go:94-96): a NULL cell
