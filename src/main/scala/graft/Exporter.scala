@@ -27,9 +27,11 @@ object Exporter {
     def writeString: String = content().mkString
 
     /** Streams the chunks to a single local file — the `exporter.WriteFile`
-      * coordinator (`exporter.go:36-48`): one writer, constant memory. */
+      * coordinator (`exporter.go:36-48`): one writer, constant memory,
+      * UTF-8 whatever the JVM's default charset. */
     def writeFile(path: String): Unit = {
-      val w = new java.io.BufferedWriter(new java.io.FileWriter(path), 1 << 16)
+      val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+        new java.io.FileOutputStream(path), java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
       try content().foreach(w.write) finally w.close()
     }
   }

@@ -233,39 +233,65 @@ case class GoRfc3339Nano(child: Expression, zeroIsNull: Boolean,
   override protected def withNewChildInternal(c: Expression): GoRfc3339Nano = copy(child = c)
 }
 
-/** The `<>&` escape of Go's std JSON encoder (`json.go:108-130`) as one
-  * pass over UTF-8 bytes: `&` → `\u0026`, `<` → `\u003c`, `>` → `\u003e`.
-  * Applied to `to_json` output, where `<>&` only occur inside strings, and
-  * where every multi-byte UTF-8 unit is ≥ 0x80, so a byte test suffices. */
+/** Go's std JSON string escape (`json.go:108-130`) applied to `to_json`
+  * output as one pass over UTF-8 bytes: `&` → `\u0026`, `<` → `\u003c`,
+  * `>` → `\u003e`, and the control characters Jackson escapes its own way
+  * as Go does: `\b` → `\u0008`, `\f` → `\u000c`, and the hex digits of
+  * every `\u` escape lowercased. `<>&` only occur inside strings, every
+  * multi-byte UTF-8 unit is ≥ 0x80, and an escape is a backslash and the
+  * byte after it, so `\\b` (an escaped backslash, then `b`) stays as is. */
 object GoJsonEscape {
-  // called from generated Java; a string with nothing to escape comes back as is
+  // called from generated Java; a string with nothing to rewrite comes back as is
   def escapeHtml(s: UTF8String): UTF8String = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
-    var hits = 0
+    def at(i: Int): Byte = Platform.getByte(base, off + i)
+    var grow = 0
+    var changed = false
     var i = 0
     while (i < n) {
-      val c = Platform.getByte(base, off + i)
-      if (c == '<' || c == '>' || c == '&') hits += 1
-      i += 1
+      val c = at(i)
+      if (c == '<' || c == '>' || c == '&') { grow += 5; changed = true; i += 1 }
+      else if (c == '\\' && i + 1 < n) {
+        val e = at(i + 1)
+        i += 2
+        if (e == 'b' || e == 'f') { grow += 4; changed = true }
+        else if (e == 'u') {
+          val end = math.min(i + 4, n)
+          while (i < end) { if (at(i) >= 'A' && at(i) <= 'F') changed = true; i += 1 }
+        }
+      } else i += 1
     }
-    if (hits == 0) return s
-    val out = new Array[Byte](n + 5 * hits)
+    if (!changed) return s
+    val out = new Array[Byte](n + grow)
+    def unicode(j: Int, hi: Char, lo: Char): Unit = {
+      out(j) = '\\'; out(j + 1) = 'u'; out(j + 2) = '0'; out(j + 3) = '0'
+      out(j + 4) = hi.toByte; out(j + 5) = lo.toByte
+    }
     var j = 0
     i = 0
     while (i < n) {
-      val c = Platform.getByte(base, off + i)
+      val c = at(i)
       if (c == '<' || c == '>' || c == '&') {
-        out(j) = '\\'; out(j + 1) = 'u'; out(j + 2) = '0'; out(j + 3) = '0'
-        out(j + 4) = (if (c == '&') '2' else '3').toByte
-        out(j + 5) = (if (c == '&') '6' else if (c == '<') 'c' else 'e').toByte
-        j += 6
-      } else {
-        out(j) = c
-        j += 1
-      }
-      i += 1
+        unicode(j, if (c == '&') '2' else '3', if (c == '&') '6' else if (c == '<') 'c' else 'e')
+        i += 1; j += 6
+      } else if (c == '\\' && i + 1 < n) {
+        val e = at(i + 1)
+        i += 2
+        if (e == 'b' || e == 'f') { unicode(j, '0', if (e == 'b') '8' else 'c'); j += 6 }
+        else {
+          out(j) = c; out(j + 1) = e; j += 2
+          if (e == 'u') {
+            val end = math.min(i + 4, n)
+            while (i < end) {
+              val h = at(i)
+              out(j) = if (h >= 'A' && h <= 'F') (h + ('a' - 'A')).toByte else h
+              i += 1; j += 1
+            }
+          }
+        }
+      } else { out(j) = c; i += 1; j += 1 }
     }
     UTF8String.fromBytes(out)
   }
@@ -323,7 +349,7 @@ object Render {
   def rfc3339NanoRaw(c: Column): Column =
     ColumnBridge.column(GoRfc3339Nano(ColumnBridge.expression(c), zeroIsNull = false))
 
-  /** Go's std JSON `<>&` escape over JSON text ([[GoJsonEscape]]). */
+  /** Go's std JSON string escape over `to_json` text ([[GoJsonEscape]]). */
   def jsonHtmlEscape(c: Column): Column =
     ColumnBridge.column(GoJsonHtmlEscape(ColumnBridge.expression(c)))
 

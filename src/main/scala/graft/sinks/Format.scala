@@ -58,7 +58,9 @@ object Format {
     fields.map(csvField(_, delimiter, useCRLF)).mkString(delimiter.toString)
 
   /** Go `xml.EscapeText` on a valid-UTF-8 string: the five XML specials
-    * plus tab/LF/CR as character references (`xml.go:118`). */
+    * plus tab/LF/CR as character references (`xml.go:118`), and U+FFFD for
+    * every other character outside XML's Char production (the C0 controls,
+    * U+FFFE and U+FFFF). */
   def xmlEscape(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     var i = 0
@@ -72,6 +74,7 @@ object Format {
         case '\t' => sb.append("&#x9;")
         case '\n' => sb.append("&#xA;")
         case '\r' => sb.append("&#xD;")
+        case c if c < ' ' || c >= '\uFFFE' => sb.append('\uFFFD')
         case c    => sb.append(c)
       }
       i += 1

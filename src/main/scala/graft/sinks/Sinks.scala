@@ -4,6 +4,7 @@ import scala.collection.AbstractIterator
 import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
@@ -92,6 +93,33 @@ private[graft] object SinkIO {
   /** Pre-encoded rows of a distributed row builder, framed on the driver. */
   def stream(frame: Frame, limit: Int, rows: => Dataset[String]): Iterator[String] =
     stream(frame, limit, rows.toLocalIterator().asScala)((_, s) => Some(s))
+
+  /** Distributed write of pre-encoded rows of a line format
+    * (`sep == close`) through Spark's text writer: each partition with
+    * rows becomes one part file, `head + open` and then every row followed
+    * by `sep`. When no part file holds a byte, `head + empty` is written
+    * as the only one — Spark writes one empty file also for a plan with
+    * no partitions, where it runs none of these tasks. */
+  def writeParts(rows: Dataset[String], path: String, frame: Frame): Unit = {
+    require(frame.sep == frame.close, "writeParts serves line formats (sep == close)")
+    val first = frame.head + frame.open
+    val framed = if (first.isEmpty) rows else rows.mapPartitions { it =>
+      if (it.hasNext) Iterator.single(first + it.next()) ++ it else it
+    }
+    // one file per partition even where the session caps records per file:
+    // a continuation file would lack `head + open`
+    framed.write.option("lineSep", frame.sep).option("maxRecordsPerFile", 0L)
+      .mode("overwrite").text(path)
+    val none = frame.head + frame.empty
+    if (none.nonEmpty) {
+      val fs = new Path(path).getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+      val parts = fs.globStatus(new Path(path, "part-*"))
+      if (parts.forall(_.getLen == 0)) {
+        val out = fs.create(parts.head.getPath, true)
+        try out.write(none.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+      }
+    }
+  }
 
   /** Distributed write of pre-encoded rows under `frame`, via the DSv2
     * [[graft.sinks.v2.FramedTextSink]] commit. */
@@ -190,44 +218,29 @@ final case class CsvOptions(
 
 object CsvSink extends CellCodec(CsvOptions()) {
 
-  /** Header row (custom header validated for arity exactly like
-    * `csv.go:134-139`). */
-  def header(df: DataFrame, opts: CsvOptions): Seq[String] =
-    SinkIO.checkedHeader(df, opts.customHeader.getOrElse(df.schema.fieldNames.toSeq))
-
   /** Distributed CSV records (no header, no EOL). */
   def lines(df: DataFrame, opts: CsvOptions): Dataset[String] = encoded(df, opts)
 
   /** `csv.go:124-190`: the header line is eager (written for zero rows
     * too, `csv.go:147-151`) or lazy (written with the first kept row,
-    * `csv.go:175-179`); every record ends in the EOL. */
+    * `csv.go:175-179`); every record ends in the EOL. A custom header is
+    * checked for arity like `csv.go:134-139`. */
   protected def format(df: DataFrame, opts: CsvOptions): CellFormat = {
-    val (d, crlf, eol, hdr) = (opts.delimiter, opts.useCRLF, opts.eol, header(df, opts))
+    val (d, crlf, eol) = (opts.delimiter, opts.useCRLF, opts.eol)
+    val hdr = SinkIO.checkedHeader(df, opts.customHeader.getOrElse(df.schema.fieldNames.toSeq))
     val line = if (opts.writeHeader && hdr.nonEmpty) Format.csvLine(hdr.toIndexedSeq, d, crlf) + eol else ""
     CellFormat(
       if (opts.writeHeaderWhenNoData) Frame("", eol, eol, head = line) else Frame(line, eol, eol),
       opts.nullValue, (_, row) => Format.csvLine(row, d, crlf))
   }
 
-  /** Distributed directory write via Spark's native CSV writer — the
-    * scale path (header per part-file, quote-doubling like Go). Cells are
-    * written as rendered: Spark's writer would otherwise trim their
-    * leading and trailing whitespace. */
-  def writeDir(df: DataFrame, path: String, opts: CsvOptions = CsvOptions()): Unit = {
-    require(opts.preProcessor.isEmpty, "use ops.Pipeline for distributed writes")
-    val limited = SinkIO.limited(df, opts.limit)
-    val named = if (opts.customHeader.isDefined) limited.toDF(header(df, opts): _*) else limited
-    Render.renderAll(named, opts.mappers).write
-      .option("header", opts.writeHeader.toString)
-      .option("sep", opts.delimiter.toString)
-      .option("lineSep", opts.eol)
-      .option("nullValue", opts.nullValue)
-      .option("emptyValue", "")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .option("quote", "\"").option("escape", "\"")
-      .mode("overwrite").csv(path)
-  }
+  /** Distributed directory write ([[SinkIO.writeParts]]) with the one CSV
+    * encoder: each part file with rows is [[writeString]] of its
+    * partition's rows, header included, so the directory reads back file
+    * by file with Spark's CSV reader; a zero-row input leaves exactly the
+    * zero-row [[writeString]] (the header line when eager, else nothing). */
+  def writeDir(df: DataFrame, path: String, opts: CsvOptions = CsvOptions()): Unit =
+    SinkIO.writeParts(lines(df, opts), path, format(df, opts).frame)
 }
 
 // ---------------------------------------------------------------------------
@@ -268,18 +281,21 @@ object JsonSink extends Codec(JsonOptions()) {
       }.as(f.name)
     }
     val j = to_json(struct(cols.toIndexedSeq: _*), Map("ignoreNullFields" -> "false"))
-    // `<>&` never appear structurally in JSON, so a global escape only
-    // touches string contents — matching the reference encoder exactly
+    // `<>&` and backslash escapes only occur inside JSON strings, so a
+    // global rewrite only touches string contents — matching the reference
+    // encoder exactly
     limited.select(Render.jsonHtmlEscape(j).as("j")).as[String]
   }
 
   /** Array mode (`json.go:94-98,135-147`) opens `[` lazily with the
     * first row, so zero rows → EMPTY output, not `[]`. The graft-framed
-    * sink defaults to it. */
+    * sink defaults to it. NDJSON mode (`json.go:51-55,144-147`) is one
+    * object per line. */
   private[sinks] val arrayFrame = Frame("[\n", ",\n", "\n]\n")
+  private[sinks] val ndjsonFrame = Frame("", "\n", "\n")
 
   def contentIterator(df: DataFrame, opts: JsonOptions): Iterator[String] = {
-    val frame = if (opts.newlineDelimited) Frame("", "\n", "\n") else arrayFrame
+    val frame = if (opts.newlineDelimited) ndjsonFrame else arrayFrame
     opts.preProcessor.fold(SinkIO.stream(frame, opts.limit, objects(df, opts))) { hook =>
       // the map hook sees native values; custom mappers apply BEFORE it,
       // like `json.go:111-128`; GoJson serializes std-compatibly
@@ -296,9 +312,11 @@ object JsonSink extends Codec(JsonOptions()) {
     }
   }
 
-  /** Distributed NDJSON directory write — the scale path. */
+  /** Distributed directory write ([[SinkIO.writeParts]]), NDJSON whatever
+    * `newlineDelimited` says: each part file with rows is the NDJSON
+    * [[writeString]] of its partition's rows; zero rows leave no bytes. */
   def writeDir(df: DataFrame, path: String, opts: JsonOptions = JsonOptions()): Unit =
-    objects(df, opts).write.mode("overwrite").text(path)
+    SinkIO.writeParts(objects(df, opts), path, ndjsonFrame)
 }
 
 // ---------------------------------------------------------------------------

@@ -139,7 +139,7 @@ object FormatProps extends Properties("graft.format") {
   private val jsonTextGen: Gen[String] = Gen.listOf(Gen.frequency(
     6 -> Gen.alphaNumChar.map(_.toString),
     3 -> Gen.oneOf("<", ">", "&"),
-    2 -> Gen.oneOf("\"", "\\", "\\u0026", ":", ","),
+    2 -> Gen.oneOf("\"", "\\\\", "\\u0026", ":", ","),
     2 -> Gen.oneOf("é", "€", "\u00a0", "😀"))).map(_.mkString)
 
   /** `s`'s UTF-8 bytes inside a larger buffer: a string that does not

@@ -228,6 +228,16 @@ class SinkSpec extends SparkTestBase {
     assert(JsonSink.writeString(df, JsonOptions(newlineDelimited = true)) == want)
     assert(JsonSink.writeString(df, JsonOptions(newlineDelimited = true,
       preProcessor = Some((_, r) => (r, true)))) == want)
+
+    // control characters: `\u00` plus lowercase hex except \n, \r, \t;
+    // an escaped backslash before `b` stays a backslash and a `b`
+    val ctl = Slice.fromData(spark, Seq(Seq(
+      "a\bb\fc\u000By\u001Bz \u0000\u0001\u000E\u000F\u0010\u001A\u001C\u001D\u001E\u001F \\b\\f")))
+    val wantCtl = "{\"column_0\":\"a\\u0008b\\u000cc\\u000by\\u001bz " +
+      "\\u0000\\u0001\\u000e\\u000f\\u0010\\u001a\\u001c\\u001d\\u001e\\u001f \\\\b\\\\f\"}\n"
+    assert(JsonSink.writeString(ctl, JsonOptions(newlineDelimited = true)) == wantCtl)
+    assert(JsonSink.writeString(ctl, JsonOptions(newlineDelimited = true,
+      preProcessor = Some((_, r) => (r, true)))) == wantCtl)
   }
 
   test("json: objects escapes <>& byte for byte beside quotes and multibyte UTF-8") {
@@ -314,6 +324,17 @@ class SinkSpec extends SparkTestBase {
     assert(content == CsvSink.writeString(df3))
   }
 
+  test("writeFile: every codec writes UTF-8 whatever the JVM's default charset") {
+    val df = Slice.fromData(spark, Seq(Seq("é", "日本", "😀")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_utf8").toString
+    val e = graft.Exporter(df)
+    for ((name, bound) <- Seq("csv" -> e.csv(), "json" -> e.json(), "xml" -> e.xml(), "html" -> e.html())) {
+      bound.writeFile(s"$dir/out.$name")
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out.$name"))
+      assert(bytes.sameElements(bound.writeString.getBytes("UTF-8")), name)
+    }
+  }
+
   test("csv quoting round-trips through Spark's own CSV reader") {
     val nasty = Slice.fromData(spark, Seq(
       Seq("plain", "a,b", "say \"hi\""),
@@ -393,6 +414,47 @@ class SinkSpec extends SparkTestBase {
     assert(back == Set((" lead", "trail "), (" both ", "none")), back)
   }
 
+  test("csv: writeDir part files hold writeString's bytes, Go quoting included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import DsvWriteSpec.outDir
+    val rnd = new scala.util.Random(20261018)
+    val tokens = IndexedSeq(" ", "\t", "\u00A0", "\u0085", "\"", ",", ";", "\r", "\n",
+      "\r\n", "\"\"", "x", "ab", "é", "\\")
+    def cell(): String = rnd.nextInt(10) match {
+      case 0 => null
+      case 1 => "\\."
+      case 2 => ""
+      case 3 => "\"\""
+      case _ => Seq.fill(1 + rnd.nextInt(4))(tokens(rnd.nextInt(tokens.length))).mkString
+    }
+    val rows = (0 until 40).map(i => Row(i, cell(), cell(), cell()))
+    val schema = StructType(StructField("id", IntegerType) +:
+      Seq("a", "b", "c").map(StructField(_, StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val one = df.coalesce(1)
+    val four = df.repartitionByRange(4, col("id")).sortWithinPartitions("id")
+    def parts(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+        .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toSeq
+    for (d <- Seq(',', ';'); crlf <- Seq(false, true)) {
+      val opts = CsvOptions(delimiter = d, useCRLF = crlf, nullValue = " N,A;")
+      val tag = s"${if (d == ',') "comma" else "semi"}_$crlf"
+      val header = Format.csvLine(schema.fieldNames.toIndexedSeq, d, crlf) + opts.eol
+      CsvSink.writeDir(one, outDir(s"go_one_$tag"), opts)
+      assert(parts(outDir(s"go_one_$tag")) == Seq(CsvSink.writeString(one, opts)), tag)
+      // a session cap on records per file must not split a partition's file
+      withConf("spark.sql.files.maxRecordsPerFile" -> "3") {
+        CsvSink.writeDir(four, outDir(s"go_four_$tag"), opts)
+      }
+      val files = parts(outDir(s"go_four_$tag"))
+      assert(files.length == 4 && files.forall(_.startsWith(header)), tag)
+      assert((files.head +: files.tail.map(_.stripPrefix(header))).mkString ==
+        CsvSink.writeString(four, opts), tag)
+    }
+  }
+
   // ---- exporter facade (exporter.go:17-48) ----
 
   test("Exporter facade: codec binding + writeString/writeFile") {
@@ -463,6 +525,21 @@ class SinkSpec extends SparkTestBase {
       assert(concatenated(dir) == HtmlSink.writeString(df3,
         HtmlOptions(writeHeaderWhenNoData = eager, preProcessor = Some(dropAll))), s"html eager=$eager")
     }
+    // ... and so do the part-file writers, also where the plan has no
+    // partitions at all
+    for ((how, src, limit) <- Seq(("filter", none, -1), ("limit0", df3, 0))) {
+      for (eager <- Seq(true, false)) {
+        val dir = outDir(s"law_csv_${how}_$eager")
+        val opts = CsvOptions(writeHeaderWhenNoData = eager, limit = limit)
+        CsvSink.writeDir(src, dir, opts)
+        assert(concatenated(dir) == CsvSink.writeString(src, opts), s"csv $how eager=$eager")
+      }
+      val dir = outDir(s"law_ndjson_$how")
+      val opts = JsonOptions(newlineDelimited = true, limit = limit)
+      JsonSink.writeDir(src, dir, opts)
+      assert(concatenated(dir) == JsonSink.writeString(src, opts), s"ndjson $how")
+    }
+    assert(CsvSink.writeString(none) == "column_0,column_1\n")
   }
 
   test("csv and html: the first chunk is the eager header, produced without reading the source") {

@@ -100,6 +100,18 @@ class XmlParitySpec extends SparkTestBase {
     assert(out.contains("<column_1>spark/column_1=2</column_1>"), out)
   }
 
+  // xml.EscapeText writes U+FFFD for every rune outside XML's Char
+  // production, so the document stays well-formed
+  test("control characters become U+FFFD and the output parses") {
+    val bad = Seq('\u0000', '\u0001', '\u0008', '\u000B', '\u001F', '\uFFFE')
+    val cell = bad.mkString("a", "b", "c") + "\t\n\r"
+    val out = XmlSink.writeString(Slice.fromData(spark, Seq(Seq(cell))))
+    val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance().newDocumentBuilder()
+      .parse(new java.io.ByteArrayInputStream(out.getBytes("UTF-8")))
+    assert(doc.getElementsByTagName("column_0").item(0).getTextContent ==
+      cell.map(c => if (bad.contains(c)) '\uFFFD' else c))
+  }
+
   // xml_test.go preprocessor + null interplay (xml.go:94-96): a NULL cell
   // stays omitted even if the preprocessor rewrites the row
   test("preprocessor rewrite does not resurrect NULL cells") {
