@@ -172,21 +172,24 @@ object CountMin {
   * yields BOTH the exact group count `n` AND the complete sorted member
   * list for under-cap groups, so the bucket machinery's old two-pass
   * shape (a df count pass + left-anti hot-drop + a second full shuffle
-  * into collect_list) collapses to ONE exchange of capped partial
-  * buffers.
+  * into collect_list) collapses to ONE exchange.
   *
   * Memory contract — the reason the two-pass shape existed: a
   * degenerate key ("all rights reserved" at corpus scale) must not grow
   * an unbounded collect_list buffer on its reducer. Here the buffer
   * stops accumulating the moment its count exceeds `cap` (the list is
   * dropped, only the exact count keeps counting), so per-group state is
-  * bounded by cap longs at every stage — map-side partials included —
-  * which is strictly tighter than the old shape's post-filter
-  * collect_list. Callers drop over-cap groups on `n > cap` exactly like
-  * the old `df > maxDf` pre-filter + `size(ids) <= maxDf` post-filter
-  * pair, and under-cap groups were never trimmed, so their `ids` is the
-  * complete set — output is bit-identical to the two-pass form. Eval
-  * sorts the surviving ≤cap list (the old sort_array). */
+  * bounded by cap longs. That bounds memory, not the shuffle: `buckets`
+  * hash-partitions the raw `(key, doc_id)` rows before this aggregate,
+  * whose partial and final phases then both run behind that exchange —
+  * in effect complete mode — so no capped partial buffer crosses it.
+  *
+  * Counting law: only non-null ids count toward `n` (and enter the
+  * list), so `n` is `size(collect_list(id))`, not the group's row
+  * count; callers whose ids are non-null see the two agree. Callers
+  * drop over-cap groups on `n > cap`, and under-cap groups are never
+  * trimmed, so their `ids` is the complete set — the same list as
+  * `sort_array(collect_list(id))`. Eval sorts the surviving ≤cap list. */
 case class CappedCollectAgg(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
     cap: Int,
@@ -284,7 +287,7 @@ object CappedCollect {
   import org.apache.spark.sql.graft.ColumnBridge
 
   /** `capped_collect(id, cap) -> STRUCT<n: BIGINT, ids: ARRAY<BIGINT>>`:
-    * exact count + complete sorted member list iff n ≤ cap. */
+    * exact count of non-null ids + their complete sorted list iff n ≤ cap. */
   def apply(id: Column, cap: Int): Column =
     ColumnBridge.column(
       CappedCollectAgg(ColumnBridge.expression(id), cap).toAggregateExpression())

@@ -354,9 +354,11 @@ object Render {
     ColumnBridge.column(GoJsonHtmlEscape(ColumnBridge.expression(c)))
 
   /** JSON-rendered complex value with empty/null coercion
-    * (`tostring.go:79-83,91-95`). */
+    * (`tostring.go:79-83,91-95`), escaped as Go's `json.Marshal` writes
+    * it (`tostring.go:17,89-96`): `<>&` as `\u003c`/`\u003e`/`\u0026`,
+    * `\b`/`\f` and every `\u` escape in lowercase hex. */
   private def jsonRender(c: Column): Column = {
-    val j = to_json(c)
+    val j = jsonHtmlEscape(to_json(c))
     when(j.isin("[]", "{}", "null"), lit(null).cast(StringType)).otherwise(j)
   }
 

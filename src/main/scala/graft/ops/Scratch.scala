@@ -15,7 +15,7 @@ object Scratch {
     * artifacts then miss the cache by construction. (Bump it even for
     * WITHIN-session derivation changes: r13a briefly coexisted with two
     * generations of the knn layout and served the old one to 9 specs.) */
-  val Rev = "r14a"
+  val Rev = "r18a"
 
   /** 8-hex-digit md5 of `key` — the stable discriminator used in
     * scratch paths and per-source table names. */

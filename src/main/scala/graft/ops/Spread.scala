@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Rebalance a compact input across the cluster BEFORE a high-fan-out
   * operator (shingle/token explode expands a document corpus 100-1000×).
@@ -23,4 +23,23 @@ object Spread {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
+
+  /** Exchange `df` into the cluster's parallelism — hashed on `keys`, or
+    * round-robin when there are none — with a partition count AQE may
+    * not coalesce.
+    *
+    * AQE merges an exchange's partitions by SHUFFLE BYTES. That is wrong
+    * wherever the bytes are small but the stage fused behind the
+    * exchange is CPU-dense: a posting list's `(key, doc_id)` rows feed
+    * the bucket aggregate and the PairCombos pair explosion; a candidate
+    * probe set feeds VecDot scoring; a hot-shingle gather feeds the pair
+    * intersect. Coalesced, those stages ran on one to six tasks (d37 at
+    * sf1: 20 of 45 s on 6 tasks; d7's scoring: 662 ms on one task). An
+    * explicit partition count is exempt from coalescing, and a following
+    * `groupBy`/window on the same keys reuses the exchange. A persisted
+    * artifact written through it has one file per core, so its scans
+    * run at full width too (a coalesced 2-file shingle artifact scanned
+    * in 1.9 s on 2 tasks against 63 ms on 32). */
+  def pinned(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 }

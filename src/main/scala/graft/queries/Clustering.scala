@@ -341,10 +341,9 @@ object Clustering {
         val stage = graft.ops.Scratch.stageFor(tmp)
         cb.write.mode("overwrite").parquet(s"$stage/cb")
         asg.write.mode("overwrite").parquet(s"$stage/asg")
-        asg.groupBy(col("vec_id"))
-          .agg(expr("transform(array_sort(collect_list(struct(sub, cid))), s -> s.cid)")
-            .as("codes"))
-          .repartition(s.sparkContext.defaultParallelism)
+        graft.ops.Spread.pinned(asg.groupBy(col("vec_id"))
+            .agg(expr("transform(array_sort(collect_list(struct(sub, cid))), s -> s.cid)")
+              .as("codes")))
           .write.mode("overwrite").parquet(s"$stage/codes")
         java.nio.file.Files.createFile(
           java.nio.file.Paths.get(stage, "_SUCCESS"))
@@ -637,8 +636,7 @@ object Clustering {
       val capped = graft.plans.TopK.perKey(home, keys = Seq($"cid"),
         order = Seq($"vec_id".asc),
         k = graft.queries.LlmPipeline.MaxBucketSize)
-      val cands = probes
-        .repartition(s.sparkContext.defaultParallelism, $"vec_id").as("p")
+      val cands = graft.ops.Spread.pinned(probes, $"vec_id").as("p")
         .join(broadcast(capped.as("c")),
           $"p.cid" === $"c.cid" && $"p.vec_id" =!= $"c.vec_id")
         .select($"p.vec_id".as("vec_id"), $"c.vec_id".as("cand"))

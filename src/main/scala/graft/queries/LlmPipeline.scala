@@ -121,18 +121,13 @@ object LlmPipeline {
       if (!java.nio.file.Files.exists(
           java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
         val stage = graft.ops.Scratch.stageFor(tmp)
-        shingleIndex(Tables.documents(s, dir))
+        val index = shingleIndex(Tables.documents(s, dir))
           .withColumn("xh",
             expr("CAST(conv(substr(md5(shingle), 1, 8), 16, 10) AS BIGINT)"))
           .withColumn("df", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))))
-          // explicit partition count: AQE coalesces the window's small
-          // exchange to 1-2 partitions, which would write a 1-2 file
-          // artifact and cap every consumer's SCAN parallelism at the
-          // file count (measured: d33's artifact scan 63 ms/32 tasks →
-          // 1.9 s/2 tasks). repartition(n) is exempt from coalescing.
-          .repartition(32)
-          .write.mode("overwrite").parquet(stage)
+        // one file per core, so every consumer scans at full width
+        graft.ops.Spread.pinned(index).write.mode("overwrite").parquet(stage)
         graft.ops.Scratch.publish(stage, tmp)
       }
     }
@@ -379,13 +374,6 @@ object LlmPipeline {
     // the centroid count grows ~sqrt(n) and nprobe stays a small
     // constant fraction of it)
     val probes = ranked.select($"vec_id", $"cid")
-    // Explicit repartition by query id before the scoring joins: the
-    // candidate set is byte-small but VecDot-heavy, so AQE's
-    // byte-based coalescing would collapse the exchange to ONE task
-    // and single-thread the whole exact-scoring pass (measured 662 ms
-    // of a 2.9 s run). An explicit partition count is exempt from AQE
-    // coalescing, and hash-by-vec_id is the clustering the per-query
-    // ranking needs anyway.
     // the capped inverted lists are size-bounded BY CONSTRUCTION
     // (centroids × MaxBucketSize rows), so they broadcast — the
     // candidate expansion then runs data-parallel over the probe
@@ -394,14 +382,14 @@ object LlmPipeline {
     // AQE's byte-based coalescing collapsed it to ONE task). When
     // centroid count outgrows the broadcast budget at extreme scale,
     // the same join runs as a salted shuffle (q44's pattern).
-    // The ONE explicit exchange — probes hashed by query id, with a
-    // fixed partition count so AQE's byte-based coalescing can't
-    // serialize this CPU-dense-per-byte pipeline — then carries the
-    // whole tail: hash(vec_id) satisfies the dedup's, the scoring
-    // joins' (e broadcasts) and the final top-1's clustering, so
-    // expansion → distinct → VecDot scoring → TopKPerKey all run in
-    // that same 32-task stage with no further shuffle.
-    val cands = probes.repartition(s.sparkContext.defaultParallelism, $"vec_id").as("p")
+    // The ONE explicit exchange — probes hashed by query id and pinned
+    // (graft.ops.Spread.pinned: the candidate set is byte-small but
+    // VecDot-heavy) — then carries the whole tail: hash(vec_id)
+    // satisfies the dedup's, the scoring joins' (e broadcasts) and the
+    // final top-1's clustering, so expansion → distinct → VecDot
+    // scoring → TopKPerKey all run in that one stage with no further
+    // shuffle.
+    val cands = graft.ops.Spread.pinned(probes, $"vec_id").as("p")
       .join(broadcast(cappedCells.as("c")),
         $"p.cid" === $"c.cid" && $"p.vec_id" =!= $"c.vec_id")
       .select($"p.vec_id".as("vec_id"), $"c.vec_id".as("cand")).distinct()
@@ -895,57 +883,62 @@ object LlmPipeline {
       .agg(simhash($"h").as("simhash"))
   }
 
-  /** Candidate pairs from an inverted index: drop hot keys (document
-    * frequency > maxDf) with an anti-join, then self-join inside the
-    * surviving key groups. Never all-pairs; never quadratic in a hot
-    * key. No broadcast hint on the hot set: its cardinality (number of
-    * distinct keys over the cap) is unbounded at 100 TB — common
-    * trigrams alone could blow a forced broadcast. AQE broadcasts it at
-    * runtime when it is actually small. */
-  /** Under-cap posting-list buckets of an inverted index, in ONE pass
-    * (opt r17, guide §2.4): [[graft.functions.CappedCollect]] yields the
-    * exact group count and the complete sorted member list for under-cap
-    * groups from a single exchange, replacing the old two-pass shape
-    * (df count pass + left-anti hot-drop + a second full shuffle into
-    * collect_list). The memory contract the two-pass shape existed for
-    * is preserved more tightly: a degenerate key ("all rights reserved"
-    * at corpus scale) stops accumulating list state the moment its
-    * count exceeds the cap — per-group buffers are bounded by cap longs
-    * at every stage, map-side partials included. `n > maxDf` is the
-    * same predicate as the old `df > maxDf` pre-filter, so output is
-    * bit-identical, and `index` is now consumed ONCE (callers no longer
-    * need to materialize upstream chains for double consumption). */
+  /** Under-cap posting-list buckets of an inverted index, the ONE bucket
+    * kernel of the near-dup family (d2, d3, d24, d32, d33, d37, d40, d42,
+    * `exactInterFor` and the shared-shingle graph edges): one row per
+    * key group of at most `maxDf` members, carrying `keys` and `ids`,
+    * the group's sorted `doc_id`s. A group over the cap (a boilerplate
+    * shingle, a degenerate band bucket) is dropped whole — the df cap,
+    * the family's heavy-hitter bound — so no bucket expands to more than
+    * maxDf·(maxDf-1)/2 pairs.
+    *
+    * Shape: [[graft.ops.Spread.pinned]] ships the raw `(key, doc_id)`
+    * postings through one exchange, and [[graft.functions.CappedCollect]]
+    * aggregates each group behind it; both aggregate phases run in that
+    * post-exchange stage, in effect complete mode. So the cap bounds the
+    * aggregate's memory (a hot group stops collecting once its count
+    * passes maxDf) but not the shuffle: a corpus-scale hot key still
+    * sends every one of its posting rows to one reducer.
+    *
+    * Precondition: `doc_id` is non-null. CappedCollect counts non-null
+    * ids only, so a group's count is `size(collect_list(doc_id))`, and
+    * on an input whose keys are all under the cap the output equals
+    * `sort_array(collect_list(doc_id))` per group. */
   def buckets(index: DataFrame, keys: Seq[String], maxDf: Int): DataFrame = {
     val kc = keys.map(col)
-    // explicit numPartitions on the bucket exchange: its shuffle BYTES
-    // are small (capped partial buffers), so AQE would coalesce it — but
-    // the stage it feeds carries the bucket buffers AND, fused directly
-    // behind them in every consumer, the PairCombos pair explosion. At
-    // sf1 that stage ran on 6 coalesced tasks for ~45% of d37's bill
-    // (r14 stage split); a user-specified partition count is exempt
-    // from AQE coalescing and the groupBy reuses it exchange-free.
-    index
-      .repartition(index.sparkSession.sparkContext.defaultParallelism, kc: _*)
+    graft.ops.Spread.pinned(index, kc: _*)
       .groupBy(kc: _*)
       .agg(graft.functions.CappedCollect(col("doc_id"), maxDf).as("cl"))
       .filter(col("cl.n") <= maxDf)
       .select((kc :+ col("cl.ids").as("ids")): _*)
   }
 
-  /** Candidate pairs (d1 < d2) expanded per bucket by the codegen'd
-    * [[graft.functions.PairCombos]] generator (bounded by the cap:
-    * at most maxDf·(maxDf-1)/2 pairs per bucket). */
-  def bucketPairs(b: DataFrame): DataFrame =
+  /** Candidate pairs (d1 < d2) of each bucket, expanded by the codegen'd
+    * [[graft.functions.PairCombos]] generator (bounded by the cap: at
+    * most maxDf·(maxDf-1)/2 pairs per bucket), with the bucket columns
+    * named in `carry` copied onto every pair (d33's `config`, d42's
+    * `df`, d43's width `w`). One row per shared bucket, so a count over
+    * (carry, d1, d2) is the pair's shared-key count. */
+  def bucketPairs(b: DataFrame, carry: String*): DataFrame = {
+    val cc = carry.map(col)
     b.filter(size(col("ids")) >= 2)
-      .select(explode(graft.functions.PairCombos(col("ids"))).as("p"))
-      .select(col("p.d1"), col("p.d2"))
+      .select(cc :+ explode(graft.functions.PairCombos(col("ids"))).as("p"): _*)
+      .select(cc ++ Seq(col("p.d1"), col("p.d2")): _*)
+  }
 
   def candidatePairs(index: DataFrame, keys: Seq[String], maxDf: Int): DataFrame =
     bucketPairs(buckets(index, keys, maxDf)).distinct()
 
-  /** [[candidatePairs]] carrying extra per-doc columns through the
-    * self-join as `d1_<c>` / `d2_<c>` — saves the two doc-keyed re-join
-    * shuffles a verify step would otherwise pay to recover them. */
+  /** Candidate pairs from an inverted index carrying extra per-doc
+    * columns through the self-join as `d1_<c>` / `d2_<c>` — saves the
+    * two doc-keyed re-join shuffles a verify step would otherwise pay
+    * to recover them. Hot keys (document frequency > maxDf) are dropped
+    * with an anti-join, then the self-join runs inside the surviving key
+    * groups: never all-pairs, never quadratic in a hot key. No broadcast
+    * hint on the hot set: its cardinality (number of distinct keys over
+    * the cap) is unbounded at 100 TB — common trigrams alone could blow
+    * a forced broadcast. AQE broadcasts it at runtime when it is
+    * actually small. */
   def candidatePairsWith(index: DataFrame, keys: Seq[String], maxDf: Int,
                          carry: Seq[String]): DataFrame = {
     val kc = keys.map(col)
@@ -962,88 +955,85 @@ object LlmPipeline {
     idx.as("a").join(idx.as("b"), joinCond).select(sel: _*).distinct()
   }
 
-  /** Near-dup pairs by exact word-shingle Jaccard ≥ threshold, candidates
-    * from the hot-capped inverted index. The self-join FUSES candidate
-    * generation with rare-intersection counting (`ri` = shared shingles
-    * among the df≤maxDf survivors), then prunes with a conservative upper
-    * bound before exact verification: the full intersection can exceed
-    * `ri` only via hot shingles BOTH docs contain, so
-    * `inter ≤ ri + min(h1, h2)` (h = per-doc hot-shingle count) and
-    * jaccard ≤ ub/(n1+n2−ub). Pairs whose bound is already below the
-    * threshold are provably non-matches — pruning them loses nothing,
-    * and it is what makes the exact verify affordable: of ~1.1M raw
-    * candidates at sf0.1, a few thousand survive to the verify joins. */
-  def nearDupJaccard(sh: DataFrame, maxDf: Int, threshold: Double): DataFrame = {
-    // CONTRACT (opt r16): `sh` carries corpus `df` — first-class
-    // metadata of the [[shingles]] artifact (tests attach it via
-    // [[withCorpusDf]]). The hot/cold split is then a pure projection
-    // of the scan: the old per-run df aggregation (a corpus-keyed
-    // shuffle), the flag join back onto the postings, and the
-    // corpus-volume localCheckpoint of the flagged list are all gone
-    // (guide §2.4 — remove shuffles outright; §6 — the artifact IS the
-    // materialization, each consumer re-scans parquet with column
-    // pruning instead of re-reading checkpoint blocks). df is
-    // STRING-grain like the oracle's HAVING COUNT(*) (the old hashed-
-    // grain recount was equal modulo 2⁻⁶⁴ collisions).
+  /** The prune of the hot-only verify, shared by d2, d24, d42 and d43:
+    * join each pair's shared under-cap count `ri` with both docs' stats
+    * from `st` — `n`, the full distinct-shingle count, and `h`, the
+    * hot-shingle count — as `na`/`nb` and `ha`/`hb`, set
+    * `ubi = ri + least(ha, hb)`, and keep the pairs `bound` admits. The
+    * full intersection exceeds `ri` only by hot shingles BOTH docs
+    * hold, so `inter ≤ ubi`; a bound monotone in the intersection that
+    * already fails at `ubi` fails at `inter`, and pruning loses nothing.
+    * `prefix` names key columns `ri` and `st` share (d43's width `w`):
+    * a pair is (prefix, d1, d2), a doc (prefix, doc_id). */
+  private def pairBound(ri: DataFrame, st: DataFrame, bound: Column,
+                        prefix: String*): DataFrame = {
+    def side(d: String, x: String) = st.select(prefix.map(col) ++ Seq(
+      col("doc_id").as(d), col("n").as(s"n$x"), col("h").as(s"h$x")): _*)
+    ri.join(side("d1", "a"), prefix :+ "d1")
+      .join(side("d2", "b"), prefix :+ "d2")
+      .withColumn("ubi", col("ri") + least(col("ha"), col("hb")))
+      .filter(bound)
+  }
+
+  /** The exact verify behind [[pairBound]], shared by d2, d24, d42 and
+    * d43: `ri` is already the EXACT count of shared under-cap shingles
+    * (every under-cap bucket survives the cap), so the only unknown is
+    * the HOT overlap. Gather each pruned pair's docs' hot shingles only
+    * — a handful per doc, where full sets are doc-length — from `hot`,
+    * the (prefix, doc_id, shingle) postings over the cap, and set
+    * inter = ri + |hotA ∩ hotB|; a doc without hot shingles has no
+    * list, and its overlap coalesces to 0. The gather is semi-joined to
+    * the pruned docs, so it is bounded by the prune output, never a
+    * corpus collect. Returns `pruned` with an `inter` column added. */
+  private def hotVerified(hot: DataFrame, pruned: DataFrame,
+                          prefix: String*): DataFrame = {
+    val key = prefix :+ "doc_id"
+    def ends(d: String) = pruned.select(prefix.map(col) :+ col(d).as("doc_id"): _*)
+    val hotSets = graft.ops.Spread.pinned(
+        hot.join(ends("d1").union(ends("d2")).distinct(), key, "left_semi"),
+        key.map(col): _*)
+      .groupBy(key.map(col): _*)
+      .agg(collect_list(col("shingle")).as("hs"))
+    def side(d: String, x: String) = hotSets.select(prefix.map(col) ++ Seq(
+      col("doc_id").as(d), col("hs").as(x)): _*)
+    pruned
+      .join(side("d1", "sa"), prefix :+ "d1", "left")
+      .join(side("d2", "sb"), prefix :+ "d2", "left")
+      .withColumn("inter", col("ri") +
+        coalesce(size(array_intersect(col("sa"), col("sb"))).cast("long"), lit(0L)))
+  }
+
+  /** d2/d24's candidate chain, up to the prune, over an index that
+    * carries corpus `df` (the [[shingles]] artifact's column; tests
+    * attach it with [[withCorpusDf]]): the hot/cold split at `maxDf` is
+    * a projection of the scan, with no df aggregation, flag join or
+    * corpus checkpoint at query time. Returns the hot postings and the
+    * pairs [[pairBound]] admits under `bound`. */
+  private def prunedPairs(sh: DataFrame, maxDf: Int,
+                          bound: Column): (DataFrame, DataFrame) = {
     val fl = sh.select(col("doc_id"), col("shingle"),
       (col("df") > maxDf).cast("long").as("is_hot"))
-    // per-doc stats: n = full distinct-shingle count (also the verify
-    // denominator), h = hot-shingle count (the prune bound's slack term)
     val st = fl.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n"), sum(col("is_hot")).as("h"))
-    val bk = fl.filter(col("is_hot") === 0L)
-      // explicit partition count: AQE-coalescing exemption (see buckets())
-      .repartition(fl.sparkSession.sparkContext.defaultParallelism,
-        col("shingle"))
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxDf) // by construction; keeps PairCombos' bound explicit
-    val ri = bucketPairs(bk)
+    val ri = bucketPairs(buckets(fl.filter(col("is_hot") === 0L), Seq("shingle"), maxDf))
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("ri"))
-    val pruned = ri
-      .join(st.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(st.as("s2"), col("d2") === col("s2.doc_id"))
-      .withColumn("ubi", col("ri") + least(col("s1.h"), col("s2.h")))
-      .filter(col("ubi").cast("double") /
-        (col("s1.n") + col("s2.n") - col("ubi")) >= threshold)
-      .select(col("d1"), col("d2"), col("ri"),
-        col("s1.n").as("na"), col("s2.n").as("nb"))
-    // exact verification WITHOUT touching the full shingle sets — see
-    // [[hotVerified]]
-    hotVerified(fl, pruned)
+    (fl.filter(col("is_hot") === 1L), pairBound(ri, st, bound))
+  }
+
+  /** Near-dup pairs by exact word-shingle Jaccard ≥ threshold, candidates
+    * from the hot-capped inverted index. The bucket join counts shared
+    * under-cap shingles per pair (`ri`), [[pairBound]] prunes with
+    * jaccard ≤ ubi/(na+nb−ubi), and [[hotVerified]] makes `ri` exact.
+    * Of ~1.1M raw candidates at sf0.1, a few thousand survive the prune
+    * to the verify joins. */
+  def nearDupJaccard(sh: DataFrame, maxDf: Int, threshold: Double): DataFrame = {
+    val (hot, pruned) = prunedPairs(sh, maxDf,
+      col("ubi").cast("double") / (col("na") + col("nb") - col("ubi")) >= threshold)
+    hotVerified(hot, pruned)
       .select(col("d1"), col("d2"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
-
-  /** Shared exact-verify core of [[nearDupJaccard]] and
-    * [[containmentPairs]]: `ri` from the posting join is already the
-    * EXACT count of shared non-hot shingles (every non-hot bucket
-    * survives the df cap by construction), so the only unknown is the
-    * HOT overlap — gather each candidate doc's hot shingles only (a
-    * handful per doc; full sets are ~doc-length) and
-    * inter = ri + |hotA ∩ hotB|. Bounded by the prune output — never a
-    * full-corpus collect; size(null)=null under ANSI so a doc with no
-    * hot shingles coalesces to 0. Returns `pruned` + an exact `inter`
-    * column. */
-  private def hotVerified(fl: DataFrame, pruned: DataFrame): DataFrame = {
-    val ids = pruned.select(col("d1").as("doc_id"))
-      .union(pruned.select(col("d2").as("doc_id"))).distinct()
-    val hotSets = fl.filter(col("is_hot") === 1L)
-      .join(ids, Seq("doc_id"), "left_semi")
-      // explicit partition count: AQE-coalescing exemption (see
-      // buckets()) — the coalesced stage carries the collect_list
-      // heaps and the downstream pair-join probe
-      .repartition(fl.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("shingle")).as("hs"))
-    pruned
-      .join(hotSets.select(col("doc_id").as("d1"), col("hs").as("sa")), Seq("d1"), "left")
-      .join(hotSets.select(col("doc_id").as("d2"), col("hs").as("sb")), Seq("d2"), "left")
-      .withColumn("inter", col("ri") +
-        coalesce(size(array_intersect(col("sa"), col("sb"))).cast("long"), lit(0L)))
   }
 
   /** EXACT |A∩B| and set sizes for an arbitrary candidate-pair frame
@@ -1090,10 +1080,11 @@ object LlmPipeline {
     val ids = uniq.select(col("d1").as("doc_id"))
       .union(uniq.select(col("d2").as("doc_id"))).distinct()
     val shc = sh.join(ids, Seq("doc_id"), "left_semi")
-    // repartition before the checkpoint — see containmentParts: the
-    // frozen frame must scan at cluster parallelism, not at whatever
-    // AQE coalesced the flag-join's exchanges to
-    val fl = materialize((
+    // pinned before the checkpoint: the frozen frame must scan at
+    // cluster parallelism, not at whatever AQE coalesced the flag-join's
+    // exchanges to, and the bucket exchange below then reuses its
+    // shingle partitioning
+    val fl = materialize(graft.ops.Spread.pinned(
       if (!localDf)
         shc.select(col("doc_id"), col("shingle"),
           (col("df") > hotDf).cast("long").as("is_hot"))
@@ -1103,8 +1094,7 @@ object LlmPipeline {
         shc.join(hot, Seq("shingle"), "left")
           .select(col("doc_id"), col("shingle"),
             coalesce(col("hot1"), lit(0L)).as("is_hot"))
-      }).repartition(sh.sparkSession.sparkContext.defaultParallelism,
-        col("shingle")))
+      }, col("shingle")))
     // ONE per-doc aggregation carries both the full size and the hot
     // shingle set (collect_list drops the nulls the when() leaves on
     // non-hot postings, so `hs` is exactly the old hotSets list — []
@@ -1115,15 +1105,9 @@ object LlmPipeline {
     val stats = fl.groupBy(col("doc_id")).agg(
       count(lit(1)).as("n"),
       collect_list(when(col("is_hot") === 1L, col("shingle"))).as("hs"))
-    // explicit partition count on the bucket exchange — same AQE
-    // coalescing exemption as buckets(): the fused stage behind this
-    // agg carries the collect_list heaps AND the PairCombos explosion
-    val bk = fl.filter(col("is_hot") === 0L)
-      .repartition(fl.sparkSession.sparkContext.defaultParallelism,
-        col("shingle"))
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-    val ri = bucketPairs(bk).groupBy(col("d1"), col("d2"))
+    // every cold bucket is under hotDf by the split's construction
+    val ri = bucketPairs(buckets(fl.filter(col("is_hot") === 0L), Seq("shingle"), hotDf))
+      .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("ri"))
     uniq
       .join(ri, Seq("d1", "d2"), "left")
@@ -1153,11 +1137,8 @@ object LlmPipeline {
     * a union of two copies of the verify subtree (that would execute
     * the whole candidate pipeline twice). */
   def containmentPairs(sh: DataFrame, maxDf: Int, tau: Double): DataFrame = {
-    val (fl, pruned) = containmentParts(sh, maxDf, tau)
-    // exact verification WITHOUT the full shingle sets (the old full-set
-    // gather was ~doc-length arrays and was d24's whole cost) — see
-    // [[hotVerified]]
-    hotVerified(fl, pruned)
+    val (hot, pruned) = containmentParts(sh, maxDf, tau)
+    hotVerified(hot, pruned)
       .select(explode(array(
         struct(col("d1").as("contained"), col("d2").as("container"),
           (col("inter").cast("double") / col("na")).as("containment")),
@@ -1170,38 +1151,13 @@ object LlmPipeline {
       .filter(col("containment") >= tau)
   }
 
-  /** The flagged posting list and the prune-surviving candidate frame
-    * of [[containmentPairs]] — split out so ScaleSpec can audit the
+  /** The hot postings and the prune-surviving candidate frame of
+    * [[containmentPairs]] — split out so ScaleSpec can audit the
     * survivor count (pruned candidates vs emitted pairs) directly. */
   private[graft] def containmentParts(sh: DataFrame, maxDf: Int,
-                                      tau: Double): (DataFrame, DataFrame) = {
-    // CONTRACT (opt r16): `sh` carries corpus `df` — see
-    // [[nearDupJaccard]] for the rationale (projection-only hot split;
-    // no df re-aggregation, no flag join, no corpus checkpoint).
-    val fl = sh.select(col("doc_id"), col("shingle"),
-      (col("df") > maxDf).cast("long").as("is_hot"))
-    val st = fl.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n"), sum(col("is_hot")).as("h"))
-    val bk = fl.filter(col("is_hot") === 0L)
-      // explicit partition count: AQE-coalescing exemption (see buckets())
-      .repartition(fl.sparkSession.sparkContext.defaultParallelism,
-        col("shingle"))
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxDf)
-    val ri = bucketPairs(bk)
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("ri"))
-    val pruned = ri
-      .join(st.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(st.as("s2"), col("d2") === col("s2.doc_id"))
-      .withColumn("ubi", col("ri") + least(col("s1.h"), col("s2.h")))
-      .filter(col("ubi").cast("double") /
-        least(col("s1.n"), col("s2.n")) >= tau)
-      .select(col("d1"), col("d2"), col("ri"),
-        col("s1.n").as("na"), col("s2.n").as("nb"))
-    (fl, pruned)
-  }
+                                      tau: Double): (DataFrame, DataFrame) =
+    prunedPairs(sh, maxDf,
+      col("ubi").cast("double") / least(col("na"), col("nb")) >= tau)
 
   /** Exact Jaccard for candidate pairs, scored on the FULL shingle sets
     * (capping above affects only which pairs are considered, never the
@@ -1416,15 +1372,7 @@ object LlmPipeline {
       val sh = hashedShingles(s, dir)
       val fl = sh.filter($"df" <= MaxShingleDf).select($"doc_id", $"shingle")
       val st = fl.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      // explicit numPartitions: AQE coalesces this exchange on its
-      // SHUFFLE bytes (small — (hash, doc_id) rows), but the stage it
-      // feeds carries the collect_list heap + the PairCombos explosion,
-      // which at sf1 ran on 6 coalesced tasks for 20 of the query's
-      // 45 s (r14 stage split). A user-specified partition count is
-      // exempt from AQE coalescing; groupBy on the same key reuses it.
-      val bk = fl.repartition(32, $"shingle").groupBy($"shingle")
-        .agg(sort_array(collect_list($"doc_id")).as("ids"))
-      val pairs = materialize(bucketPairs(bk)
+      val pairs = materialize(bucketPairs(buckets(fl, Seq("shingle"), MaxShingleDf))
         .groupBy($"d1", $"d2").agg(count(lit(1)).as("inter"))
         .join(st.select($"doc_id".as("d1"), $"n".as("na")), "d1")
         .join(st.select($"doc_id".as("d2"), $"n".as("nb")), "d2"))
@@ -1610,13 +1558,9 @@ object LlmPipeline {
       // serialized 21.7 s of distinct + 3 × 11.3 s of single-task
       // re-reads into one core (the r14 sf1 stage split). The frame
       // keeps distinct's hash partitioning; consumers join on (d1,d2).
-      val allCand = materialize(
-        buckets(allBands, Seq("config", "band", "bkey"), MaxBucketSize)
-          .filter(size($"ids") >= 2)
-          .select($"config",
-            explode(graft.functions.PairCombos($"ids")).as("p"))
-          .select($"config", $"p.d1".as("d1"), $"p.d2".as("d2"))
-          .distinct())
+      val allCand = materialize(bucketPairs(
+          buckets(allBands, Seq("config", "band", "bkey"), MaxBucketSize), "config")
+        .distinct())
       // exact verify on a DETERMINISTIC 1-in-16 PAIR LOTTERY
       // (md5("d1:d2") first hex = '0'; same-keyed in the oracle): the
       // 16x1 tier is a deliberate birthday cliff — 14.9M DISTINCT
@@ -1791,31 +1735,16 @@ object LlmPipeline {
       // EXACT shingle (the oracle's pair basis) — keying on the 32-bit
       // xh prefix would merge colliding shingles' buckets (birthday
       // bound: near-certain at sf1 shingle counts), double-counting ri
-      // and emitting self-pairs through PairCombos.
-      val pairs = materialize(sh.filter($"df" <= CapMax)
-        .groupBy($"shingle").agg(sort_array(collect_list($"doc_id")).as("ids"),
-          min($"df").as("bdf"))
-        .filter(size($"ids") >= 2)
-        .select($"bdf", explode(graft.functions.PairCombos($"ids")).as("p"))
-        .select($"p.d1".as("d1"), $"p.d2".as("d2"), $"bdf")
-        .groupBy($"d1", $"d2").agg(count(lit(1)).as("ri"), min($"bdf").as("mdf")))
-      // d2's sound prune: inter <= ri + min(hot counts) — only the
-      // sliver whose upper bound clears 0.5 pays the exact verify
-      val pruned = pairs
-        .join(st.select($"doc_id".as("d1"), $"n".as("na"), $"h".as("ha")), "d1")
-        .join(st.select($"doc_id".as("d2"), $"n".as("nb"), $"h".as("hb")), "d2")
-        .withColumn("ubi", $"ri" + least($"ha", $"hb"))
-        .filter($"ubi".cast("double") / ($"na" + $"nb" - $"ubi") >= 0.5)
-      val ids = pruned.select($"d1".as("doc_id"))
-        .union(pruned.select($"d2".as("doc_id"))).distinct()
-      val hotSets = sh.filter($"df" > CapMax)
-        .join(ids, Seq("doc_id"), "left_semi")
-        .groupBy($"doc_id").agg(collect_list($"shingle").as("hs"))
-      val dups = pruned
-        .join(hotSets.select($"doc_id".as("d1"), $"hs".as("sa")), Seq("d1"), "left")
-        .join(hotSets.select($"doc_id".as("d2"), $"hs".as("sb")), Seq("d2"), "left")
-        .withColumn("inter", $"ri" +
-          coalesce(size(array_intersect($"sa", $"sb")).cast("long"), lit(0L)))
+      // and emitting self-pairs through PairCombos. `df` is constant
+      // per shingle, so keying the buckets on it too splits nothing.
+      val pairs = materialize(bucketPairs(
+          buckets(sh.filter($"df" <= CapMax), Seq("shingle", "df"), CapMax), "df")
+        .groupBy($"d1", $"d2").agg(count(lit(1)).as("ri"), min($"df").as("mdf")))
+      // d2's sound prune and hot-only verify: only the sliver whose
+      // upper bound clears 0.5 pays the exact verify
+      val pruned = pairBound(pairs, st,
+        $"ubi".cast("double") / ($"na" + $"nb" - $"ubi") >= 0.5)
+      val dups = hotVerified(sh.filter($"df" > CapMax), pruned)
         .filter($"inter".cast("double") / ($"na" + $"nb" - $"inter") >= 0.5)
         .select($"mdf")
       // per-cap cumulative counts fold map-side from mdf alone
@@ -1848,7 +1777,7 @@ object LlmPipeline {
     // corpus's dedup should run at. Semantics are d2's throughout:
     // df-capped buckets (never all-pairs), d2's sound ubi prune
     // (ri + min(hot) bound — drops only pairs that cannot reach 0.5),
-    // hot-only exact verify; the threshold compares as 3·it ≥ na+nb so
+    // hot-only exact verify; the threshold compares as 3·inter ≥ na+nb so
     // no float ever forms. Each arm re-shingles at its own width — a
     // width sweep has no shared artifact by construction; the sample
     // bounds the 4× re-tokenize the way d42's sample bounds its
@@ -1898,8 +1827,7 @@ object LlmPipeline {
       // Memory posture: a degenerate stop-shingle's bucket array is
       // the same rows the window form buffered per partition group —
       // bounded here by the 1-in-8 doc sample either way.
-      val g = materialize(sh
-        .repartition(s.sparkContext.defaultParallelism, $"w", $"shingle")
+      val g = materialize(graft.ops.Spread.pinned(sh, $"w", $"shingle")
         .groupBy($"w", $"shingle")
         .agg(count(lit(1)).as("df"),
           sort_array(collect_list($"doc_id")).as("ids")))
@@ -1909,35 +1837,18 @@ object LlmPipeline {
       val st = g.select($"w", $"df", explode($"ids").as("doc_id"))
         .groupBy($"w", $"doc_id").agg(count(lit(1)).as("n"),
           sum(($"df" > Cap).cast("long")).as("h"))
-      val bk = g.filter($"df" <= Cap)
       // pairs feeds BOTH the n_candidates tally and the prune→verify
       // chain — checkpoint the (small) distinct-pair set so the bucket
       // explode + pair groupBy run once, not twice
-      val pairs = materialize(bk.filter(size($"ids") >= 2)
-        .select($"w", explode(graft.functions.PairCombos($"ids")).as("p"))
-        .groupBy($"w", $"p.d1".as("d1"), $"p.d2".as("d2"))
-        .agg(count(lit(1)).as("ri")))
-      val pruned = pairs
-        .join(st.select($"w", $"doc_id".as("d1"), $"n".as("na"),
-          $"h".as("ha")), Seq("w", "d1"))
-        .join(st.select($"w", $"doc_id".as("d2"), $"n".as("nb"),
-          $"h".as("hb")), Seq("w", "d2"))
-        .withColumn("ubi", $"ri" + least($"ha", $"hb"))
-        .filter($"ubi" * 3 >= $"na" + $"nb")
-      val ids = pruned.select($"w", $"d1".as("doc_id"))
-        .union(pruned.select($"w", $"d2".as("doc_id"))).distinct()
-      val hotSets = g.filter($"df" > Cap)
-        .select($"w", $"shingle", explode($"ids").as("doc_id"))
-        .join(ids, Seq("w", "doc_id"), "left_semi")
-        .groupBy($"w", $"doc_id").agg(collect_list($"shingle").as("hs"))
-      val dups = pruned
-        .join(hotSets.select($"w", $"doc_id".as("d1"), $"hs".as("sa")),
-          Seq("w", "d1"), "left")
-        .join(hotSets.select($"w", $"doc_id".as("d2"), $"hs".as("sb")),
-          Seq("w", "d2"), "left")
-        .withColumn("it", $"ri" +
-          coalesce(size(array_intersect($"sa", $"sb")).cast("long"), lit(0L)))
-        .filter($"it" * 3 >= $"na" + $"nb")
+      val pairs = materialize(bucketPairs(g.filter($"df" <= Cap), "w")
+        .groupBy($"w", $"d1", $"d2").agg(count(lit(1)).as("ri")))
+      // d2's prune and hot-only verify per width; the hot postings are
+      // the dictionary's over-cap lists, exploded back to rows
+      val pruned = pairBound(pairs, st, $"ubi" * 3 >= $"na" + $"nb", "w")
+      val dups = hotVerified(
+          g.filter($"df" > Cap).select($"w", $"shingle", explode($"ids").as("doc_id")),
+          pruned, "w")
+        .filter($"inter" * 3 >= $"na" + $"nb")
       // anchor on a literal width frame: the oracle's arm CTEs emit one
       // row per width UNCONDITIONALLY (scalar-subquery counts), so a
       // width with zero observed shingles must still produce a 0-row
@@ -2196,15 +2107,13 @@ object LlmPipeline {
       val top8 = materialize(graft.plans.TopK.perKey(sims,
         keys = Seq($"vec_id"), order = Seq($"sim".desc, $"cid".asc), k = 8))
       val wp = Window.partitionBy($"vec_id").orderBy($"sim".desc, $"cid".asc)
-      // repartition BEFORE the window, not between window and join (opt
-      // r16): the window's own hash(vec_id) exchange is AQE-coalescible
-      // on the checkpoint's small bytes, and the 1-task stage it left
-      // behind carried the window AND the fused candidate expansion
-      // (measured 1.3 s single-task at sf0.1). The explicit count is
-      // exempt from coalescing, the window reuses it exchange-free, and
-      // the broadcast join + partial agg fuse behind it at full width.
-      val probes = top8
-        .repartition(s.sparkContext.defaultParallelism, $"vec_id")
+      // pinned BEFORE the window, not between window and join (opt
+      // r16): the window's own hash(vec_id) exchange coalesced to one
+      // task on the checkpoint's small bytes, and that task carried the
+      // window AND the fused candidate expansion (measured 1.3 s at
+      // sf0.1). The window reuses the pinned exchange, and the
+      // broadcast join + partial agg fuse behind it at full width.
+      val probes = graft.ops.Spread.pinned(top8, $"vec_id")
         .withColumn("prn", row_number().over(wp).cast("long"))
       val home = probes.filter($"prn" === 1).select($"vec_id", $"cid")
       val capped = graft.plans.TopK.perKey(home,
@@ -2247,20 +2156,23 @@ object LlmPipeline {
         struct($"cos", (-$"cand").as("nc")))).as(s"b$p"))
       val best = perPrn.groupBy($"vec_id")
         .agg(bestCols.head, bestCols.tail: _*)
+      // every total is coalesced: sum over zero rows is NULL, and an
+      // empty corpus must report 0
       val costCols = lvls.map(p =>
-        sum(when($"prn" <= p, 1L).otherwise(0L)).as(s"tc$p"))
+        coalesce(sum(when($"prn" <= p, 1L).otherwise(0L)), lit(0L)).as(s"tc$p"))
       val cost = scored.agg(costCols.head, costCols.tail: _*)
       val j = truth.join(best, Seq("vec_id"), "left")
       val aggCols =
         count(lit(1)).as("n_queries") +:
-          lvls.map(p => sum(when((-col(s"b$p.nc")) === $"true_nbr", 1L)
-            .otherwise(0L)).as(s"h$p"))
+          lvls.map(p => coalesce(sum(when((-col(s"b$p.nc")) === $"true_nbr", 1L)
+            .otherwise(0L)), lit(0L)).as(s"h$p"))
       val agg = j.agg(aggCols.head, aggCols.tail: _*)
         .crossJoin(broadcast(cost))
       agg.select(explode(array(lvls.map(p => struct(
           lit(p).as("nprobe"), $"n_queries",
           col(s"h$p").as("n_hits"),
-          expr(s"h$p * 1000000 div n_queries").as("recall_ppm"),
+          expr(s"CASE WHEN n_queries = 0 THEN 0 ELSE h$p * 1000000 div n_queries END")
+            .as("recall_ppm"),
           col(s"tc$p").as("total_candidates"))): _*)).as("r"))
         .select($"r.nprobe", $"r.n_queries", $"r.n_hits", $"r.recall_ppm",
           $"r.total_candidates")
@@ -4763,16 +4675,14 @@ object LlmPipeline {
           .as("g")).distinct()
       val corpus = dedup.filter($"source" =!= "src0")
       val contaminated = corpus
-        // spread before the CPU-dense gram explode (opt r16): the dedup
-        // aggregation's exchange AQE-coalesces on BYTES (the corpus is
-        // byte-small exactly when it is CPU-dense per byte — t27's
-        // note), and the explode ran single-task behind it (measured
-        // 0.86 s of the sf0.1 bill in the _jobs split). An explicit
-        // doc_id repartition is coalescing-exempt; at 100 TB the
-        // deduped corpus has thousands of partitions and this exchange
-        // is byte-proportional, not a hot spot.
+        // pinned before the CPU-dense gram explode (opt r16): behind
+        // the dedup aggregation's coalesced exchange the explode ran
+        // single-task (measured 0.86 s of the sf0.1 bill in the _jobs
+        // split). At 100 TB the deduped corpus has thousands of
+        // partitions and this exchange is byte-proportional, not a hot
+        // spot.
         .select($"doc_id", $"text")
-        .repartition(s.sparkContext.defaultParallelism, $"doc_id")
+        .transform(graft.ops.Spread.pinned(_, $"doc_id"))
         .select($"doc_id", toks($"text").as("toks")).filter(size($"toks") >= 8)
         .select($"doc_id", explode(expr(
           "array_distinct(transform(sequence(0, size(toks)-8), i -> xxhash64(concat_ws(' ', slice(toks, i+1, 8)))))"))

@@ -1,0 +1,164 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
+/** Degenerate corpora through the near-dup family's shared bucket kernel
+  * (d2, d24, d37, d42, d43) and d39's probe sweep: an empty corpus must
+  * answer with the non-empty schema and zero rows or zero counts, and a
+  * corpus of identical documents must report exactly the pairs a
+  * brute-force count over the same sample predicates finds. Each corpus
+  * is written to its own directory, so derived artifacts never leak
+  * between runs. */
+class DegenerateSpec extends SparkTestBase {
+
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** Writes `docs` as `documents.parquet` of a fresh corpus dir, runs
+    * `body` on it, then removes the dir and the artifacts keyed on it. */
+  private def withCorpus[T](docs: Seq[(Long, String)])(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_degenerate").toString
+    val rows = docs.map { case (id, t) => Row(id, t, "en", "src0", t.length.toLong) }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), docSchema)
+      .write.parquet(s"$dir/documents.parquet")
+    try body(dir) finally cleanup(dir)
+  }
+
+  private def cleanup(dir: String): Unit = {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val suffix = "_" + graft.ops.Scratch.key8(s"${graft.ops.Scratch.Rev}|$dir")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete()
+    }
+    Option(tmp.listFiles).foreach(_.filter(_.getName.contains(suffix)).foreach(rm))
+    rm(new java.io.File(dir))
+  }
+
+  private val family = Seq("d2_dedup_ngram_jaccard", "d24_containment_dedup",
+    "d37_jaccard_threshold_sweep", "d42_dfcap_sweep", "d43_shingle_width_sweep")
+
+  private def run(q: String, dir: String): DataFrame = SparkEntry.queries(q)(spark, dir)
+
+  private def toks(t: String): IndexedSeq[String] = t.toLowerCase.split("\\s+").toIndexedSeq
+
+  private def grams(t: String, w: Int): Set[String] =
+    if (toks(t).length < w) Set.empty else toks(t).sliding(w).map(_.mkString(" ")).toSet
+
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  // four identical docs and one that shares nothing with them; the ids
+  // pass both d42's (doc_id % 4 = 0) and d43's (md5 first hex c or d)
+  // sample, so every query sees the whole corpus
+  private val dupText = "the quick brown fox jumps over the lazy dog twice"
+  private val ids = Iterator.from(1).map(_ * 4L)
+    .filter(i => Set('c', 'd')(md5(i.toString).head)).take(5).toSeq
+  private val dupDocs = ids.take(4).map(_ -> dupText) :+
+    (ids(4) -> "alpha beta gamma delta epsilon zeta eta theta iota kappa")
+
+  /** Per-pair brute force over shingle sets `sets` with document
+    * frequency `df`: (pairs sharing a shingle of df <= cap, per pair its
+    * shared and full-set sizes). */
+  private def pairs(sets: Map[Long, Set[String]], cap: Long)
+      : Seq[(Long, Long, Int, Int, Int)] = {
+    val df = sets.values.toSeq.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val ks = sets.keys.toSeq.sorted
+    for {
+      i <- ks; j <- ks if i < j
+      shared = sets(i) & sets(j)
+      if shared.exists(df(_) <= cap)
+    } yield (i, j, shared.size, sets(i).size, sets(j).size)
+  }
+
+  test("near-dup family on an empty corpus: same schema, zero rows or zero counts") {
+    val schemas = withCorpus(dupDocs)(dir => family.map(q => q -> run(q, dir).schema).toMap)
+    withCorpus(Seq.empty) { dir =>
+      for (q <- family) {
+        val df = run(q, dir)
+        assert(df.schema == schemas(q), s"$q schema")
+        val rows = df.collect()
+        q match {
+          case "d2_dedup_ngram_jaccard" | "d24_containment_dedup" =>
+            assert(rows.isEmpty, s"$q: ${rows.toSeq}")
+          case _ =>
+            assert(rows.nonEmpty, s"$q keeps its tier rows")
+            // every count column is 0 (the tier key columns are not)
+            val counts = df.schema.fieldNames.filterNot(Set("cap", "w", "t100"))
+            for (r <- rows; c <- counts)
+              assert(r.getAs[Long](c) == 0L, s"$q.$c in $r")
+        }
+      }
+    }
+  }
+
+  test("near-dup family on identical docs matches brute-force pair and dup counts") {
+    val text = dupDocs.toMap
+    val sh3 = text.view.mapValues(grams(_, 3)).toMap
+    withCorpus(dupDocs) { dir =>
+      val d2 = pairs(sh3, 100).filter { case (_, _, it, na, nb) => it.toDouble / (na + nb - it) >= 0.5 }
+      assert(d2.size == 6)
+      assert(run("d2_dedup_ngram_jaccard", dir).count() == d2.size)
+
+      val d24 = pairs(sh3, 100).flatMap { case (_, _, it, na, nb) =>
+        Seq(it.toDouble / na, it.toDouble / nb).filter(_ >= 0.5) }
+      assert(run("d24_containment_dedup", dir).count() == d24.size)
+
+      // d37 scores RARE-shingle sets (df <= 100 — all of them here)
+      val d37 = run("d37_jaccard_threshold_sweep", dir).collect()
+        .map(r => r.getAs[Long]("t100") -> (r.getAs[Long]("n_pairs"), r.getAs[Long]("n_docs"))).toMap
+      for (t <- Seq(30L, 50L, 70L, 90L)) {
+        val ok = pairs(sh3, 100).filter { case (_, _, it, na, nb) => it * 100 >= t * (na + nb - it) }
+        assert(d37(t) == (ok.size.toLong, ok.flatMap(p => Seq(p._1, p._2)).distinct.size.toLong), s"t=$t")
+      }
+
+      // d42: df at corpus grain; a pair is a candidate at cap c when its
+      // cheapest shared shingle has df <= c
+      val df3 = sh3.values.toSeq.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val sample = sh3.filter(_._1 % 4 == 0)
+      val d42 = run("d42_dfcap_sweep", dir).collect()
+        .map(r => r.getAs[Long]("cap") -> (r.getAs[Long]("n_candidates"), r.getAs[Long]("n_dups"))).toMap
+      for (c <- Seq(16L, 32L, 64L, 128L)) {
+        val ks = sample.keys.toSeq.sorted
+        val cand = for {
+          i <- ks; j <- ks if i < j
+          shared = sample(i) & sample(j)
+          if shared.nonEmpty && shared.map(df3).min <= c
+        } yield (shared.size, sample(i).size, sample(j).size)
+        val dups = cand.count { case (it, na, nb) => it.toDouble / (na + nb - it) >= 0.5 }
+        assert(d42(c) == (cand.size.toLong, dups.toLong), s"cap $c")
+      }
+      assert(d42(16L)._2 == 6L)
+
+      // d43: per width, df at sample grain, cap 32, dup when 3·it >= na+nb
+      val d43 = run("d43_shingle_width_sweep", dir).collect()
+        .map(r => r.getAs[Long]("w") -> (r.getAs[Long]("n_shingles"),
+          r.getAs[Long]("n_candidates"), r.getAs[Long]("n_dups"))).toMap
+      for (w <- Seq(2, 3, 5, 8)) {
+        val shw = text.filter(kv => Set('c', 'd')(md5(kv._1.toString).head))
+          .view.mapValues(grams(_, w)).toMap
+        val cand = pairs(shw, 32)
+        val dups = cand.count { case (_, _, it, na, nb) => 3 * it >= na + nb }
+        assert(d43(w.toLong) == ((shw.values.flatten.toSet.size.toLong, cand.size.toLong, dups.toLong)),
+          s"w=$w")
+      }
+    }
+  }
+
+  test("d39 reports zero totals, not NULL, when no probe finds a candidate") {
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType)))
+    withCorpus(Seq.empty) { dir =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .write.parquet(s"$dir/embeddings.parquet")
+      val rows = run("d39_ivf_probe_sweep", dir).collect()
+      assert(rows.map(_.getAs[Long]("nprobe")).toSeq == Seq(1L, 2L, 4L, 8L))
+      for (r <- rows; c <- Seq("n_queries", "n_hits", "recall_ppm", "total_candidates"))
+        assert(!r.isNullAt(r.fieldIndex(c)) && r.getAs[Long](c) == 0L, s"$c in $r")
+    }
+  }
+}

@@ -380,7 +380,6 @@ class NearDupSpec extends SparkTestBase {
   }
 
   test("single-pass buckets() matches the two-pass reference (incl. over-cap groups)") {
-    import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
     // synthetic index: key k appears in (k % 7 + 1) * 3 docs -> groups
@@ -388,17 +387,21 @@ class NearDupSpec extends SparkTestBase {
     val rows = for {
       k <- 0L until 40L
       i <- 0L until (k % 7 + 1) * 3
-    } yield (37L * i % 1000 + 1000 * i, k)
-    val index = rows.toDF("doc_id", "key")
+    } yield (Option(37L * i % 1000 + 1000 * i), k)
+    // NULL doc_ids: key 2 holds exactly `cap` ids plus a NULL, key 99
+    // only a NULL. NULLs are not counted — the size(collect_list) law —
+    // so key 2 stays under the cap and key 99 is an empty bucket.
+    val nulls = Seq((Option.empty[Long], 2L), (Option.empty[Long], 99L))
+    val index = (rows ++ nulls).toDF("doc_id", "key")
     val cap = 9
     val got = graft.queries.LlmPipeline.buckets(index, Seq("key"), cap)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    // reference: the pre-r17 two-pass semantics, computed locally
-    val ref = rows.groupBy(_._2).collect {
-      case (k, g) if g.size <= cap => k -> g.map(_._1).sorted
-    }
+    // reference: group sizes and sorted lists of the non-NULL ids
+    val ref = (rows ++ nulls).groupBy(_._2).map { case (k, g) => k -> g.flatMap(_._1).sorted }
+      .filter(_._2.size <= cap)
     assert(got.keySet == ref.keySet)
     for ((k, ids) <- ref) assert(got(k) == ids, s"key $k")
+    assert(got(2L).size == cap && got(99L).isEmpty)
     // over-cap keys must be gone
     assert(!got.contains(6L)) // k=6 -> 21 docs > 9
   }

@@ -197,6 +197,13 @@ class RenderSpec extends SparkTestBase {
     assert(out(1).isNullAt(1), "empty map renders as NULL")
   }
 
+  test("render: complex cells are escaped as Go's json.Marshal writes them (tostring.go:89-96)") {
+    val u = "\\" + "u"
+    val df = Seq(Tuple1(Seq("<b>&", "x\by"))).toDF("arr")
+    val out = Render.renderAll(df).collect()(0).getString(0)
+    assert(out == s"""["${u}003cb${u}003e${u}0026","x${u}0008y"]""")
+  }
+
   test("render: SQL NULL stays NULL for every type") {
     val schema = StructType(Seq(
       StructField("s", StringType), StructField("i", IntegerType),
