@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   * the billed number per query approaches its isolated BenchOne cost.
   * Shards run SEQUENTIALLY (one JVM at a time) so the numbers stay an
   * honest single-node fleet cost — no box contention between shards.
-  * Shared derived artifacts (shingles/knn/wavs/edges — the Scratch
-  * _SUCCESS contract) persist across shard JVMs, exactly like the
+  * Shared derived artifacts (shingles/knn/wavs/edges —
+  * `Scratch.artifact`) persist across shard JVMs, exactly like the
   * production posture where corpus artifacts outlive any one job.
   *
   * Set SPARK_GRAFT_SHARDS=1 (or 0) for the old single-JVM in-process
@@ -293,83 +293,13 @@ object Bench {
         // the next run RESUMES by reading it and re-timing only the
         // missing queries, and the files are deleted only after the
         // artifact is fully emitted. The fingerprint folds in the
-        // sorted query list, the sf dir, and the classes' lastModified
-        // so a recompile or surface change can never serve stale
-        // numbers as a resume.
-        val classesStamp: String = try {
-          import java.nio.file._
-          val p = Paths.get(
-            getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-          if (Files.isDirectory(p)) {
-            // CONTENT hash of every .class file, in sorted-path order.
-            // Mtimes (the r13 stamp) looked sufficient but broke the
-            // feature's own use case: killing the coordinator kills sbt
-            // mid-run, zinc's incremental state is torn, and the NEXT
-            // invocation recompiles identical sources — every mtime
-            // moves and the resume never matched. scalac output is
-            // deterministic for unchanged sources, so hashing bytes is
-            // recompile-robust while still catching any real change.
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val s = Files.walk(p)
-            try {
-              val classes = new java.util.ArrayList[Path]()
-              s.forEach(q => if (q.toString.endsWith(".class")) classes.add(q))
-              classes.sort(java.util.Comparator.comparing[Path, String](_.toString))
-              classes.forEach { q =>
-                md.update(p.relativize(q).toString.getBytes("UTF-8"))
-                md.update(Files.readAllBytes(q))
-              }
-              md.digest().map("%02x".format(_)).mkString.take(16)
-            } finally s.close()
-          } else {
-            // `sbt runMain` packages the project into a THROWAWAY jar
-            // under target/bg-jobs with a fresh random path per
-            // invocation — the jar's own mtime/path change every run
-            // (which silently defeated the r13 mtime stamp: resume
-            // could never match across sbt invocations). Hash the
-            // entry names + CRCs + sizes instead: the CRC covers the
-            // class bytes but not the zip timestamps, so the stamp is
-            // stable across repackaging of identical classes and
-            // different on any real change.
-            val md2 = java.security.MessageDigest.getInstance("MD5")
-            val zf = new java.util.zip.ZipFile(p.toFile)
-            try {
-              import scala.jdk.CollectionConverters._
-              zf.entries.asScala.toSeq.sortBy(_.getName).foreach { e =>
-                md2.update(e.getName.getBytes("UTF-8"))
-                md2.update(java.nio.ByteBuffer.allocate(16)
-                  .putLong(e.getCrc).putLong(e.getSize).array())
-              }
-              md2.digest().map("%02x".format(_)).mkString.take(16)
-            } finally zf.close()
-          }
-        } catch { case e: Throwable =>
-          // a "0" stamp silently disables recompile detection — say so
-          // loudly instead of quietly weakening the no-stale guarantee
-          System.err.println("[bench] WARNING: classes stamp unavailable " +
-            s"($e) — resume cannot detect a recompile; delete " +
-            "tmpdir/graft_bench_*.tsv before trusting a resumed artifact")
-          "0"
-        }
-        // data + env fingerprint: regenerating the dataset in place
-        // under the same path, or changing thread-count/heap between
-        // runs, must invalidate a killed run's shard TSVs — stale
-        // timings would otherwise be served as a "resume"
-        val dataStamp: String = try {
-          import java.nio.file._
-          val s = Files.walk(Paths.get(sfDir))
-          try {
-            var mx = 0L
-            s.forEach { q =>
-              val qs = q.toString
-              if (qs.endsWith(".parquet") || qs.endsWith("_SUCCESS")) {
-                val t = Files.getLastModifiedTime(q).toMillis
-                if (t > mx) mx = t
-              }
-            }
-            mx.toString
-          } finally s.close()
-        } catch { case _: Throwable => "0" }
+        // sorted query list, the sf dir, the build stamp and the sf
+        // dir's input stamp (Scratch's artifact key), and the env, so a
+        // recompile, a dataset regenerated in place under the same path,
+        // or a changed thread-count/heap can never serve stale numbers
+        // as a resume.
+        val classesStamp = graft.ops.Scratch.buildStamp
+        val dataStamp = graft.ops.Scratch.inputStamp(sfDir)
         val envStamp = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + ":" +
           Runtime.getRuntime.maxMemory()
         val fp = graft.ops.Scratch.key8(

@@ -1,21 +1,14 @@
 package graft.ops
 
-/** Shared scratch-path scheme for queries that must write somewhere
-  * (layout demos, roundtrips, stream staging): FIXED per (tag, source
-  * key) so repeated bench/verify invocations overwrite instead of
-  * leaking a fresh temp dir per call. */
-object Scratch {
+import java.nio.file.{Files, Path, Paths}
 
-  /** Derivation-logic revision, folded into every scratch key: derived
-    * artifacts (shingles, knn, wavs, edges, bpe) are trusted forever
-    * once their _SUCCESS marker exists, so an artifact written by an
-    * OLDER build whose derivation logic differed would otherwise be
-    * silently served to correctness gates and benches. BUMP THIS on any
-    * change to any artifact's derivation logic or layout — stale-format
-    * artifacts then miss the cache by construction. (Bump it even for
-    * WITHIN-session derivation changes: r13a briefly coexisted with two
-    * generations of the knn layout and served the old one to 9 specs.) */
-  val Rev = "r18a"
+import org.apache.spark.sql.SparkSession
+
+/** Scratch paths under `java.io.tmpdir`: fixed per (tag, source key)
+  * outputs that queries overwrite on every call (layout demos,
+  * roundtrips, stream staging), and the derived corpus artifacts
+  * ([[artifact]]) that are written once and read by every later call. */
+object Scratch {
 
   /** 8-hex-digit md5 of `key` — the stable discriminator used in
     * scratch paths and per-source table names. */
@@ -23,21 +16,131 @@ object Scratch {
     java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
 
-  /** `tmpdir/<tag>_<key8(Rev|key)>`. */
+  /** `tmpdir/<tag>_<key8(key)>`. */
   def dir(tag: String, key: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/${tag}_${key8(s"$Rev|$key")}"
+    s"${System.getProperty("java.io.tmpdir")}/${tag}_${key8(key)}"
 
-  /** Process-unique staging path for an atomic publish into `dest`:
-    * write the artifact under the returned path, then [[publish]] it.
-    * Closes the cross-process race on shared derived artifacts (two
-    * JVMs — e.g. bench and verify — both deriving while a third reads
-    * a half-overwritten directory): readers only ever observe either
-    * nothing or a COMPLETE directory, because the publish is a single
-    * same-filesystem rename. */
-  def stageFor(dest: String): String =
-    dest + ".stage-" + java.util.UUID.randomUUID().toString.take(8)
+  /** The directory of a derived artifact, published once and then read
+    * by every caller, in this JVM and in any other. Returns the
+    * published directory; a multi-table artifact's tables are its
+    * subdirectories.
+    *
+    * The path is `tmpdir/<tag>_<key8(input)>_<key8(rest)>`, where `rest`
+    * folds in everything the derivation reads: `params`, the build
+    * stamp (a content hash of the main classes, so any change to them
+    * misses the cache: a derivation's code or layout, but also an edit
+    * elsewhere that moves line numbers), the input stamp
+    * (the newest file under `input`, so a corpus rewritten in place
+    * misses it) and the session's `defaultParallelism` (artifacts
+    * written at one file per core are derived again for another core
+    * count). An artifact can therefore never be served to a build, a
+    * corpus or a posture other than the one that derived it.
+    *
+    * The protocol: under the per-path in-JVM lock, a `_SUCCESS` marker
+    * at the root is trusted as a complete artifact. Otherwise `write`
+    * fills a process-unique stage directory, the root `_SUCCESS` is
+    * added when the writer left none (so a multi-table artifact is
+    * certified only after all its tables are written), and the stage
+    * is renamed into place ([[publish]]). Readers in any process thus
+    * see either nothing or a complete directory. A failed `write`
+    * leaves no stage behind. */
+  def artifact(s: SparkSession, tag: String, input: String, params: Any*)
+              (write: String => Unit): String = {
+    val dest = artifactDir(tag, input, params, s.sparkContext.defaultParallelism)
+    dest.intern.synchronized {
+      if (!Files.exists(Paths.get(dest, "_SUCCESS"))) {
+        val stage = Paths.get(dest + ".stage-" + java.util.UUID.randomUUID().toString.take(8))
+        try {
+          write(stage.toString)
+          val marker = stage.resolve("_SUCCESS")
+          if (!Files.exists(marker)) Files.createFile(marker)
+        } catch { case e: Throwable => deleteRecursively(stage); throw e }
+        publish(stage, Paths.get(dest))
+      }
+    }
+    dest
+  }
 
-  /** Atomically rename `stage` into `dest`.
+  /** The path [[artifact]] publishes to for this key. */
+  private[graft] def artifactDir(tag: String, input: String, params: Seq[Any],
+                                 parallelism: Int): String = {
+    val rest = params ++ Seq(buildStamp, inputStamp(input), parallelism)
+    s"${dir(tag, input)}_${key8(rest.mkString("|"))}"
+  }
+
+  /** Content hash of the main classes, computed once per JVM. */
+  lazy val buildStamp: String = orJvmUnique("build") {
+    classesStamp(Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
+  }
+
+  /** Hash of the classes at `p`, a directory or a jar. It covers their
+    * content only, not their modification times: an interrupted sbt
+    * run leaves zinc's state torn, and the next run recompiles
+    * identical sources with new mtimes, which scalac turns into
+    * identical bytes.
+    *  - A directory: every `.class` file's relative path and bytes, in
+    *    sorted path order.
+    *  - A jar (`sbt runMain` packages one under a fresh path on every
+    *    invocation): every entry's name, CRC and size. The CRC covers
+    *    the bytes but not the zip timestamps. */
+  private[graft] def classesStamp(p: Path): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    if (Files.isDirectory(p)) {
+      val s = Files.walk(p)
+      try {
+        val classes = new java.util.ArrayList[Path]()
+        s.forEach(q => if (q.toString.endsWith(".class")) classes.add(q))
+        classes.sort(java.util.Comparator.comparing[Path, String](_.toString))
+        classes.forEach { q =>
+          md.update(p.relativize(q).toString.getBytes("UTF-8"))
+          md.update(Files.readAllBytes(q))
+        }
+      } finally s.close()
+    } else {
+      val zf = new java.util.zip.ZipFile(p.toFile)
+      try {
+        import scala.jdk.CollectionConverters._
+        zf.entries.asScala.toSeq.sortBy(_.getName).foreach { e =>
+          md.update(e.getName.getBytes("UTF-8"))
+          md.update(java.nio.ByteBuffer.allocate(16)
+            .putLong(e.getCrc).putLong(e.getSize).array())
+        }
+      } finally zf.close()
+    }
+    md.digest().map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** The newest modification time (ms) of the `.parquet` and `_SUCCESS`
+    * files and directories under `dir`: any rewrite of a table in place
+    * moves it. */
+  def inputStamp(dir: String): String = orJvmUnique("input") {
+    val s = Files.walk(Paths.get(dir))
+    try {
+      var mx = 0L
+      s.forEach { q =>
+        val qs = q.toString
+        if (qs.endsWith(".parquet") || qs.endsWith("_SUCCESS"))
+          mx = math.max(mx, Files.getLastModifiedTime(q).toMillis)
+      }
+      mx.toString
+    } finally s.close()
+  }
+
+  private lazy val jvmUnique = java.util.UUID.randomUUID().toString
+  private val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** `stamp`, or a value unique to this JVM when it cannot be computed:
+    * nothing keyed on it is then reused across JVMs, never served stale. */
+  private def orJvmUnique(what: String)(stamp: => String): String =
+    try stamp catch { case e: Exception =>
+      if (warned.compareAndSet(false, true))
+        System.err.println(s"[scratch] WARNING: $what stamp unavailable ($e); " +
+          "derived artifacts and bench resumes are not reused across JVMs")
+      jvmUnique
+    }
+
+  /** Atomically rename `stage` into `dest`; the caller holds `dest`'s
+    * in-JVM lock.
     *
     * Serialized ACROSS PROCESSES by a FileLock on a sibling lockfile:
     * without it, the check for a torn `dest` (exists without its
@@ -50,41 +153,32 @@ object Scratch {
     * permissions) is rethrown after cleanup — swallowing it would leave
     * dest unpublished, the derivation lost, and the caller's parquet
     * read failing far from the cause. */
-  def publish(stage: String, dest: String): Unit = {
+  private def publish(stage: Path, dest: Path): Unit = {
     import java.nio.file._
-    val d = Paths.get(dest)
-    val lockPath = Paths.get(dest + ".lock")
-    // dest.intern: two threads of ONE JVM would otherwise hit
-    // OverlappingFileLockException on the shared channel lock (callers
-    // normally hold a per-path lock already; this makes publish safe on
-    // its own)
-    dest.intern.synchronized {
-      val ch = java.nio.channels.FileChannel.open(lockPath,
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    val ch = java.nio.channels.FileChannel.open(Paths.get(dest.toString + ".lock"),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      val lock = ch.lock()
       try {
-        val lock = ch.lock()
-        try {
-          if (Files.exists(d.resolve("_SUCCESS"))) {
-            // a concurrent publisher won the derivation race: their
-            // complete artifact stands, ours is redundant
-            deleteRecursively(Paths.get(stage))
-          } else {
-            if (Files.exists(d)) deleteRecursively(d) // torn: no marker
-            try Files.move(Paths.get(stage), d, StandardCopyOption.ATOMIC_MOVE)
-            catch { case e: FileSystemException =>
-              deleteRecursively(Paths.get(stage))
-              // only the lost-the-race case may be swallowed; under the
-              // lock that cannot happen, so surface the real failure
-              if (!Files.exists(d.resolve("_SUCCESS"))) throw e
-            }
+        if (Files.exists(dest.resolve("_SUCCESS"))) {
+          // a concurrent publisher won the derivation race: their
+          // complete artifact stands, ours is redundant
+          deleteRecursively(stage)
+        } else {
+          if (Files.exists(dest)) deleteRecursively(dest) // torn: no marker
+          try Files.move(stage, dest, StandardCopyOption.ATOMIC_MOVE)
+          catch { case e: FileSystemException =>
+            deleteRecursively(stage)
+            // only the lost-the-race case may be swallowed; under the
+            // lock that cannot happen, so surface the real failure
+            if (!Files.exists(dest.resolve("_SUCCESS"))) throw e
           }
-        } finally lock.release()
-      } finally ch.close()
-    }
+        }
+      } finally lock.release()
+    } finally ch.close()
   }
 
-  def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file._
+  def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())

@@ -67,22 +67,13 @@ object Clustering {
     * index/audit job reads the model snapshot trained once per corpus.
     * Values are bit-identical to a live [[centroids]] call (same plan,
     * doubles round-trip parquet exactly), so every consumer's oracle is
-    * untouched. Cross-process contract as cachedKnn: _SUCCESS is
-    * trusted because the write is staged + atomically renamed. */
+    * untouched. */
   def cachedCentroids(s: SparkSession, dir: String, k: Int,
-                      iters: Int): DataFrame = {
-    val tmp = graft.ops.Scratch.dir(s"graft_cent_k${k}i$iters", dir)
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        centroids(Tables.embeddings(s, dir), k, iters)
-          .write.mode("overwrite").parquet(stage)
-        graft.ops.Scratch.publish(stage, tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+                      iters: Int): DataFrame =
+    s.read.parquet(graft.ops.Scratch.artifact(s, s"graft_cent_k${k}i$iters", dir) { stage =>
+      centroids(Tables.embeddings(s, dir), k, iters)
+        .write.mode("overwrite").parquet(stage)
+    })
 
   /** `iters` Lloyd iterations from the first-k-by-vec_id seeds; returns
     * (cluster_id, n_members, wss) — wss is the within-cluster sum of
@@ -308,10 +299,10 @@ object Clustering {
     * #3): d26, d27 and e9 each re-derived the same Lloyd codebooks and
     * corpus encoding per run, where a production IVF-PQ deployment
     * trains + encodes per corpus snapshot and every search/audit job
-    * reads the index. Three tables under one root _SUCCESS (cachedBpe's
-    * idiom): `cb` the codebook (sub, cid, cv); `asg` the per-(vector,
-    * subspace) argmin WITH its squared distance (vec_id, sub, cid,
-    * dist) — e9's distortion basis; `codes` the grouped per-vector code
+    * reads the index. Three tables under one artifact root: `cb` the
+    * codebook (sub, cid, cv); `asg` the per-(vector, subspace) argmin
+    * WITH its squared distance (vec_id, sub, cid, dist) — e9's
+    * distortion basis; `codes` the grouped per-vector code
     * word (vec_id, codes) the ADC scan walks. `codes` is written at
     * full parallelism (the shingles file-count lesson: a 1-2-file
     * artifact caps every consumer's scan at the file count, and the
@@ -320,37 +311,29 @@ object Clustering {
     * untouched (doubles round-trip parquet exactly). */
   private def pqIndex(s: SparkSession, dir: String, m: Int, dbTag: String,
                       dbPred: Column, which: String): DataFrame = {
-    val tmp = graft.ops.Scratch.dir(s"graft_pq${m}_$dbTag", dir)
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        val subDim = 64 / m
-        val subs = Materialize(prep(Tables.embeddings(s, dir))
-          .select(col("vec_id"),
-            posexplode(expr(
-              s"transform(sequence(0, ${m - 1}), s -> slice(v, s*$subDim+1, $subDim))"))
-              .as(Seq("sub", "sv")))
-          .filter(dbPred))
-        val cb = Materialize(pqCodebook(subs, iters = 2))
-        val scored = subs.join(broadcast(cb), "sub")
-          .select(col("vec_id"), col("sub"), col("cid"),
-            VecSqDist(col("sv"), col("cv")).as("dist"))
-        val asg = Materialize(graft.plans.TopK.perKey(scored,
-          keys = Seq(col("vec_id"), col("sub")),
-          order = Seq(col("dist").asc, col("cid").asc), k = 1))
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        cb.write.mode("overwrite").parquet(s"$stage/cb")
-        asg.write.mode("overwrite").parquet(s"$stage/asg")
-        graft.ops.Spread.pinned(asg.groupBy(col("vec_id"))
-            .agg(expr("transform(array_sort(collect_list(struct(sub, cid))), s -> s.cid)")
-              .as("codes")))
-          .write.mode("overwrite").parquet(s"$stage/codes")
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(stage, "_SUCCESS"))
-        graft.ops.Scratch.publish(stage, tmp)
-      }
+    val root = graft.ops.Scratch.artifact(s, s"graft_pq${m}_$dbTag", dir) { stage =>
+      val subDim = 64 / m
+      val subs = Materialize(prep(Tables.embeddings(s, dir))
+        .select(col("vec_id"),
+          posexplode(expr(
+            s"transform(sequence(0, ${m - 1}), s -> slice(v, s*$subDim+1, $subDim))"))
+            .as(Seq("sub", "sv")))
+        .filter(dbPred))
+      val cb = Materialize(pqCodebook(subs, iters = 2))
+      val scored = subs.join(broadcast(cb), "sub")
+        .select(col("vec_id"), col("sub"), col("cid"),
+          VecSqDist(col("sv"), col("cv")).as("dist"))
+      val asg = Materialize(graft.plans.TopK.perKey(scored,
+        keys = Seq(col("vec_id"), col("sub")),
+        order = Seq(col("dist").asc, col("cid").asc), k = 1))
+      cb.write.mode("overwrite").parquet(s"$stage/cb")
+      asg.write.mode("overwrite").parquet(s"$stage/asg")
+      graft.ops.Spread.pinned(asg.groupBy(col("vec_id"))
+          .agg(expr("transform(array_sort(collect_list(struct(sub, cid))), s -> s.cid)")
+            .as("codes")))
+        .write.mode("overwrite").parquet(s"$stage/codes")
     }
-    s.read.parquet(s"$tmp/$which")
+    s.read.parquet(s"$root/$which")
   }
 
   /** e9's per-m distortion row off the persisted index's `asg` table. */

@@ -54,27 +54,13 @@ object Graph {
     * a production pipeline materializes such an intermediate once per
     * corpus snapshot rather than re-deriving it per downstream job
     * (same content-stable reuse idiom as q42/q49's layouts). First
-    * caller pays the derivation; the rest read parquet. A `_SUCCESS`
-    * marker is trusted across processes because the write is staged +
-    * atomically renamed (Scratch.publish) — a marker can never name a
-    * torn directory, and a fresh JVM no longer overwrites an artifact
-    * another process may be reading. */
+    * caller pays the derivation; the rest read parquet. */
   private[graft] def cachedEdges(s: SparkSession, dir: String,
-                          minShared: Int, maxDf: Int): DataFrame = {
-    val tmp = graft.ops.Scratch.dir("graft_edges", s"$dir|$minShared|$maxDf")
-    // serialized per path: two queries racing on first use (cc1/cc2/pr1
-    // share one JVM in the bench) must not run concurrent derivations
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        sharedShingleEdges(Tables.documents(s, dir), minShared, maxDf)
-          .write.mode("overwrite").parquet(stage)
-        graft.ops.Scratch.publish(stage, tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+                          minShared: Int, maxDf: Int): DataFrame =
+    s.read.parquet(graft.ops.Scratch.artifact(s, "graft_edges", dir, minShared, maxDf) { stage =>
+      sharedShingleEdges(Tables.documents(s, dir), minShared, maxDf)
+        .write.mode("overwrite").parquet(stage)
+    })
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // transitive duplicate clusters: every doc in a near-dup component

@@ -111,28 +111,17 @@ object LlmPipeline {
     * CORPUS document frequency — the quantity every hot/cold split in
     * the family needs, and the one a production inverted index carries
     * as first-class metadata: with it in the artifact, a verify pass
-    * never re-aggregates document frequency at query time.
-    * Cross-process contract as cachedKnn: _SUCCESS is trusted because
-    * the write is staged + atomically renamed; the per-path lock
-    * serializes racing first users within a JVM. */
-  private def shingles(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Scratch.dir("graft_shingles", dir)
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        val index = shingleIndex(Tables.documents(s, dir))
-          .withColumn("xh",
-            expr("CAST(conv(substr(md5(shingle), 1, 8), 16, 10) AS BIGINT)"))
-          .withColumn("df", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))))
-        // one file per core, so every consumer scans at full width
-        graft.ops.Spread.pinned(index).write.mode("overwrite").parquet(stage)
-        graft.ops.Scratch.publish(stage, tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+    * never re-aggregates document frequency at query time. */
+  private def shingles(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.ops.Scratch.artifact(s, "graft_shingles", dir) { stage =>
+      val index = shingleIndex(Tables.documents(s, dir))
+        .withColumn("xh",
+          expr("CAST(conv(substr(md5(shingle), 1, 8), 16, 10) AS BIGINT)"))
+        .withColumn("df", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))))
+      // one file per core, so every consumer scans at full width
+      graft.ops.Spread.pinned(index).write.mode("overwrite").parquet(stage)
+    })
 
   /** The 16-permutation MinHash signature (doc_id, m0..m15) PERSISTED
     * once per corpus dir — the r12 verdict's d32/d33 ask: both queries
@@ -140,21 +129,11 @@ object LlmPipeline {
     * per run; a production dedup pipeline (the FineWeb/Dolma posture)
     * materializes MinHash signatures once per corpus snapshot and every
     * banding/calibration job reads the artifact. First caller pays the
-    * derivation in its untimed warmup; timed runs read parquet. Same
-    * cross-process contract as [[shingles]]. */
-  private def cachedSig(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Scratch.dir("graft_minhash", dir)
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        minhashSigRaw(shingles(s, dir))
-          .write.mode("overwrite").parquet(stage)
-        graft.ops.Scratch.publish(stage, tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+    * derivation in its untimed warmup; timed runs read parquet. */
+  private def cachedSig(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.ops.Scratch.artifact(s, "graft_minhash", dir) { stage =>
+      minhashSigRaw(shingles(s, dir)).write.mode("overwrite").parquet(stage)
+    })
 
   /** The ONE-PERMUTATION-HASHING signature (doc_id, sv: 16 slot strings,
     * empty slots 'E') PERSISTED once per corpus dir — same posture as
@@ -165,24 +144,16 @@ object LlmPipeline {
     * the artifact, apples-to-apples with d3/d32. Derivation: 16
     * conditional mins fold map-side in a single groupBy(doc_id) pass
     * over the precomputed shingle hash `xh`. */
-  private def cachedOph(s: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.ops.Scratch.dir("graft_ophsig", dir)
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        val slotMins = (0 until 16).map(i =>
-          min(when(pmod(col("xh"), lit(16L)) === i, col("xh"))).as(s"s$i"))
-        shingles(s, dir)
-          .groupBy(col("doc_id")).agg(slotMins.head, slotMins.tail: _*)
-          .select(col("doc_id"), array((0 until 16).map(i =>
-            coalesce(col(s"s$i").cast("string"), lit("E"))): _*).as("sv"))
-          .write.mode("overwrite").parquet(stage)
-        graft.ops.Scratch.publish(stage, tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+  private def cachedOph(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.ops.Scratch.artifact(s, "graft_ophsig", dir) { stage =>
+      val slotMins = (0 until 16).map(i =>
+        min(when(pmod(col("xh"), lit(16L)) === i, col("xh"))).as(s"s$i"))
+      shingles(s, dir)
+        .groupBy(col("doc_id")).agg(slotMins.head, slotMins.tail: _*)
+        .select(col("doc_id"), array((0 until 16).map(i =>
+          coalesce(col(s"s$i").cast("string"), lit("E"))): _*).as("sv"))
+        .write.mode("overwrite").parquet(stage)
+    })
 
   /** [[shingles]] with 8-byte hashed keys — the d2 shuffle trade. Keeps
     * the artifact's corpus `df` column (STRING-grain, exactly the
@@ -429,67 +400,52 @@ object LlmPipeline {
 
   private def knnArtifact(s: SparkSession, dir: String,
                           which: String): DataFrame = {
-    val tmp = graft.ops.Scratch.dir("graft_knn", dir)
-    tmp.intern.synchronized {
-      // the _SUCCESS marker IS the validity contract, cross-process: a
-      // fresh JVM must NOT re-derive over a complete artifact another
-      // process may be reading (the write is staged + atomic-renamed,
-      // so a marker can never name a torn directory)
-      val have =
-        java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS"))
-      if (!have) {
-        import s.implicits._
-        import graft.functions.VecDot
-        import org.apache.spark.sql.expressions.Window
-        val e = Tables.embeddings(s, dir)
-          .select($"vec_id",
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          .withColumn("vt", expr("slice(v, 1, 16)"))
-        val n = e.select($"vec_id", $"v", $"vt",
-          sqrt(VecDot($"v", $"v")).as("nf"),
-          sqrt(VecDot($"vt", $"vt")).as("nt"))
-        // ONE #queries·corpus stream yields BOTH metrics: each pair row
-        // explodes into a (tg=0, full cosine) and a (tg=1, prefix
-        // cosine) row, and the map-side-heap TopK keyed on (vec_id, tg)
-        // prunes to 5 rows per query per metric BEFORE any exchange —
-        // the pair stream is never shuffled or materialized, and the
-        // expensive part (pair generation + dot products) runs once
-        // instead of once per metric. The query side is the BOUNDED
-        // [[knnQuerySide]] sample BROADCAST over the corpus scan, so
-        // the corpus never moves and the derivation is linear in it
-        // (full-width cosine is d5's proven fold contract verbatim).
-        val pairs = broadcast(knnQuerySide(n, KnnQueryCap)).as("a")
-          .crossJoin(n.as("b"))
-          .filter($"a.vec_id" =!= $"b.vec_id")
-          .select($"a.vec_id".as("vec_id"), $"b.vec_id".as("nbr"),
-            explode(array(
-              struct(lit(0).as("tg"),
-                (VecDot($"a.v", $"b.v") / ($"a.nf" * $"b.nf")).as("cos")),
-              struct(lit(1).as("tg"),
-                (VecDot($"a.vt", $"b.vt") / ($"a.nt" * $"b.nt")).as("cos"))))
-              .as("m"))
-          .select($"vec_id", $"m.tg".as("tg"), $"nbr", $"m.cos".as("cos"))
-        val top = graft.plans.TopK.perKey(pairs,
-          keys = Seq($"vec_id", $"tg"),
-          order = Seq($"cos".desc, $"nbr".asc), k = 5)
-        val w = Window.partitionBy($"vec_id", $"tg")
-          .orderBy($"cos".desc, $"nbr".asc)
-        val ranked = graft.ops.Materialize(
-          top.withColumn("rn", row_number().over(w))
-            .select($"vec_id", $"tg", $"rn", $"nbr", $"cos"))
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        ranked.filter($"tg" === 0).select($"vec_id", $"rn", $"nbr", $"cos")
-          .write.mode("overwrite").parquet(s"$stage/full")
-        ranked.filter($"tg" === 1).select($"vec_id", $"rn", $"nbr", $"cos")
-          .write.mode("overwrite").parquet(s"$stage/pre16")
-        // root _SUCCESS is touched AFTER both sub-writes, so post-rename
-        // it certifies the whole two-table artifact (cachedBpe's idiom)
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(stage, "_SUCCESS"))
-        graft.ops.Scratch.publish(stage, tmp)
-      }
+    val root = graft.ops.Scratch.artifact(s, "graft_knn", dir) { stage =>
+      import s.implicits._
+      import graft.functions.VecDot
+      import org.apache.spark.sql.expressions.Window
+      val e = Tables.embeddings(s, dir)
+        .select($"vec_id",
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        .withColumn("vt", expr("slice(v, 1, 16)"))
+      val n = e.select($"vec_id", $"v", $"vt",
+        sqrt(VecDot($"v", $"v")).as("nf"),
+        sqrt(VecDot($"vt", $"vt")).as("nt"))
+      // ONE #queries·corpus stream yields BOTH metrics: each pair row
+      // explodes into a (tg=0, full cosine) and a (tg=1, prefix
+      // cosine) row, and the map-side-heap TopK keyed on (vec_id, tg)
+      // prunes to 5 rows per query per metric BEFORE any exchange —
+      // the pair stream is never shuffled or materialized, and the
+      // expensive part (pair generation + dot products) runs once
+      // instead of once per metric. The query side is the BOUNDED
+      // [[knnQuerySide]] sample BROADCAST over the corpus scan, so
+      // the corpus never moves and the derivation is linear in it
+      // (full-width cosine is d5's proven fold contract verbatim).
+      val pairs = broadcast(knnQuerySide(n, KnnQueryCap)).as("a")
+        .crossJoin(n.as("b"))
+        .filter($"a.vec_id" =!= $"b.vec_id")
+        .select($"a.vec_id".as("vec_id"), $"b.vec_id".as("nbr"),
+          explode(array(
+            struct(lit(0).as("tg"),
+              (VecDot($"a.v", $"b.v") / ($"a.nf" * $"b.nf")).as("cos")),
+            struct(lit(1).as("tg"),
+              (VecDot($"a.vt", $"b.vt") / ($"a.nt" * $"b.nt")).as("cos"))))
+            .as("m"))
+        .select($"vec_id", $"m.tg".as("tg"), $"nbr", $"m.cos".as("cos"))
+      val top = graft.plans.TopK.perKey(pairs,
+        keys = Seq($"vec_id", $"tg"),
+        order = Seq($"cos".desc, $"nbr".asc), k = 5)
+      val w = Window.partitionBy($"vec_id", $"tg")
+        .orderBy($"cos".desc, $"nbr".asc)
+      val ranked = graft.ops.Materialize(
+        top.withColumn("rn", row_number().over(w))
+          .select($"vec_id", $"tg", $"rn", $"nbr", $"cos"))
+      ranked.filter($"tg" === 0).select($"vec_id", $"rn", $"nbr", $"cos")
+        .write.mode("overwrite").parquet(s"$stage/full")
+      ranked.filter($"tg" === 1).select($"vec_id", $"rn", $"nbr", $"cos")
+        .write.mode("overwrite").parquet(s"$stage/pre16")
     }
-    s.read.parquet(s"$tmp/$which")
+    s.read.parquet(s"$root/$which")
   }
 
   /** [[bpeLoop]]'s two outputs persisted once per (corpus dir, steps) —
@@ -498,31 +454,18 @@ object LlmPipeline {
     * tokenize everywhere against the artifact (the q42/q49/edge-cache
     * write-once reuse idiom; r9 ran the whole trainer loop inside t19
     * again). t18 reads `rules`, t19 reads `syms`; whichever runs first
-    * pays the single derivation, `_SUCCESS` guards torn writes and the
-    * per-path lock serializes racing first callers in one JVM. */
+    * pays the single derivation. */
   private def cachedBpe(s: SparkSession, dir: String,
                         steps: Int): (DataFrame, DataFrame) = {
-    val tmp = graft.ops.Scratch.dir("graft_bpe", s"$dir|$steps")
     import s.implicits._
-    tmp.intern.synchronized {
-      // root _SUCCESS is touched in the stage AFTER both sub-writes, so
-      // post-rename it certifies the whole two-table artifact (same
-      // cross-process contract as cachedKnn)
-      val have =
-        java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS"))
-      if (!have) {
-        val (rules, syms) = bpeLoop(Tables.documents(s, dir), steps)
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        rules.reduce(_ unionByName _)
-          .select($"step", $"lhs", $"rhs", $"cnt", $"syms_before")
-          .write.mode("overwrite").parquet(s"$stage/rules")
-        syms.write.mode("overwrite").parquet(s"$stage/syms")
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(stage, "_SUCCESS"))
-        graft.ops.Scratch.publish(stage, tmp)
-      }
+    val root = graft.ops.Scratch.artifact(s, "graft_bpe", dir, steps) { stage =>
+      val (rules, syms) = bpeLoop(Tables.documents(s, dir), steps)
+      rules.reduce(_ unionByName _)
+        .select($"step", $"lhs", $"rhs", $"cnt", $"syms_before")
+        .write.mode("overwrite").parquet(s"$stage/rules")
+      syms.write.mode("overwrite").parquet(s"$stage/syms")
     }
-    (s.read.parquet(s"$tmp/rules"), s.read.parquet(s"$tmp/syms"))
+    (s.read.parquet(s"$root/rules"), s.read.parquet(s"$root/syms"))
   }
 
   /** Synthesized audio fixtures PERSISTED once per (corpus dir, family)
@@ -534,29 +477,19 @@ object LlmPipeline {
     * their synth per run). The decode/transform path — what each query
     * actually tests — still runs live against the artifact bytes, and
     * each oracle still recomputes samples arithmetically, so a fake
-    * decoder cannot stay green. Same cross-process contract as
-    * cachedKnn: _SUCCESS is trusted because the write is staged and
-    * atomically renamed. */
+    * decoder cannot stay green. */
   private def cachedWavs(s: SparkSession, dir: String, tag: String,
-      cols: Seq[String])(synth: Long => Seq[Array[Byte]]): DataFrame = {
-    val tmp = graft.ops.Scratch.dir(s"graft_wav_$tag", dir)
-    tmp.intern.synchronized {
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"))) {
-        import s.implicits._
-        val stage = graft.ops.Scratch.stageFor(tmp)
-        graft.ops.Spread.fanout(
-            Tables.documents(s, dir).select($"doc_id")).as[Long]
-          .mapPartitions(_.map(id => id -> synth(id)))
-          .toDF("doc_id", "p")
-          .select(col("doc_id") +:
-            cols.zipWithIndex.map { case (c, i) => col("p")(i).as(c) }: _*)
-          .write.mode("overwrite").parquet(stage)
-        graft.ops.Scratch.publish(stage, tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+      cols: Seq[String])(synth: Long => Seq[Array[Byte]]): DataFrame =
+    s.read.parquet(graft.ops.Scratch.artifact(s, s"graft_wav_$tag", dir) { stage =>
+      import s.implicits._
+      graft.ops.Spread.fanout(
+          Tables.documents(s, dir).select($"doc_id")).as[Long]
+        .mapPartitions(_.map(id => id -> synth(id)))
+        .toDF("doc_id", "p")
+        .select(col("doc_id") +:
+          cols.zipWithIndex.map { case (c, i) => col("p")(i).as(c) }: _*)
+        .write.mode("overwrite").parquet(stage)
+    })
 
   /** The JDK's WAVE codec SPI instances, resolved ONCE per JVM (lazily,
     * so each executor JVM resolves its own): `AudioSystem.

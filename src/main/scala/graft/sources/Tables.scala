@@ -22,23 +22,26 @@ object Tables {
     * the RESOLVED LOGICAL PLAN per (session, path). No data and no
     * blocks are cached — execution still scans the parquet fresh every
     * run (the bench's contamination guards are untouched); only file
-    * listing + schema resolution are reused. Weak on the session so
-    * short-lived test sessions stay collectable. */
+    * listing + schema resolution are reused. An entry is keyed on the
+    * table path's modification time too, so a table rewritten in place
+    * is listed again instead of read through its deleted files. Weak on
+    * the session so short-lived test sessions stay collectable. */
   private val relCache =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
+      scala.collection.concurrent.TrieMap[(String, Long), DataFrame]]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val m = relCache.synchronized {
       var v = relCache.get(spark)
       if (v == null) {
-        v = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        v = scala.collection.concurrent.TrieMap.empty[(String, Long), DataFrame]
         relCache.put(spark, v)
       }
       v
     }
-    m.getOrElseUpdate(s"$dir/$name.parquet",
-      spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    m.getOrElseUpdate(path -> new java.io.File(path).lastModified,
+      spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -21,15 +21,21 @@ class DegenerateSpec extends SparkTestBase {
     * `body` on it, then removes the dir and the artifacts keyed on it. */
   private def withCorpus[T](docs: Seq[(Long, String)])(body: String => T): T = {
     val dir = java.nio.file.Files.createTempDirectory("graft_degenerate").toString
-    val rows = docs.map { case (id, t) => Row(id, t, "en", "src0", t.length.toLong) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), docSchema)
-      .write.parquet(s"$dir/documents.parquet")
+    writeDocs(dir, docs)
     try body(dir) finally cleanup(dir)
   }
 
+  private def writeDocs(dir: String, docs: Seq[(Long, String)]): Unit = {
+    val rows = docs.map { case (id, t) => Row(id, t, "en", "src0", t.length.toLong) }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), docSchema)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  /** Removes `dir` and every scratch path keyed on it: `Scratch.dir`
+    * and `Scratch.artifact` both name theirs `<tag>_<key8(dir)>...`. */
   private def cleanup(dir: String): Unit = {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val suffix = "_" + graft.ops.Scratch.key8(s"${graft.ops.Scratch.Rev}|$dir")
+    val suffix = "_" + graft.ops.Scratch.key8(dir)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rm))
       f.delete()
@@ -75,6 +81,28 @@ class DegenerateSpec extends SparkTestBase {
     } yield (i, j, shared.size, sets(i).size, sets(j).size)
   }
 
+  private def d42Counts(dir: String): Map[Long, (Long, Long)] =
+    run("d42_dfcap_sweep", dir).collect()
+      .map(r => r.getAs[Long]("cap") -> (r.getAs[Long]("n_candidates"), r.getAs[Long]("n_dups"))).toMap
+
+  /** d42 by brute force over 3-shingle sets `sh3`: df at corpus grain; a
+    * pair is a candidate at cap c when its cheapest shared shingle has
+    * df <= c. */
+  private def d42Brute(sh3: Map[Long, Set[String]]): Map[Long, (Long, Long)] = {
+    val df3 = sh3.values.toSeq.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val sample = sh3.filter(_._1 % 4 == 0)
+    val ks = sample.keys.toSeq.sorted
+    Seq(16L, 32L, 64L, 128L).map { c =>
+      val cand = for {
+        i <- ks; j <- ks if i < j
+        shared = sample(i) & sample(j)
+        if shared.nonEmpty && shared.map(df3).min <= c
+      } yield (shared.size, sample(i).size, sample(j).size)
+      val dups = cand.count { case (it, na, nb) => it.toDouble / (na + nb - it) >= 0.5 }
+      c -> (cand.size.toLong, dups.toLong)
+    }.toMap
+  }
+
   test("near-dup family on an empty corpus: same schema, zero rows or zero counts") {
     val schemas = withCorpus(dupDocs)(dir => family.map(q => q -> run(q, dir).schema).toMap)
     withCorpus(Seq.empty) { dir =>
@@ -116,22 +144,8 @@ class DegenerateSpec extends SparkTestBase {
         assert(d37(t) == (ok.size.toLong, ok.flatMap(p => Seq(p._1, p._2)).distinct.size.toLong), s"t=$t")
       }
 
-      // d42: df at corpus grain; a pair is a candidate at cap c when its
-      // cheapest shared shingle has df <= c
-      val df3 = sh3.values.toSeq.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val sample = sh3.filter(_._1 % 4 == 0)
-      val d42 = run("d42_dfcap_sweep", dir).collect()
-        .map(r => r.getAs[Long]("cap") -> (r.getAs[Long]("n_candidates"), r.getAs[Long]("n_dups"))).toMap
-      for (c <- Seq(16L, 32L, 64L, 128L)) {
-        val ks = sample.keys.toSeq.sorted
-        val cand = for {
-          i <- ks; j <- ks if i < j
-          shared = sample(i) & sample(j)
-          if shared.nonEmpty && shared.map(df3).min <= c
-        } yield (shared.size, sample(i).size, sample(j).size)
-        val dups = cand.count { case (it, na, nb) => it.toDouble / (na + nb - it) >= 0.5 }
-        assert(d42(c) == (cand.size.toLong, dups.toLong), s"cap $c")
-      }
+      val d42 = d42Counts(dir)
+      assert(d42 == d42Brute(sh3))
       assert(d42(16L)._2 == 6L)
 
       // d43: per width, df at sample grain, cap 32, dup when 3·it >= na+nb
@@ -146,6 +160,21 @@ class DegenerateSpec extends SparkTestBase {
         assert(d43(w.toLong) == ((shw.values.flatten.toSet.size.toLong, cand.size.toLong, dups.toLong)),
           s"w=$w")
       }
+    }
+  }
+
+  test("d42 on a corpus rewritten in place counts the new docs, not its old artifacts") {
+    // two duplicates of a new text and three unrelated docs, against the
+    // four duplicates of the first corpus: one pair at every cap, not six
+    val rewritten = Seq(ids(0) -> "one two three four five six seven eight",
+      ids(1) -> "one two three four five six seven eight") ++
+      ids.drop(2).zipWithIndex.map { case (id, k) => id -> s"lone $k words stand apart here" }
+    withCorpus(dupDocs) { dir =>
+      assert(d42Counts(dir) == d42Brute(dupDocs.toMap.view.mapValues(grams(_, 3)).toMap))
+      writeDocs(dir, rewritten)
+      val want = d42Brute(rewritten.toMap.view.mapValues(grams(_, 3)).toMap)
+      assert(want(16L)._2 == 1L)
+      assert(d42Counts(dir) == want)
     }
   }
 
