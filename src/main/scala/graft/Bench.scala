@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at the given scale factor
-  * and prints ONE JSON line.
+  * and prints the full JSON line, then a compact summary line.
   *
   * STRUCTURE (r13): the battery runs in K FRESH-JVM SHARDS (default 4),
   * coordinated by this process — each shard JVM times ~|queries|/K
@@ -389,7 +389,7 @@ object Bench {
 
   /** Launch one shard JVM with this JVM's own options (add-opens, heap,
     * -D props) and classpath; stdout/stderr go to a per-shard log under
-    * tmp so the coordinator's stdout stays one clean JSON line. */
+    * tmp so the coordinator's stdout stays its two JSON lines. */
   private def spawnWorker(spec: String, out: String, idx: Int): Int = {
     import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths.get(
@@ -490,5 +490,8 @@ object Bench {
     // this file instead of scraping stdout
     save("BENCH_line.json", line)
     println(line)
+    // a compact summary LAST (under 500 chars): a reader of a truncated
+    // or line-limited capture still parses the headline
+    println(s"""{"metric":"total","unit":"sec","value":${r(total)},"failures":$failures,"sf":"${esc(sfDir)}","n_queries":${mins.size}}""")
   }
 }

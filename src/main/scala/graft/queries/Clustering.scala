@@ -136,7 +136,7 @@ object Clustering {
     * half of k-means (c1 trains; this routes). One broadcast crossJoin
     * + the map-side TopKPerKey argmin; the corpus never reshuffles.
     * Shared by the s20 batch posture and the incremental
-    * [[graft.streaming.Streams.centroidRouteBatch]] so the two cannot
+    * [[graft.streaming.Streams.centroidRoute]] so the two cannot
     * drift. */
   def route(embeddings: DataFrame, cents: DataFrame): DataFrame =
     assign(prep(embeddings), cents)

@@ -98,13 +98,15 @@ object Streaming {
     // checks the whole stream → export → interchange loop, not just
     // the stream compute. Fresh temp checkpoint per invocation → the
     // single-file source replays fully and batch ids restart at 0, so
-    // the per-batch output dirs overwrite idempotently.
+    // the per-batch output dirs overwrite idempotently. They are read
+    // back as listed paths: a glob path makes Spark's sink-metadata
+    // probe log a FileNotFoundException trace.
     "s8_stream_export" -> ((s, dir) => {
       import s.implicits._
       val out = graft.ops.Scratch.dir("graft_sexport", dir)
       val shape = Tables.documents(s, dir)
         .filter($"n_chars" >= 200).select($"doc_id", $"lang", $"n_chars")
-      val q = Streams.documentsStream(s, dir)
+      val q = Streams.fixtureStream(s, dir, "documents")
         .filter($"n_chars" >= 200).select($"doc_id", $"lang", $"n_chars")
         .writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
@@ -113,7 +115,8 @@ object Streaming {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      s.read.schema(shape.schema).json(s"$out/b*").orderBy($"doc_id")
+      val parts = new java.io.File(out).list().filter(_.matches("b\\d+")).map(b => s"$out/$b")
+      s.read.schema(shape.schema).json(parts.toSeq: _*).orderBy($"doc_id")
     }),
 
     // CUSTOM-STATE sessionization (flatMapGroupsWithState): imperative
@@ -171,8 +174,8 @@ object Streaming {
     }),
 
     // EXACTLY-ONCE streaming upsert into a keyed SERVING TABLE: the
-    // event stream maintains latest-state-per-user through foreachBatch
-    // with batchId-versioned idempotent writes (replays are no-ops —
+    // event stream maintains latest-state-per-user ([[Streams.serving]])
+    // through foreachBatch on the versioned store (replays are no-ops —
     // the contract exactly-once foreachBatch sinks must implement).
     // The query streams the fixture through the upsert and returns the
     // final serving table; the oracle is the batch latest-per-user.
@@ -184,22 +187,20 @@ object Streaming {
       // clear the previous marker/versions so the replay guard doesn't
       // no-op the rerun
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
-      val q = Streams.eventsStream(s, dir)
+      val q = Streams.fixtureStream(s, dir, "events")
         .writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
-          Streams.upsertServing(b, out, id)
+          Streams.serving.step(b, out, id)
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      Streams.readServing(s, out)
-        .select($"user_id", $"us", $"event_id", $"event_type", $"value")
-        .orderBy($"user_id")
+      Streams.serving.read(s, out).orderBy($"user_id")
     }),
 
     // incremental DISTINCT COUNTING via mergeable sketches: the
     // monitoring widget every ingest keeps current — "distinct users
     // per event type, so far" — maintained as a per-micro-batch HLL
-    // union into kilobyte persisted state ([[Streams.distinctSketchBatch]]),
+    // union into kilobyte persisted state ([[Streams.distinctUsers]]),
     // never a rescan. Batch posture below (the one-shot sketch, q57's
     // family — rows-only: no sketch library in the oracle engine);
     // StreamingSpec proves the 4-micro-batch incremental state lands on
@@ -208,10 +209,7 @@ object Streaming {
     // and the ≤5% accuracy floor vs exact counts.
     "s13_streaming_distinct" -> ((s, dir) => {
       import s.implicits._
-      Tables.events(s, dir)
-        .groupBy($"event_type")
-        .agg(hll_sketch_estimate(hll_sketch_agg($"user_id")).as("approx_users"))
-        .orderBy($"event_type")
+      Streams.distinctUsers(Tables.events(s, dir)).orderBy($"event_type")
     }),
 
     // s13's error envelope (q11b's posture): the one-shot sketch
@@ -232,27 +230,16 @@ object Streaming {
     // STREAM-SIDE FIELD QUALITY — dq12's ingest contract as the live
     // monitor it would actually run as: per event family, event /
     // empty-payload / non-positive-value counters with ppm verdicts.
-    // Batch posture below; the INCREMENTAL execution is
-    // [[graft.streaming.Streams.fieldQualityBatch]]: per-micro-batch
-    // partial counts SUM-merged into batchId-versioned state
-    // (|event_type| rows total regardless of volume, replay-
-    // idempotent), ppm derived at read by the same projection.
-    // StreamingSpec proves stream == one-shot and replay no-op.
+    // Batch posture below; the INCREMENTAL execution is the same
+    // [[graft.streaming.Streams.fieldQuality]] summary: per-micro-batch
+    // partial counts SUM-merged into versioned state (|event_type| rows
+    // total regardless of volume, replay-idempotent), ppm derived at
+    // read. StreamingSpec proves stream == one-shot and replay no-op.
     // Distinct-user breadth is deliberately NOT here: exact distincts
     // don't merge by SUM — that is s13's HLL-sketch state.
     "s19_stream_field_quality" -> ((s, dir) => {
       import s.implicits._
-      Tables.events(s, dir)
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when($"props".isNull || $"props" === "", 1L).otherwise(0L))
-            .as("n_empty"),
-          sum(when($"value".isNull || $"value" <= 0.0, 1L).otherwise(0L))
-            .as("n_nonpos"))
-        .select($"event_type", $"n_events",
-          expr("n_empty * 1000000 div n_events").as("empty_props_ppm"),
-          expr("n_nonpos * 1000000 div n_events").as("nonpos_value_ppm"))
-        .orderBy($"event_type")
+      Streams.fieldQuality(Tables.events(s, dir)).orderBy($"event_type")
     }),
 
     // SESSION OUTCOME MONITOR — sessionization labeled by what the
@@ -329,20 +316,14 @@ object Streaming {
     // type so the rank is a total order and replayable. Batch posture
     // below (hour counts → map-side-heap TopKPerKey — the rank never
     // sees more than k rows per window per partition); the INCREMENTAL
-    // execution is [[Streams.windowTopkBatch]]: per-micro-batch count
-    // deltas SUM-merged into versioned state (windows × types rows, not
-    // event volume), rank derived at read time, replays no-ops —
+    // execution is the same [[Streams.hourCounts]] summary: per-micro-
+    // batch counts SUM-merged into versioned state (windows × types rows,
+    // not event volume), rank derived at read time, replays no-ops —
     // StreamingSpec proves multi-batch accumulation lands exactly on
     // this one-shot result and that a replayed batch id is a no-op.
     "s14_trending_topk" -> ((s, dir) => {
       import s.implicits._
-      val counted = Tables.events(s, dir)
-        .groupBy(window($"ts", "1 hour"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp($"window.start").as("w_start"),
-          $"event_type", $"n")
-      graft.plans.TopK.perKey(counted, keys = Seq(col("w_start")),
-        order = Seq(col("n").desc, col("event_type").asc), k = 3)
+      Streams.windowTopk(Streams.hourCounts(Tables.events(s, dir)), k = 3)
         .orderBy($"w_start", col("n").desc, $"event_type")
     }),
 
@@ -352,19 +333,14 @@ object Streaming {
     // SUM; the reason production monitors keep histograms, not
     // samples). The percentile is nearest-rank decided on exact
     // integers (cum·100 ≥ tot·q → smallest bucket), so no float ever
-    // forms; batch posture here, and the SAME percentilesFromBuckets
-    // definition serves the incremental path (Streams.latencyHistBatch
-    // + readLatencyPercentiles — batchId-versioned, replay-idempotent;
+    // forms; batch posture here, and the SAME Streams.latencyBuckets
+    // summary serves the incremental path (versioned, replay-idempotent;
     // StreamingSpec proves accumulation == one-shot and replay no-op).
     // Scale: one (type, bucket) map-side-combining count, windows over
     // the BOUNDED bucket table, never event volume.
     "s15_latency_percentiles" -> ((s, dir) => {
       import s.implicits._
-      val b = Tables.events(s, dir)
-        .select($"event_type", floor($"value").cast("long").as("bucket"))
-        .groupBy($"event_type", $"bucket").agg(count(lit(1)).as("n"))
-      graft.streaming.Streams.percentilesFromBuckets(b)
-        .orderBy($"event_type")
+      Streams.latencyBuckets(Tables.events(s, dir)).orderBy($"event_type")
     }),
 
     // WATERMARK DROP ACCOUNTING — the "what would a 30-minute watermark
@@ -387,22 +363,17 @@ object Streaming {
     // agg.
     // RATE ANOMALIES (the pager): hourly counts vs a trailing-6-hour
     // Poisson baseline, 3σ decided on exact integers — see
-    // [[graft.streaming.Streams.rateAnomaliesFromCounts]] (ONE shared
-    // definition; the incremental execution reads s14's versioned
-    // (window, type) count state via Streams.readRateAnomalies — one
-    // state table serving both the leaderboard and the pager, which is
-    // how production monitors actually share aggregation state).
+    // [[graft.streaming.Streams.rateAnomaliesFromCounts]], a second
+    // report of s14's [[Streams.hourCounts]] state (the incremental
+    // execution reads the same versioned state — one state table serving
+    // both the leaderboard and the pager, which is how production
+    // monitors actually share aggregation state).
     // StreamingSpec proves multi-batch accumulation lands on this
     // one-shot result, replay is a no-op, and the flag set equals a
     // local brute-force replay of the 3σ rule.
     "s16_rate_anomaly" -> ((s, dir) => {
       import s.implicits._
-      val counted = Tables.events(s, dir)
-        .groupBy(window($"ts", "1 hour"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp($"window.start").as("w_start"),
-          $"event_type", $"n")
-      graft.streaming.Streams.rateAnomaliesFromCounts(counted)
+      Streams.rateAnomaliesFromCounts(Streams.hourCounts(Tables.events(s, dir)))
         .orderBy($"event_type", $"w_start")
     }),
 
@@ -431,25 +402,16 @@ object Streaming {
     // exact centroids; retrain-on-ingest is an offline job, d27's
     // posture), and the per-cluster admission counters are the
     // load-balance monitor behind IVF cell sizing. Batch posture below
-    // (route + one k-row aggregate); the INCREMENTAL execution is
-    // [[graft.streaming.Streams.centroidRouteBatch]]: per-micro-batch
-    // routed partials merged into batchId-versioned state (k rows
-    // total, SUM/MIN/MAX merges, replay-idempotent), shares derived at
-    // read. StreamingSpec proves stream == one-shot and replay no-op.
+    // (route + one k-row aggregate); the INCREMENTAL execution is the
+    // same [[graft.streaming.Streams.centroidRoute]] summary: per-micro-
+    // batch routed partials merged into versioned state (k rows total,
+    // SUM/MIN/MAX merges, replay-idempotent), shares derived at read.
+    // StreamingSpec proves stream == one-shot and replay no-op.
     "s20_stream_centroid_route" -> ((s, dir) => {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val cents = graft.queries.Clustering.centroids(emb, k = 8, iters = 2)
-      val routed = graft.queries.Clustering.route(emb, cents)
-        .groupBy($"cid")
-        .agg(count(lit(1)).as("n_vecs"),
-          min($"vec_id").as("min_vec_id"), max($"vec_id").as("max_vec_id"))
-      val tot = routed.agg(sum($"n_vecs").as("tot"))
-      routed.crossJoin(broadcast(tot))
-        .select($"cid".as("cluster_id"), $"n_vecs",
-          $"min_vec_id", $"max_vec_id",
-          expr("n_vecs * 1000000 div tot").as("share_ppm"))
-        .orderBy($"cluster_id")
+      Streams.centroidRoute(cents)(emb).orderBy($"cluster_id")
     }),
   )
 

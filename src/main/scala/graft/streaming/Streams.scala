@@ -6,6 +6,47 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.Tables
 
+/** A mergeable summary, the one shape of the incremental streaming
+  * monitors: a partial aggregate per key, an associative merge of
+  * partials, and a read-time report. Each measure is `(name, partial
+  * aggregate, merge of that column)`, so a partial and its merge are
+  * stated together and cannot drift. The batch posture is
+  * `report(partial(events))` ([[apply]]); the foreachBatch posture
+  * commits `merge(prev ∪ partial(batch))` through [[Versioned]]
+  * ([[step]], a no-op on a replayed batch id) and reads
+  * `report(state)` ([[read]]). `prep` maps the raw rows to what the
+  * keys and measures read. The state is keys × measures, never event
+  * volume. */
+final case class Summary(keys: Seq[(String, Column)],
+                         measures: Seq[(String, Column, Column => Column)],
+                         report: DataFrame => DataFrame = identity,
+                         prep: DataFrame => DataFrame = identity) {
+
+  private def aggregate(df: DataFrame, ks: Seq[Column], ms: Seq[Column]) =
+    df.groupBy(ks: _*).agg(ms.head, ms.tail: _*)
+
+  private def partial(events: DataFrame): DataFrame =
+    aggregate(prep(events), keys.map { case (k, c) => c.as(k) },
+      measures.map { case (m, p, _) => p.as(m) })
+
+  private def merge(parts: DataFrame): DataFrame =
+    aggregate(parts, keys.map(k => col(k._1)),
+      measures.map { case (m, _, f) => f(col(m)).as(m) })
+
+  def apply(events: DataFrame): DataFrame = report(partial(events))
+
+  def step(batch: DataFrame, dir: String, batchId: Long): Unit =
+    Versioned.commit(dir, batchId) { (prev, out) =>
+      val p = partial(batch)
+      prev.fold(p)(v => merge(batch.sparkSession.read.parquet(v).unionByName(p)))
+        .write.mode("overwrite").parquet(out)
+    }
+
+  def read(s: SparkSession, dir: String): DataFrame =
+    report(s.read.parquet(Versioned.committed(dir)
+      .getOrElse(sys.error(s"no committed state under $dir"))))
+}
+
 /** Structured Streaming surface over the `events` table. The transforms
   * are plain Column expressions shared verbatim between the batch queries
   * (oracle-checked in [[graft.queries.Streaming]]) and the streaming
@@ -16,22 +57,22 @@ object Streams {
 
   private def dsum(c: Column) = graft.ops.Num.dsum(c)
 
-  /** `readStream` source with the batch-derived schema (a streaming scan
-    * cannot infer), including the ns→µs normalization of `Tables.events`. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/events.parquet")
+  /** `readStream` source over the fixture table `table` with the
+    * batch-derived schema (a streaming scan cannot infer), including the
+    * ns→µs normalization of `Tables.events` for `events`. */
+  def fixtureStream(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val file = s"$dir/$table.parquet"
     // the file-stream source monitors a DIRECTORY; expose the single
     // parquet fixture through a FIXED per-source temp dir (symlink — no
     // copy; idempotent so repeated bench/verify invocations reuse it
     // instead of leaking a fresh dir per call)
     val streamDir = java.nio.file.Paths.get(
-      graft.ops.Scratch.dir("graft_stream", dir))
+      graft.ops.Scratch.dir(s"graft_stream_$table", dir))
     java.nio.file.Files.createDirectories(streamDir)
-    val link = streamDir.resolve("events.parquet")
-    ensureSymlink(link, java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val raw = spark.readStream.schema(batch.schema)
+    ensureSymlink(streamDir.resolve(s"$table.parquet"), java.nio.file.Paths.get(file))
+    val raw = spark.readStream.schema(spark.read.parquet(file).schema)
       .parquet(streamDir.toString)
-    Tables.normalizeTs(raw)
+    if (table == "events") Tables.normalizeTs(raw) else raw
   }
 
   /** Tumbling 1-hour counts — shared shape of query `s1_tumbling`. */
@@ -213,245 +254,88 @@ object Streams {
       .toDF("user_id", "session_start_us", "session_end_us", "n_events")
   }
 
-  /** Exactly-once UPSERT of a micro-batch into a keyed parquet
-    * "serving table" (latest event per user) — the foreachBatch →
-    * serving-store maintenance pattern. Plain parquet has no MERGE, so
-    * atomicity comes from VERSIONED DIRECTORIES: read the version the
-    * marker names, merge latest-wins by (us, event_id), write version
-    * `batchId` (deterministic!), then repoint the marker. A replayed
-    * micro-batch (restart before the checkpoint commit) is recognized
-    * by the marker already naming a version >= its batchId and becomes
-    * a no-op — idempotent by construction, which is exactly the
-    * contract foreachBatch requires for exactly-once sinks
-    * (batchId-keyed idempotent writes). On a real
-    * cluster the marker flip is a rename on a DFS; a transactional
-    * table format (MERGE INTO) replaces the whole dance unchanged. */
-  /** Flip a batchId-versioned state's `_CURRENT` marker ATOMICALLY:
-    * write-to-temp + ATOMIC_MOVE (the Scratch.publish posture). A
-    * truncate-in-place write would leave an empty/partial marker on a
-    * crash mid-write, after which every subsequent batch and read
-    * throws NumberFormatException on `v.toLong` — permanently wedging
-    * the stream state. */
-  private def writeMarker(marker: java.nio.file.Path, batchId: Long): Unit = {
-    import java.nio.file._
-    val tmp = marker.resolveSibling(
-      s"._CURRENT.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, batchId.toString.getBytes("UTF-8"))
-    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** s11's serving table: the latest event per user, latest-wins by
+    * (us, event_id) — the foreachBatch → serving-store maintenance
+    * pattern (plain parquet has no MERGE; the store's versions give the
+    * atomicity). The max of a struct orders by its fields in turn, so
+    * `max(struct(us, event_id, …))` is the latest row, and it merges by
+    * max again. */
+  val serving: Summary = Summary(
+    Seq("user_id" -> col("user_id")),
+    Seq(("latest", max(struct(expr("unix_micros(ts)").as("us"), col("event_id"),
+      col("event_type"), col("value"))), max)),
+    report = _.select(col("user_id"), col("latest.*")))
 
-  def upsertServing(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val latest = batch
-      .select(col("user_id"), expr("unix_micros(ts)").as("us"),
-        col("event_id"), col("event_type"), col("value"))
-    val base =
-      if (java.nio.file.Files.exists(marker)) {
-        val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        // replay guard: merging v>=batchId would double-apply this batch
-        if (v.toLong >= batchId) return
-        Some(spark.read.parquet(s"$dir/v$v"))
-      } else None
-    val merged = base.map(_.unionByName(latest)).getOrElse(latest)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("us").desc, col("event_id").desc)
-    merged.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn")
-      .write.mode("overwrite").parquet(s"$dir/v$batchId")
-    writeMarker(marker, batchId)
-  }
+  /** Per-(hour window, event_type) counts: one state, two reports —
+    * s14's leaderboard ([[windowTopk]]) and s16's pager
+    * ([[rateAnomaliesFromCounts]]). The window is `window('1 hour')`
+    * itself (an integer-micros reformulation disagreed with window() on
+    * pre-1970 timestamps: div truncates where window() floors). A late
+    * event bumps one window's count instead of re-ranking history, and
+    * the state is windows × types, not event volume. */
+  val hourCounts: Summary = Summary(
+    Seq("w_start" -> unix_timestamp(window(col("ts"), "1 hour")("start")),
+      "event_type" -> col("event_type")),
+    Seq(("n", count(lit(1)), sum)))
 
-  /** Current contents of an [[upsertServing]] serving table. */
-  def readServing(spark: SparkSession, dir: String): DataFrame = {
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-    spark.read.parquet(s"$dir/v$v")
-  }
-
-  /** Incremental per-window COUNT state behind [[readWindowTopk]]
-    * (query `s14_trending_topk`'s streaming execution): the micro-batch
-    * is pre-aggregated to its (w_start, event_type) counts — the only
-    * thing that crosses into state; raw events never accumulate — and
-    * SUM-merged into the persisted count table. Rank is derived at READ
-    * time from the current version, so a late event bumps one window's
-    * count instead of re-ranking history, and the state size is
-    * windows × types, not event volume. batchId-versioned with the
-    * [[upsertServing]] marker dance: a replayed batch id (v >= batchId)
-    * is a no-op — the exactly-once-by-idempotence contract foreachBatch
-    * sinks must implement. */
-  def windowTopkBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    // the SAME window('1 hour') definition as the batch-posture query
-    // (one definition, crawlOrderKey's posture — an integer-micros
-    // reformulation here already disagreed with window() on pre-1970
-    // timestamps: div truncates where window() floors)
-    val inc = batch
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_timestamp(col("window.start")).as("w_start"),
-        col("event_type"), col("n"))
-    val base =
-      if (java.nio.file.Files.exists(marker)) {
-        val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        // replay guard: merging v>=batchId would double-count this batch
-        if (v.toLong >= batchId) return
-        Some(spark.read.parquet(s"$dir/v$v"))
-      } else None
-    val merged = base.map(_.unionByName(inc)).getOrElse(inc)
-      .groupBy(col("w_start"), col("event_type"))
-      .agg(sum(col("n")).as("n"))
-    merged.write.mode("overwrite").parquet(s"$dir/v$batchId")
-    writeMarker(marker, batchId)
-  }
-
-  /** Current top-`k` event types per hour window from
-    * [[windowTopkBatch]] state (count DESC, event_type ASC ties). */
-  def readWindowTopk(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-    val counts = spark.read.parquet(s"$dir/v$v")
+  /** Top-`k` event types per hour window of [[hourCounts]] (count DESC,
+    * event_type ASC ties). */
+  def windowTopk(counts: DataFrame, k: Int): DataFrame =
     graft.plans.TopK.perKey(counts, keys = Seq(col("w_start")),
       order = Seq(col("n").desc, col("event_type").asc), k = k)
-  }
 
-  /** Incremental LATENCY-HISTOGRAM state (s15): the SLO monitor's whole
-    * state is per-(event_type, integer-bucket) counts, which merge by
-    * SUM — kilobytes per type regardless of event volume, the reason
+  /** s15's latency histogram: per-(event_type, integer-bucket) counts —
+    * kilobytes per type regardless of event volume, the reason
     * production percentile monitors keep histograms instead of samples.
-    * Same batchId-versioned, replay-idempotent layout as
-    * [[windowTopkBatch]]; percentiles are DERIVED AT READ by
-    * [[percentilesFromBuckets]], never stored. */
-  def latencyHistBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val inc = batch
-      .select(col("event_type"), floor(col("value")).cast("long").as("bucket"))
-      .groupBy(col("event_type"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-    val base =
-      if (java.nio.file.Files.exists(marker)) {
-        val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        // replay guard: merging v>=batchId would double-count this batch
-        if (v.toLong >= batchId) return
-        Some(spark.read.parquet(s"$dir/v$v"))
-      } else None
-    val merged = base.map(_.unionByName(inc)).getOrElse(inc)
-      .groupBy(col("event_type"), col("bucket"))
-      .agg(sum(col("n")).as("n"))
-    merged.write.mode("overwrite").parquet(s"$dir/v$batchId")
-    writeMarker(marker, batchId)
-  }
+    * Percentiles are derived at read, never stored. */
+  val latencyBuckets: Summary = Summary(
+    Seq("event_type" -> col("event_type"), "bucket" -> floor(col("value")).cast("long")),
+    Seq(("n", count(lit(1)), sum)),
+    report = percentilesFromBuckets)
 
-  /** Current percentile report from [[latencyHistBatch]] state. */
-  def readLatencyPercentiles(spark: SparkSession, dir: String): DataFrame = {
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-    percentilesFromBuckets(spark.read.parquet(s"$dir/v$v"))
-  }
+  /** s19's field quality: the per-event-family ingest-contract counters
+    * (events, empty/missing payloads, non-positive values), |event_type|
+    * rows regardless of volume. The ppm verdicts are derived at read: a
+    * stored ratio cannot merge. */
+  val fieldQuality: Summary = Summary(
+    Seq("event_type" -> col("event_type")),
+    Seq(("n", count(lit(1)), sum),
+      ("n_empty", sum(when(col("props").isNull || col("props") === "", 1L).otherwise(0L)), sum),
+      ("n_nonpos", sum(when(col("value").isNull || col("value") <= 0.0, 1L).otherwise(0L)), sum)),
+    report = _.select(col("event_type"), col("n").as("n_events"),
+      expr("n_empty * 1000000 div n").as("empty_props_ppm"),
+      expr("n_nonpos * 1000000 div n").as("nonpos_value_ppm")))
 
-  /** Incremental FIELD-QUALITY state (s19): the per-event-family
-    * ingest-contract counters — events, empty/missing payloads,
-    * non-positive values — merge by SUM, so the whole state is
-    * |event_type| rows regardless of event volume. Same
-    * batchId-versioned, replay-idempotent layout as
-    * [[windowTopkBatch]]; ppm verdicts are DERIVED AT READ, never
-    * stored (a stored ratio cannot merge). */
-  def fieldQualityBatch(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val inc = batch
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("props").isNull || col("props") === "", 1L)
-          .otherwise(0L)).as("n_empty"),
-        sum(when(col("value").isNull || col("value") <= 0.0, 1L)
-          .otherwise(0L)).as("n_nonpos"))
-    val base =
-      if (java.nio.file.Files.exists(marker)) {
-        val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        // replay guard: merging v>=batchId would double-count this batch
-        if (v.toLong >= batchId) return
-        Some(spark.read.parquet(s"$dir/v$v"))
-      } else None
-    val merged = base.map(_.unionByName(inc)).getOrElse(inc)
-      .groupBy(col("event_type"))
-      .agg(sum(col("n")).as("n"), sum(col("n_empty")).as("n_empty"),
-        sum(col("n_nonpos")).as("n_nonpos"))
-    merged.write.mode("overwrite").parquet(s"$dir/v$batchId")
-    writeMarker(marker, batchId)
-  }
+  /** s20's centroid route: embeddings routed against a FROZEN codebook
+    * ([[graft.queries.Clustering.route]] — broadcast crossJoin + map-side
+    * argmin, never a corpus shuffle), reduced to per-cluster (n, min id,
+    * max id), which merge by SUM/MIN/MAX: k rows regardless of stream
+    * volume. The codebook is NOT retrained on ingest (d27's production
+    * posture: retrain is an offline job). Shares are derived at read. */
+  def centroidRoute(cents: DataFrame): Summary = Summary(
+    Seq("cid" -> col("cid")),
+    Seq(("n_vecs", count(lit(1)), sum), ("min_vec_id", min(col("vec_id")), min),
+      ("max_vec_id", max(col("vec_id")), max)),
+    report = st => st.crossJoin(broadcast(st.agg(sum(col("n_vecs")).as("tot"))))
+      .select(col("cid").as("cluster_id"), col("n_vecs"), col("min_vec_id"),
+        col("max_vec_id"), expr("n_vecs * 1000000 div tot").as("share_ppm")),
+    prep = graft.queries.Clustering.route(_, cents))
 
-  /** Incremental CENTROID-ROUTE state (s20): each arriving embedding
-    * micro-batch is routed against a FROZEN centroid codebook
-    * ([[graft.queries.Clustering.route]] — broadcast crossJoin +
-    * map-side argmin, never a corpus shuffle), reduced to per-cluster
-    * counters (n, min id, max id), and merged into the batchId-
-    * versioned state: n by SUM, ids by MIN/MAX — all three merge
-    * associatively, so the state is k rows regardless of stream
-    * volume and replays are no-ops. The codebook is NOT retrained on
-    * ingest (d27's production posture: retrain is an offline job).
-    * Share verdicts are derived at read — a stored share cannot
-    * merge. */
-  def centroidRouteBatch(batch: DataFrame, cents: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val inc = graft.queries.Clustering.route(batch, cents)
-      .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_vecs"),
-        min(col("vec_id")).as("min_vec_id"),
-        max(col("vec_id")).as("max_vec_id"))
-    val base =
-      if (java.nio.file.Files.exists(marker)) {
-        val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        if (v.toLong >= batchId) return
-        Some(spark.read.parquet(s"$dir/v$v"))
-      } else None
-    val merged = base.map(_.unionByName(inc)).getOrElse(inc)
-      .groupBy(col("cid"))
-      .agg(sum(col("n_vecs")).as("n_vecs"),
-        min(col("min_vec_id")).as("min_vec_id"),
-        max(col("max_vec_id")).as("max_vec_id"))
-    merged.write.mode("overwrite").parquet(s"$dir/v$batchId")
-    writeMarker(marker, batchId)
-  }
-
-  /** Current routing report from [[centroidRouteBatch]] state — same
-    * projection as the s20 batch posture, one definition of the share
-    * verdict. */
-  def readCentroidRoute(spark: SparkSession, dir: String): DataFrame = {
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-    val state = spark.read.parquet(s"$dir/v$v")
-    val tot = state.agg(sum(col("n_vecs")).as("tot"))
-    state.crossJoin(broadcast(tot))
-      .select(col("cid").as("cluster_id"), col("n_vecs"),
-        col("min_vec_id"), col("max_vec_id"),
-        expr("n_vecs * 1000000 div tot").as("share_ppm"))
-  }
-
-  /** Current field-quality report from [[fieldQualityBatch]] state —
-    * same projection as the batch-posture query (s19), one definition
-    * of the ppm verdicts. */
-  def readFieldQuality(spark: SparkSession, dir: String): DataFrame = {
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-    spark.read.parquet(s"$dir/v$v")
-      .select(col("event_type"), col("n").as("n_events"),
-        expr("n_empty * 1000000 div n").as("empty_props_ppm"),
-        expr("n_nonpos * 1000000 div n").as("nonpos_value_ppm"))
-  }
+  /** s13's distinct users per type: per-type HLL user sketches merged by
+    * sketch union (register max, insensitive to order and slicing).
+    * The state is kilobytes per group, so incremental distinct is a
+    * sketch merge per batch, never a rescan — q57's persisted-artifact
+    * form kept current by the stream. */
+  val distinctUsers: Summary = Summary(
+    Seq("event_type" -> col("event_type")),
+    Seq(("sk", hll_sketch_agg(col("user_id")), hll_union_agg)),
+    report = _.select(col("event_type"), hll_sketch_estimate(col("sk")).as("approx_users")))
 
   /** Nearest-rank percentile pick over integer histogram buckets —
     * smallest bucket whose cumulative count reaches q% of the total,
-    * decided entirely on exact integers (cum·100 ≥ tot·q). ONE
-    * definition shared by the batch-posture query (s15) and the
-    * incremental read path, so the two cannot drift. Input: one row
-    * per (event_type, bucket) with count `n`. */
+    * decided entirely on exact integers (cum·100 ≥ tot·q): the report
+    * of [[latencyBuckets]]. Input: one row per (event_type, bucket)
+    * with count `n`. */
   def percentilesFromBuckets(b: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wc = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
@@ -469,8 +353,8 @@ object Streams {
   }
 
   /** RATE-ANOMALY detector over hourly (w_start, event_type, n) counts —
-    * the alerting read of the SAME state [[windowTopkBatch]] keeps for
-    * s14 (one state table, two monitors). A cell is anomalous when its
+    * the alerting read of the SAME [[hourCounts]] state s14 ranks (one
+    * state table, two monitors). A cell is anomalous when its
     * count exceeds the trailing-6-hour Poisson baseline by 3σ, decided
     * on EXACT INTEGERS: with base = Σ trailing 6 counts (mean μ =
     * base/6, Var = μ under Poisson), n − μ > 3√μ ⇔ 6n > base AND
@@ -483,8 +367,7 @@ object Streams {
     * count cannot wrap silently (the DuckDB replay squares in HUGEINT
     * and errors loudly on its BIGINT cast instead — Num.fsum's loud-
     * overflow contract). n ≥ 2 suppresses single-event cold-start
-    * flags. ONE definition shared by the batch-posture query (s16) and
-    * [[readRateAnomalies]], so batch and incremental cannot drift. */
+    * flags. */
   def rateAnomaliesFromCounts(counts: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val span = counts.agg(min(col("w_start")).as("mn"), max(col("w_start")).as("mx"))
@@ -497,37 +380,18 @@ object Streams {
     val wb = Window.partitionBy(col("event_type")).orderBy(col("w_start"))
       .rowsBetween(-6, -1)
     val dev = (col("n") * 6 - col("base_6h"))
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))
+      .cast(DecimalType(38, 0))
     d.withColumn("base_6h", sum(col("n")).over(wb))
       .withColumn("bn", count(lit(1)).over(wb))
       .filter(col("bn") === 6 && col("n") >= 2 &&
         col("n") * 6 > col("base_6h") &&
         dev * dev > (col("base_6h") * 54)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+          .cast(DecimalType(38, 0)))
       .select(col("event_type"), col("w_start"), col("n"), col("base_6h"))
   }
 
-  /** Current anomaly report from [[windowTopkBatch]] state. */
-  def readRateAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    val marker = java.nio.file.Paths.get(dir, "_CURRENT")
-    val v = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-    rateAnomaliesFromCounts(spark.read.parquet(s"$dir/v$v"))
-  }
-
-  /** `readStream` documents source over a fixed symlink dir (same
-    * mechanism as [[eventsStream]]). */
-  def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/documents.parquet")
-    val streamDir = java.nio.file.Paths.get(
-      graft.ops.Scratch.dir("graft_docstream", dir))
-    java.nio.file.Files.createDirectories(streamDir)
-    ensureSymlink(streamDir.resolve("documents.parquet"),
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    spark.readStream.schema(batch.schema).parquet(streamDir.toString)
-  }
-
-  /** Fixture-symlink contract shared by eventsStream/documentsStream:
-    * the path must be a symlink to `target`. Checks the LINK ITSELF
+  /** [[fixtureStream]]'s symlink contract: the path must be a symlink
+    * to `target`. Checks the LINK ITSELF
     * (NOFOLLOW — plain exists() follows links, so a dangling one left
     * by a prior run reads as absent and createSymbolicLink would throw
     * FileAlreadyExistsException); a dangling or wrong-target link is
@@ -550,29 +414,16 @@ object Streams {
     }
   }
 
-  /** Batch-id-versioned state subdirs (`b<id>`) under `dir`, ascending
-    * by id, optionally only ids strictly below `ltId` — the shared
-    * contract of every exactly-once versioned store here (s11's serving
-    * table, s12's novelty index, s13's sketch state): reads take
-    * strictly-earlier versions, writes overwrite the batch's own. */
-  private def versionedSubdirs(dir: String, ltId: Option[Long]): Seq[String] =
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("b") &&
-        f.getName.drop(1).nonEmpty && f.getName.drop(1).forall(_.isDigit) &&
-        ltId.forall(f.getName.drop(1).toLong < _))
-      .sortBy(_.getName.drop(1).toLong).map(_.getPath)
-
   /** One micro-batch of incremental segment-novelty accounting (the
     * streaming posture of s12_crawl_novelty, driven from foreachBatch):
     * count this batch's segments that were never seen in any EARLIER
     * batch (anti join against the accumulating hash index) nor earlier
     * WITHIN this batch (p3's min-(doc_id,seg_idx) rule, batch-locally),
-    * then write the batch's novel segment hashes into the index under
-    * ITS OWN batch-id subdir. The versioning makes replay IDEMPOTENT
-    * (s11's exactly-once idiom): foreachBatch is at-least-once, and a
-    * replayed batch must not anti-join against its own prior partial
-    * write — the index read takes only subdirs with id < batchId, and
-    * the batch's own subdir is overwritten, never appended. When each
+    * then commit the batch's novel segment hashes as its own version of
+    * the index, an append log on [[Versioned]]. The read takes only the
+    * committed versions below `batchId`, so a replayed batch
+    * (foreachBatch is at-least-once) never anti-joins against its own
+    * write: it recomputes its counts and writes nothing. When each
     * micro-batch is one crawl increment arriving in order, the union of
     * per-batch results equals the batch query exactly (StreamingSpec
     * proves it, replay included). Scale: the index is a hash-only
@@ -586,9 +437,7 @@ object Streams {
       .select($"source", $"doc_id", $"seg_idx", xxhash64($"seg").as("k"),
         graft.queries.LlmPipeline.crawlOrderKey(
           $"source", $"doc_id", $"seg_idx").as("okey"))
-    // only STRICTLY EARLIER batches' subdirs: a replayed batch never
-    // sees its own prior partial write
-    val earlier = versionedSubdirs(indexDir, Some(batchId))
+    val earlier = Versioned.versions(indexDir, below = batchId)
     val fresh =
       if (earlier.nonEmpty)
         segs.join(s.read.parquet(earlier: _*), Seq("k"), "left_anti")
@@ -602,55 +451,18 @@ object Streams {
     // firstInBatch("k") self-resolves into a trivially-true predicate
     val flags = firstInBatch
       .select($"k".as("fk"), $"fkey", lit(true).as("novel"))
-    val out = segs
+    val counts = segs
       .join(flags, $"k" === $"fk" && $"okey" === $"fkey", "left")
       .groupBy($"source")
       .agg(count(lit(1)).as("n"),
         sum(when($"novel", 1L).otherwise(0L)).as("nn"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
-    fresh.join(firstInBatch, "k").filter($"okey" === $"fkey")
-      .select($"k")
-      .write.mode("overwrite").parquet(s"$indexDir/b$batchId")
-    out
-  }
-
-  /** One micro-batch of incremental DISTINCT-COUNT maintenance (the
-    * streaming posture of s13_streaming_distinct): union this batch's
-    * per-type HLL user sketch into the persisted running sketch state.
-    * State is batch-id-VERSIONED (s11/s12's exactly-once idiom): the
-    * read takes the LATEST subdir with id < batchId and the write
-    * overwrites the batch's own subdir, so an at-least-once redelivery
-    * recomputes from its predecessor's state instead of merging into
-    * its own partial write. (HLL max-merge is idempotent, so a
-    * double-merge would not even skew the registers — but the
-    * versioning keeps the state lineage exact and replay PROVABLE, not
-    * just accidentally harmless.) At 100 TB the state is kilobytes per
-    * group: incremental distinct becomes a sketch merge per batch,
-    * never a rescan — q57's persisted-artifact form kept current by
-    * the stream. */
-  def distinctSketchBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val bsk = batch.groupBy($"event_type")
-      .agg(hll_sketch_agg($"user_id").as("sk"))
-    val prev = versionedSubdirs(stateDir, Some(batchId)).lastOption
-    val merged = prev match {
-      case Some(p) => bsk.unionByName(s.read.parquet(p))
-        .groupBy($"event_type").agg(hll_union_agg($"sk").as("sk"))
-      case None => bsk
+    Versioned.commit(indexDir, batchId) { (_, out) =>
+      fresh.join(firstInBatch, "k").filter($"okey" === $"fkey")
+        .select($"k").write.mode("overwrite").parquet(out)
     }
-    merged.write.mode("overwrite").parquet(s"$stateDir/b$batchId")
-  }
-
-  /** Per-type estimates from the latest persisted sketch state. */
-  def readDistinctState(s: SparkSession, stateDir: String): DataFrame = {
-    import s.implicits._
-    val last = versionedSubdirs(stateDir, None).lastOption.getOrElse(
-      sys.error(s"no sketch state under $stateDir — run distinctSketchBatch first"))
-    s.read.parquet(last)
-      .select($"event_type",
-        hll_sketch_estimate($"sk").as("approx_users"))
+    counts
   }
 
   /** Run a streaming plan to a memory sink synchronously (one batch of

@@ -18,7 +18,7 @@ class StreamingSpec extends SparkTestBase {
   test("tumbling window: streaming memory-sink result equals batch result") {
     val batch = rowsOf(Streams.tumblingHourly(Tables.events(spark, sf0001)))
     val stream = rowsOf(Streams.runToMemory(spark,
-      Streams.tumblingHourlyStream(Streams.eventsStream(spark, sf0001)),
+      Streams.tumblingHourlyStream(Streams.fixtureStream(spark, sf0001, "events")),
       "tumbling_test"))
     assert(stream.nonEmpty)
     assert(stream == batch)
@@ -29,7 +29,7 @@ class StreamingSpec extends SparkTestBase {
     val batch = rowsOf(
       Streams.enrichWithCustomers(Tables.events(spark, sf0001), customers))
     val stream = rowsOf(Streams.runToMemory(spark,
-      Streams.enrichWithCustomers(Streams.eventsStream(spark, sf0001), customers),
+      Streams.enrichWithCustomers(Streams.fixtureStream(spark, sf0001, "events"), customers),
       "stream_static_test"))
     assert(stream.nonEmpty)
     assert(stream == batch)
@@ -38,7 +38,7 @@ class StreamingSpec extends SparkTestBase {
   test("stream-stream join: streaming pairs equal batch pairs") {
     val batch = rowsOf(Streams.clickPurchasePairs(Tables.events(spark, sf0001)))
     val stream = rowsOf(Streams.runToMemory(spark,
-      Streams.clickPurchasePairsStream(Streams.eventsStream(spark, sf0001)),
+      Streams.clickPurchasePairsStream(Streams.fixtureStream(spark, sf0001, "events")),
       "ss_join_test", "append"))
     assert(stream.nonEmpty)
     assert(stream == batch)
@@ -53,7 +53,7 @@ class StreamingSpec extends SparkTestBase {
       Streams.dedupIngest(docs.filter(col("source") === "src1"), idx))
     val stream = rowsOf(Streams.runToMemory(spark,
       Streams.dedupIngest(
-        Streams.documentsStream(spark, sf0001).filter(col("source") === "src1"),
+        Streams.fixtureStream(spark, sf0001, "documents").filter(col("source") === "src1"),
         idx),
       "dedup_ingest_test"))
     assert(stream.nonEmpty)
@@ -63,7 +63,7 @@ class StreamingSpec extends SparkTestBase {
   test("stateful streaming: flatMapGroupsWithState running per-user counts") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val events = Streams.eventsStream(spark, sf0001)
+    val events = Streams.fixtureStream(spark, sf0001, "events")
       .select(col("user_id"), col("event_type"))
       .as[(Long, String)]
     val counted = events
@@ -122,7 +122,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming export: foreachBatch drives the CSV sink per micro-batch") {
     import graft.sinks.{CsvOptions, CsvSink}
     val outDir = java.nio.file.Files.createTempDirectory("graft_sexp").toString
-    val q = Streams.eventsStream(spark, sf0001)
+    val q = Streams.fixtureStream(spark, sf0001, "events")
       .select(col("event_id"), col("event_type"), col("value"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -219,7 +219,7 @@ class StreamingSpec extends SparkTestBase {
       Tables.events(spark, sf0001), watermarked = false))
     val stream = rowsOf(Streams.runToMemory(spark,
       Streams.clickPurchaseLeftOuter(
-        Streams.eventsStream(spark, sf0001), watermarked = true),
+        Streams.fixtureStream(spark, sf0001, "events"), watermarked = true),
       "loj_s10_test", "append"))
     assert(stream.nonEmpty)
     val batchCounts = batch.groupBy(identity).view.mapValues(_.size).toMap
@@ -245,7 +245,7 @@ class StreamingSpec extends SparkTestBase {
     val batch = rowsOf(batchDf)
     val stream = rowsOf(Streams.runToMemory(spark,
       Streams.clickPurchaseFullOuter(
-        Streams.eventsStream(spark, sf0001), watermarked = true),
+        Streams.fixtureStream(spark, sf0001, "events"), watermarked = true),
       "foj_s18_test", "append"))
     assert(stream.nonEmpty)
     val batchCounts = batch.groupBy(identity).view.mapValues(_.size).toMap
@@ -339,14 +339,14 @@ class StreamingSpec extends SparkTestBase {
       (2L, ts("2024-01-01 10:30:00"), 3L, "view", 3.0))
     val schema = spark.read.parquet(src).schema
     def state(): Map[Long, (Long, String)] =
-      Streams.readServing(spark, out).collect()
+      Streams.serving.read(spark, out).collect()
         .map(r => r.getAs[Long]("user_id") ->
           (r.getAs[Long]("event_id"), r.getAs[String]("event_type"))).toMap
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.upsertServing(b, out, id)
+        Streams.serving.step(b, out, id)
       }
       .start()
     try {
@@ -364,8 +364,8 @@ class StreamingSpec extends SparkTestBase {
     // must be a NO-OP — even with different (stale) content
     val bogus = Seq((9L, ts("2024-01-01 09:00:00"), 99L, "error", 9.0))
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    Streams.upsertServing(bogus, out, 1L)
-    Streams.upsertServing(bogus, out, 0L)
+    Streams.serving.step(bogus, out, 1L)
+    Streams.serving.step(bogus, out, 0L)
     assert(state() == Map(1L -> (4L, "purchase"), 2L -> (3L, "view"),
       3L -> (5L, "signup")), "replayed batch ids must not mutate the table")
   }
@@ -384,7 +384,7 @@ class StreamingSpec extends SparkTestBase {
       (ts("2024-01-01 10:20:00"), "view"), (ts("2024-01-01 11:05:00"), "view"))
     val schema = spark.read.parquet(src).schema
     def state(): Seq[(Long, String, Long)] =
-      Streams.readWindowTopk(spark, out, k = 2).collect()
+      Streams.windowTopk(Streams.hourCounts.read(spark, out), k = 2).collect()
         .map(r => (r.getAs[Long]("w_start"), r.getAs[String]("event_type"),
           r.getAs[Long]("n")))
         .sortBy(t => (t._1, -t._3, t._2)).toSeq
@@ -405,7 +405,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.windowTopkBatch(b, out, id)
+        Streams.hourCounts.step(b, out, id)
       }
       .start()
     try {
@@ -427,8 +427,8 @@ class StreamingSpec extends SparkTestBase {
     // replayed batch ids must not double-count — even with live content
     val bogus = Seq((ts("2024-01-01 10:59:00"), "click", 0L, 0L, 0.0))
       .toDF("ts", "event_type", "event_id", "user_id", "value")
-    Streams.windowTopkBatch(bogus, out, 1L)
-    Streams.windowTopkBatch(bogus, out, 0L)
+    Streams.hourCounts.step(bogus, out, 1L)
+    Streams.hourCounts.step(bogus, out, 0L)
     assert(state() == oneTop(), "replayed batch mutated the count state")
   }
 
@@ -448,7 +448,7 @@ class StreamingSpec extends SparkTestBase {
     val steady = for (h <- 1 to 6; m <- Seq(5, 35); e <- Seq("click", "view"))
       yield (ts(h, m), e)
     write(steady: _*)
-    def state() = Streams.readRateAnomalies(spark, out).collect()
+    def state() = Streams.rateAnomaliesFromCounts(Streams.hourCounts.read(spark, out)).collect()
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("w_start"),
         r.getAs[Long]("n"), r.getAs[Long]("base_6h"))).sortBy(t => (t._1, t._2)).toSeq
     def oneShot() = Streams.rateAnomaliesFromCounts(
@@ -464,7 +464,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.windowTopkBatch(b, out, id)
+        Streams.hourCounts.step(b, out, id)
       }
       .start()
     try {
@@ -483,8 +483,8 @@ class StreamingSpec extends SparkTestBase {
     // replayed batch ids must not double-count into the anomaly read
     val bogus = Seq((ts(7, 45), "click", 0L, 0L, 0.0))
       .toDF("ts", "event_type", "event_id", "user_id", "value")
-    Streams.windowTopkBatch(bogus, out, 1L)
-    Streams.windowTopkBatch(bogus, out, 0L)
+    Streams.hourCounts.step(bogus, out, 1L)
+    Streams.hourCounts.step(bogus, out, 0L)
     assert(state() == oneShot(), "replayed batch mutated the anomaly state")
   }
 
@@ -501,7 +501,7 @@ class StreamingSpec extends SparkTestBase {
       ("view", "b=2", 3.0), ("view", "", 0.0))
     val schema = spark.read.parquet(src).schema
     def state(): Seq[(String, Long, Long, Long)] =
-      Streams.readFieldQuality(spark, out).collect()
+      Streams.fieldQuality.read(spark, out).collect()
         .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n_events"),
           r.getAs[Long]("empty_props_ppm"), r.getAs[Long]("nonpos_value_ppm")))
         .sortBy(_._1).toSeq
@@ -522,7 +522,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.fieldQualityBatch(b, out, id)
+        Streams.fieldQuality.step(b, out, id)
       }
       .start()
     try {
@@ -541,8 +541,8 @@ class StreamingSpec extends SparkTestBase {
     // replayed batch ids must not double-count
     val bogus = Seq((t0, "click", 0L, 0L, -9.0, ""))
       .toDF("ts", "event_type", "event_id", "user_id", "value", "props")
-    Streams.fieldQualityBatch(bogus, out, 1L)
-    Streams.fieldQualityBatch(bogus, out, 0L)
+    Streams.fieldQuality.step(bogus, out, 1L)
+    Streams.fieldQuality.step(bogus, out, 0L)
     assert(state() == oneShot(), "replayed batch mutated the quality state")
   }
 
@@ -557,7 +557,7 @@ class StreamingSpec extends SparkTestBase {
     val cents = graft.ops.Materialize(
       graft.queries.Clustering.centroids(emb, k = 8, iters = 2))
     def state(): Seq[(Long, Long, Long, Long, Long)] =
-      Streams.readCentroidRoute(spark, out).collect()
+      Streams.centroidRoute(cents).read(spark, out).collect()
         .map(r => (r.getAs[Long]("cluster_id"), r.getAs[Long]("n_vecs"),
           r.getAs[Long]("min_vec_id"), r.getAs[Long]("max_vec_id"),
           r.getAs[Long]("share_ppm")))
@@ -583,7 +583,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.centroidRouteBatch(b, cents, out, id)
+        Streams.centroidRoute(cents).step(b, out, id)
       }
       .start()
     try {
@@ -604,8 +604,8 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
     // replayed batch ids must not double-count
     val bogus = emb.limit(3)
-    Streams.centroidRouteBatch(bogus, cents, out, 1L)
-    Streams.centroidRouteBatch(bogus, cents, out, 0L)
+    Streams.centroidRoute(cents).step(bogus, out, 1L)
+    Streams.centroidRoute(cents).step(bogus, out, 0L)
     assert(state() == oneShot(emb), "replayed batch mutated the route state")
   }
 
@@ -621,7 +621,7 @@ class StreamingSpec extends SparkTestBase {
     write(("click", 1.5), ("click", 2.5), ("click", 99.9), ("view", 10.0))
     val schema = spark.read.parquet(src).schema
     def state(): Seq[(String, Long, Long, Long, Long)] =
-      Streams.readLatencyPercentiles(spark, out).collect()
+      Streams.latencyBuckets.read(spark, out).collect()
         .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n_events"),
           r.getAs[Long]("max_bucket"), r.getAs[Long]("p50_bucket"),
           r.getAs[Long]("p95_bucket"))).sortBy(_._1).toSeq
@@ -639,7 +639,7 @@ class StreamingSpec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.latencyHistBatch(b, out, id)
+        Streams.latencyBuckets.step(b, out, id)
       }
       .start()
     try {
@@ -658,8 +658,8 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
     val bogus = Seq((t0, "click", 0L, 0L, 1.0))
       .toDF("ts", "event_type", "event_id", "user_id", "value")
-    Streams.latencyHistBatch(bogus, out, 1L)
-    Streams.latencyHistBatch(bogus, out, 0L)
+    Streams.latencyBuckets.step(bogus, out, 1L)
+    Streams.latencyBuckets.step(bogus, out, 0L)
     assert(state() == oneShot(), "replayed batch mutated the histogram state")
   }
 
@@ -704,7 +704,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming dropDuplicates within watermark runs and dedupes") {
-    val events = Streams.eventsStream(spark, sf0001)
+    val events = Streams.fixtureStream(spark, sf0001, "events")
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
@@ -736,13 +736,13 @@ class StreamingSpec extends SparkTestBase {
     val q = stream.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.distinctSketchBatch(b, stDir, id)
+        Streams.distinctUsers.step(b, stDir, id)
         lastBatch.clear(); lastBatch += ((b.persist(), id)); ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
     def state(): Map[String, Long] =
-      Streams.readDistinctState(spark, stDir)
+      Streams.distinctUsers.read(spark, stDir)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val got = state()
     // the 4-batch union must land on EXACTLY the one-shot sketch's
@@ -751,10 +751,10 @@ class StreamingSpec extends SparkTestBase {
     val want = SparkEntry.queries("s13_streaming_distinct")(spark, sf0001)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == want, s"incremental $got vs one-shot $want")
-    // replay of the last micro-batch (at-least-once redelivery):
-    // recomputes from its predecessor's state, state unchanged
+    // replay of the last micro-batch (at-least-once redelivery): the
+    // store skips a committed batch id, state unchanged
     val (lb, lbId) = lastBatch.head
-    Streams.distinctSketchBatch(lb, stDir, lbId)
+    Streams.distinctUsers.step(lb, stDir, lbId)
     lb.unpersist()
     assert(state() == got, "replayed batch mutated the sketch state")
     // accuracy floor vs exact distincts (q57's contract)
@@ -816,11 +816,44 @@ class StreamingSpec extends SparkTestBase {
     val orig = results.filter(r => replay.exists(_._1 == r._1)).sortBy(_._1)
     assert(replay.sortBy(_._1) == orig, s"replay $replay vs original $orig")
     // and the accumulated index holds exactly the distinct segment count
-    // (batch-versioned subdirs — read the union of all batches)
-    val idxN = spark.read.parquet(s"$idxDir/b*").distinct().count()
+    // (an append log — read the union of its committed versions)
+    val idxN = spark.read.parquet(graft.streaming.Versioned.versions(idxDir): _*).distinct().count()
     val segN = graft.queries.LlmPipeline.segmentize(docs, Seq("doc_id"))
       .select(expr("xxhash64(seg)")).distinct().count()
     assert(idxN == segN, s"index $idxN vs distinct segments $segN")
+  }
+
+  test("a torn version above the committed one is never served (s13 state, s12 index)") {
+    import spark.implicits._
+    import graft.streaming.Versioned
+    val root = java.nio.file.Files.createTempDirectory("graft_torn").toString
+    // what a writer killed mid-job leaves: the version holds only the
+    // committer's _temporary/
+    def tear(dir: String, id: Long): Unit = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, s"v$id", "_temporary", "0"))
+    // s13: batch 0 committed, batch 1 torn — the read serves batch 0, and
+    // the redelivered batch 1 merges into batch 0's state
+    val st = s"$root/st"
+    def users(): Map[String, Long] = Streams.distinctUsers.read(spark, st)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Streams.distinctUsers.step(
+      Seq((1L, "click"), (2L, "click"), (3L, "view")).toDF("user_id", "event_type"), st, 0L)
+    tear(st, 1L)
+    assert(users() == Map("click" -> 2L, "view" -> 1L))
+    Streams.distinctUsers.step(Seq((4L, "view")).toDF("user_id", "event_type"), st, 1L)
+    assert(users() == Map("click" -> 2L, "view" -> 2L))
+    // s12: crawl 0 committed, crawl 1 torn — the index read holds crawl
+    // 0 only, and the redelivered crawl 1 finds its repeat of crawl 0's
+    // one segment not novel
+    val idx = s"$root/idx"
+    val text = (1 to 10).map(i => s"w$i").mkString(" ")
+    def crawl(src: String) = Seq((src, 1L, text)).toDF("source", "doc_id", "text")
+    assert(Streams.crawlNoveltyBatch(crawl("src1"), idx, 0L) == Seq(("src1", 1L, 1L)))
+    tear(idx, 1L)
+    assert(Versioned.versions(idx) == Seq(s"$idx/v0"))
+    assert(spark.read.parquet(Versioned.versions(idx): _*).count() == 1L)
+    assert(Streams.crawlNoveltyBatch(crawl("src2"), idx, 1L) == Seq(("src2", 1L, 0L)))
+    assert(Versioned.versions(idx) == Seq(s"$idx/v0", s"$idx/v1"))
   }
 
   test("trigger cadence: rate-source micro-batch latency for s1/s9/s11 shapes") {
@@ -878,7 +911,7 @@ class StreamingSpec extends SparkTestBase {
     measure("s11-upsert") { ev =>
       ev.writeStream.trigger(trig)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          Streams.upsertServing(b, servingDir, id)
+          Streams.serving.step(b, servingDir, id)
         }.start()
     }
   }

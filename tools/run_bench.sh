@@ -1,6 +1,6 @@
 #!/bin/bash
-# Run graft.Bench directly (no sbt wrapper): stdout is exactly the one
-# JSON line, the classpath is the stable classes dir (so the resume
+# Run graft.Bench directly (no sbt wrapper): stdout is exactly the two
+# JSON lines (the full one, then a compact summary), the classpath is the stable classes dir (so the resume
 # fingerprint's content hash applies), and killing this script's
 # process group kills the coordinator AND its worker JVMs — no zombie
 # coordinator survives to delete the resume TSVs of a later run.
