@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 
 /** Relational/analytical operator battery (SURVEY.md §2.5 [EXT]):
@@ -27,8 +28,6 @@ import graft.sources.Tables
 final case class LineSlim(l_orderkey: Long, l_quantity: Double, l_returnflag: String)
 
 object Battery {
-
-  private def dsum(c: Column) = graft.ops.Num.dsum(c)
 
   // Fixed, per-(query, source-dir) scratch path, overwritten on each
   // invocation — a fresh createTempDirectory per closure call would leak

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.VecSqDist
 import graft.ops.Materialize
+import graft.ops.Num.{dsum, fsum, fsumSql}
 import graft.sources.Tables
 
 /** Distributed k-means (Lloyd's) over the embedding column — the
@@ -36,9 +37,6 @@ import graft.sources.Tables
   * lineage, so iteration i+1's plan does not replay iteration i.
   */
 object Clustering {
-
-  private def dsum(c: org.apache.spark.sql.Column) =
-    graft.ops.Num.dsum(c)
 
   /** `iters` Lloyd iterations from the first-k-by-vec_id seeds; returns
     * the refined centroid table (cid, cv). This is the trainable half of
@@ -146,6 +144,69 @@ object Clustering {
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
 
+  /** The IVF probe behind d7/d7b, d39 and e12: each vector is routed to
+    * the `nprobe` cells whose [[cachedCentroids]] (16 Lloyd-refined
+    * centroids: at nprobe 6 raw first-16 seeds measured recall@1 0.664,
+    * refined ones 0.756) are nearest by cosine, and meets the members of
+    * those cells' inverted lists.
+    * Returns (vec_id, cand, prn, cos): `prn` is the lowest probe rank
+    * at which `cand` is reached, so every probe depth up to `nprobe` is
+    * a re-filter `prn <= p` of this one frame, and `cos` is the exact
+    * cosine that ranks the candidates.
+    *
+    * Shape, each step measured:
+    *   - the top-`nprobe` cells are pruned map-side (TopKPerKey) before
+    *     any exchange, since the broadcast crossJoin keeps all centroids
+    *     of a vector in one partition, and materialized once;
+    *   - they are pinned on vec_id ([[graft.ops.Spread.pinned]]: the
+    *     candidate set is byte-small but VecDot-heavy) BEFORE the `prn`
+    *     window, which reuses that exchange. Between window and join,
+    *     the window's own exchange coalesced to one task that carried
+    *     the whole expansion (1.3 s at sf0.1). hash(vec_id) also serves
+    *     the min(prn) dedup, the scoring joins (e broadcasts) and a
+    *     caller's per-vector top-k, so the tail runs in that one stage;
+    *   - the home cell is `prn = 1`, and each cell's list keeps at most
+    *     MaxBucketSize members, lowest vec_id first (real-IVF list
+    *     truncation). An uncapped degenerate cell makes cid a quadratic
+    *     hot key; dropping over-cap cells whole zeroes the query once
+    *     the corpus outgrows centroids × cap;
+    *   - the capped lists are bounded by construction (centroids ×
+    *     MaxBucketSize rows), so they broadcast. A shuffle on the
+    *     16-value cid key caps parallelism at 16, and AQE's byte-based
+    *     coalescing made it one task. Past the broadcast budget the same
+    *     join would run as a salted shuffle (q44's pattern).
+    * Every order is total (sim DESC, cid ASC; vec_id ASC), so the
+    * oracle's ROW_NUMBER replay is bit-identical. */
+  def ivfProbe(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
+    import graft.functions.VecDot
+    val e = prep(Tables.embeddings(s, dir))
+      .withColumn("norm", sqrt(VecDot(col("v"), col("v"))))
+    val cents = broadcast(cachedCentroids(s, dir, k = 16, iters = 2)
+      .withColumn("cnorm", sqrt(VecDot(col("cv"), col("cv")))))
+    val sims = e.crossJoin(cents)
+      .select(col("vec_id"), col("cid"),
+        (VecDot(col("v"), col("cv")) / (col("norm") * col("cnorm"))).as("sim"))
+    val byRank = Seq(col("sim").desc, col("cid").asc)
+    val top = Materialize(graft.plans.TopK.perKey(sims,
+      keys = Seq(col("vec_id")), order = byRank, k = nprobe))
+    val probes = graft.ops.Spread.pinned(top, col("vec_id"))
+      .withColumn("prn", row_number()
+        .over(Window.partitionBy(col("vec_id")).orderBy(byRank: _*)).cast("long"))
+    val home = probes.filter(col("prn") === 1).select(col("vec_id"), col("cid"))
+    val capped = graft.plans.TopK.perKey(home, keys = Seq(col("cid")),
+      order = Seq(col("vec_id").asc), k = LlmPipeline.MaxBucketSize)
+    probes.as("p")
+      .join(broadcast(capped.as("c")),
+        col("p.cid") === col("c.cid") && col("p.vec_id") =!= col("c.vec_id"))
+      .groupBy(col("p.vec_id").as("vec_id"), col("c.vec_id").as("cand"))
+      .agg(min(col("p.prn")).as("prn"))
+      .join(e.select(col("vec_id"), col("v"), col("norm")), "vec_id")
+      .join(e.select(col("vec_id").as("cand"), col("v").as("candv"),
+        col("norm").as("candnorm")), "cand")
+      .select(col("vec_id"), col("cand"), col("prn"),
+        (VecDot(col("v"), col("candv")) / (col("norm") * col("candnorm"))).as("cos"))
+  }
+
   private def assign(e: DataFrame, cents: DataFrame): DataFrame = {
     val scored = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cid"),
@@ -252,25 +313,26 @@ object Clustering {
   private val PqK = 16      // centroids per subspace codebook
   private val PqShortlist = 64 // ADC candidates re-ranked exactly per query
 
-  /** (vec_id, sub, sv): each vector split into `PqM` subvectors. */
-  private def pqSubvectors(embeddings: DataFrame): DataFrame =
+  /** (vec_id, sub, sv): each vector split into `m` subvectors of
+    * 64 / m dims. */
+  private def pqSubvectors(embeddings: DataFrame, m: Int): DataFrame =
     prep(embeddings).select(col("vec_id"),
       posexplode(expr(
-        s"transform(sequence(0, ${PqM - 1}), s -> slice(v, s*$PqSubDim+1, $PqSubDim))"))
+        s"transform(sequence(0, ${m - 1}), s -> slice(v, s*${64 / m}+1, ${64 / m}))"))
         .as(Seq("sub", "sv")))
 
   /** Nearest-codebook-centroid per (vector, subspace): broadcast
     * equi-join on `sub` (k rows per subspace), then the map-side-pruning
     * TopKPerKey argmin — (dist ASC, cid ASC) is a total order, so the
-    * kept row is bit-identical to the oracle's ROW_NUMBER pick. */
+    * kept row is bit-identical to the oracle's ROW_NUMBER pick.
+    * Returns (vec_id, sub, cid, dist). */
   private def pqAssign(subs: DataFrame, cb: DataFrame): DataFrame = {
     val scored = subs.join(broadcast(cb), "sub")
       .select(col("vec_id"), col("sub"), col("cid"),
         VecSqDist(col("sv"), col("cv")).as("dist"))
     graft.plans.TopK.perKey(scored,
-        keys = Seq(col("vec_id"), col("sub")),
-        order = Seq(col("dist").asc, col("cid").asc), k = 1)
-      .select(col("vec_id"), col("sub"), col("cid"))
+      keys = Seq(col("vec_id"), col("sub")),
+      order = Seq(col("dist").asc, col("cid").asc), k = 1)
   }
 
   /** One Lloyd update per subspace: (sub, cid, dim)-keyed decimal-
@@ -312,20 +374,9 @@ object Clustering {
   private def pqIndex(s: SparkSession, dir: String, m: Int, dbTag: String,
                       dbPred: Column, which: String): DataFrame = {
     val root = graft.ops.Scratch.artifact(s, s"graft_pq${m}_$dbTag", dir) { stage =>
-      val subDim = 64 / m
-      val subs = Materialize(prep(Tables.embeddings(s, dir))
-        .select(col("vec_id"),
-          posexplode(expr(
-            s"transform(sequence(0, ${m - 1}), s -> slice(v, s*$subDim+1, $subDim))"))
-            .as(Seq("sub", "sv")))
-        .filter(dbPred))
+      val subs = Materialize(pqSubvectors(Tables.embeddings(s, dir), m).filter(dbPred))
       val cb = Materialize(pqCodebook(subs, iters = 2))
-      val scored = subs.join(broadcast(cb), "sub")
-        .select(col("vec_id"), col("sub"), col("cid"),
-          VecSqDist(col("sv"), col("cv")).as("dist"))
-      val asg = Materialize(graft.plans.TopK.perKey(scored,
-        keys = Seq(col("vec_id"), col("sub")),
-        order = Seq(col("dist").asc, col("cid").asc), k = 1))
+      val asg = Materialize(pqAssign(subs, cb))
       cb.write.mode("overwrite").parquet(s"$stage/cb")
       asg.write.mode("overwrite").parquet(s"$stage/asg")
       graft.ops.Spread.pinned(asg.groupBy(col("vec_id"))
@@ -341,8 +392,8 @@ object Clustering {
     pqIndex(s, dir, m, "all", lit(true), "asg")
       .agg(countDistinct(col("vec_id")).as("n_vecs"),
         count(lit(1)).as("n_cells"),
-        sum(graft.ops.Num.fquant(col("dist"))
-          .cast(DecimalType(38, 0))).cast("long").as("distortion_grid"))
+        coalesce(sum(graft.ops.Num.fquant(col("dist"))
+          .cast(DecimalType(38, 0))).cast("long"), lit(0L)).as("distortion_grid"))
       .select(lit(m.toLong).as("m"), lit((64 / m).toLong).as("sub_dim"),
         lit(4L * m).as("code_bits"), col("n_vecs"), col("n_cells"),
         col("distortion_grid"))
@@ -367,7 +418,7 @@ object Clustering {
     // per-query ADC lookup table as ONE map column keyed sub*k+cid —
     // n_q × (m·k) entries, built from the same broadcast codebook join
     // the encoder used, then broadcast over the code table
-    val lut = pqSubvectors(Tables.embeddings(s, dir))
+    val lut = pqSubvectors(Tables.embeddings(s, dir), PqM)
       .filter(qPred)
       .join(broadcast(cb), "sub")
       .select(col("vec_id").as("qid"), col("sub"), col("cid"),
@@ -434,13 +485,6 @@ object Clustering {
 
   private val PcaD = 64
   private val PcaIters = 3
-
-  // Dyadic fixed-point sums: the idiom lives in [[graft.ops.Num]] (moved
-  // there in r10 so p4/t13's rate chains share the single definition;
-  // the DECIMAL(38,0) accumulator there also removed the old int64
-  // wrap-at-2^63 capacity cliff — see Num.fsum's scaladoc).
-  private def fsum(c: Column): Column = graft.ops.Num.fsum(c)
-  private def fsumSql(x: String): String = graft.ops.Num.fsumSql(x)
 
   private def pcaTopComponent(embeddings: DataFrame): DataFrame = {
     val s = embeddings.sparkSession
@@ -592,46 +636,17 @@ object Clustering {
     // trust at a fixed budget (nprobe=2, the d39 curve's knee). Recall
     // @k = |ANN top-k ∩ exact top-k| / (k·queries) for k ∈ {1,3,5},
     // both rankings under the family's (cos DESC, id ASC) total order.
-    // The index side is the persisted k-means model (cachedCentroids —
-    // zero retraining); the exact side is the BOUNDED persisted kNN
-    // truth set (top-5 per sampled query, the SURVEY §8 protocol), so
-    // the timed plan is bucket probing + a rank-keyed join — nothing
-    // quadratic. The decision this table feeds: a RAG/hard-negative
-    // consumer that needs 5 trustworthy neighbors sees whether it must
-    // raise nprobe or can ride the cheap setting.
+    // The index side is d7's probe ([[ivfProbe]] at nprobe 2); the
+    // exact side is the BOUNDED persisted kNN truth set (top-5 per
+    // sampled query, the SURVEY §8 protocol), so the timed plan is
+    // bucket probing + a rank-keyed join — nothing quadratic. The
+    // decision this table feeds: a RAG/hard-negative consumer that needs
+    // 5 trustworthy neighbors sees whether it must raise nprobe or can
+    // ride the cheap setting.
     "e12_recall_at_k" -> ((s, dir) => {
       import s.implicits._
-      import graft.functions.VecDot
-      val e = graft.ops.Spread.fanout(Tables.embeddings(s, dir))
-        .select($"vec_id",
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("norm", sqrt(VecDot($"v", $"v")))
-      val seeds = broadcast(cachedCentroids(s, dir, k = 16, iters = 2)
-        .withColumn("cnorm", sqrt(VecDot($"cv", $"cv"))))
-      val sims = e.crossJoin(seeds)
-        .select($"vec_id", $"cid",
-          (VecDot($"v", $"cv") / ($"norm" * $"cnorm")).as("sim"))
-      val wp = Window.partitionBy($"vec_id").orderBy($"sim".desc, $"cid".asc)
-      val probes = Materialize(graft.plans.TopK.perKey(sims,
-          keys = Seq($"vec_id"), order = Seq($"sim".desc, $"cid".asc), k = 2)
-        .withColumn("prn", row_number().over(wp).cast("long")))
-      val home = probes.filter($"prn" === 1).select($"vec_id", $"cid")
-      val capped = graft.plans.TopK.perKey(home, keys = Seq($"cid"),
-        order = Seq($"vec_id".asc),
-        k = graft.queries.LlmPipeline.MaxBucketSize)
-      val cands = graft.ops.Spread.pinned(probes, $"vec_id").as("p")
-        .join(broadcast(capped.as("c")),
-          $"p.cid" === $"c.cid" && $"p.vec_id" =!= $"c.vec_id")
-        .select($"p.vec_id".as("vec_id"), $"c.vec_id".as("cand"))
-        .distinct()
-      val scored = Materialize(cands
-        .join(e.select($"vec_id", $"v", $"norm"), "vec_id")
-        .join(e.select($"vec_id".as("cand"), $"v".as("cv2"),
-          $"norm".as("cnorm2")), "cand")
-        .select($"vec_id", $"cand",
-          (VecDot($"v", $"cv2") / ($"norm" * $"cnorm2")).as("cos")))
       val wq = Window.partitionBy($"vec_id").orderBy($"cos".desc, $"cand".asc)
-      val ivfTop = Materialize(graft.plans.TopK.perKey(scored,
+      val ivfTop = Materialize(graft.plans.TopK.perKey(ivfProbe(s, dir, nprobe = 2),
           keys = Seq($"vec_id"), order = Seq($"cos".desc, $"cand".asc), k = 5)
         .withColumn("irn", row_number().over(wq).cast("long")))
       val truth = graft.queries.LlmPipeline.cachedKnn(s, dir)
@@ -645,7 +660,8 @@ object Clustering {
           .agg(count(lit(1)).as("n_overlap"))
           .crossJoin(nq)
           .select(lit(k).as("k"), $"n_queries", $"n_overlap",
-            expr(s"n_overlap * 1000000 div (n_queries * $k)").as("recall_ppm"))
+            expr(s"""CASE WHEN n_queries = 0 THEN 0
+              ELSE n_overlap * 1000000 div (n_queries * $k) END""").as("recall_ppm"))
       }.reduce(_ unionByName _).orderBy($"k")
     }),
 
@@ -804,7 +820,7 @@ object Clustering {
             / greatest(col("a_dist"), col("b_dist"))).otherwise(lit(0.0)))
         .groupBy(col("own_cid"))
         .agg(count(lit(1)).as("n_members"),
-          graft.ops.Num.fsum(col("sil")).as("sil_sum"))
+          fsum(col("sil")).as("sil_sum"))
         .select(col("own_cid").as("cluster_id"), col("n_members"),
           col("sil_sum"),
           (col("sil_sum") / col("n_members").cast("double")).as("mean_sil"))
@@ -877,7 +893,6 @@ object Clustering {
     // corpus-size-independent bound past it), so truth derivation is
     // #queries · corpus, never corpus². Integer ppm, no float forms.
     "d26b_ann_pq_recall" -> ((s, dir) => {
-      import graft.functions.VecSqDist
       val e = prep(Tables.embeddings(s, dir))
       val q = LlmPipeline.knnQuerySide(
         e.filter(col("vec_id") % 10 === 0), LlmPipeline.KnnQueryCap)
@@ -888,17 +903,11 @@ object Clustering {
       val truth = graft.plans.TopK.perKey(bf, keys = Seq(col("qid")),
           order = Seq(col("d2").asc, col("nbr").asc), k = 1)
         .select(col("qid").as("vec_id"), col("nbr").as("true_nbr"))
-      val found = pqSearch(s, dir, kNbrs = 3, dbTag = "all",
-          dbPred = lit(true), qPred = col("vec_id") % 10 === 0)
-        .filter(col("rn") === 1).select(col("vec_id"), col("nbr"))
-      truth.join(found, Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when(col("nbr") === col("true_nbr"), 1L).otherwise(0L))
-            .as("n_hits"))
-        .select(col("n_queries"), col("n_hits"),
-          expr("n_hits * 1000000 div n_queries").as("recall_ppm"),
-          lit(750000L).as("floor_ppm"),
-          expr("n_hits * 1000000 div n_queries >= 750000").as("above_floor"))
+      LlmPipeline.recallEnvelope(truth,
+        pqSearch(s, dir, kNbrs = 3, dbTag = "all",
+            dbPred = lit(true), qPred = col("vec_id") % 10 === 0)
+          .filter(col("rn") === 1),
+        floorPpm = 750000L)
     }),
 
     // INDEX MAINTENANCE posture: an arriving embedding increment (every
@@ -1505,8 +1514,9 @@ object Clustering {
         |)
         |SELECT ks.k, CAST(MAX(nq.n_queries) AS BIGINT) AS n_queries,
         |  CAST(COALESCE(MAX(ov.n_overlap), 0) AS BIGINT) AS n_overlap,
-        |  CAST(COALESCE(MAX(ov.n_overlap), 0) * 1000000
-        |    // (MAX(nq.n_queries) * ks.k) AS BIGINT) AS recall_ppm
+        |  CAST(CASE WHEN MAX(nq.n_queries) = 0 THEN 0
+        |    ELSE COALESCE(MAX(ov.n_overlap), 0) * 1000000
+        |      // (MAX(nq.n_queries) * ks.k) END AS BIGINT) AS recall_ppm
         |FROM ks CROSS JOIN nq LEFT JOIN ov ON ov.k = ks.k
         |GROUP BY ks.k ORDER BY ks.k""".stripMargin,
 
@@ -1560,14 +1570,7 @@ object Clustering {
          |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2 ASC, nbr ASC) AS rn
          |    FROM bf) WHERE rn = 1
          |)
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-         |  CAST(SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |  CAST(SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END) * 1000000
-         |    // COUNT(*) AS BIGINT) AS recall_ppm,
-         |  CAST(750000 AS BIGINT) AS floor_ppm,
-         |  SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END) * 1000000
-         |    // COUNT(*) >= 750000 AS above_floor
-         |FROM truth tr LEFT JOIN found f ON f.vec_id = tr.vec_id""".stripMargin
+         |${LlmPipeline.recallTallySql(750000L)}""".stripMargin
     },
     "d27_incremental_ann_ingest" ->
       pqOracleFor(a => s"${a}vec_id % 5 <> 0", a => s"${a}vec_id % 5 = 0"),
@@ -1597,8 +1600,8 @@ object Clustering {
         |  FROM sil
         |)
         |SELECT cid AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
-        |  ${graft.ops.Num.fsumSql("sil")} AS sil_sum,
-        |  ${graft.ops.Num.fsumSql("sil")} / CAST(COUNT(*) AS DOUBLE) AS mean_sil
+        |  ${fsumSql("sil")} AS sil_sum,
+        |  ${fsumSql("sil")} / CAST(COUNT(*) AS DOUBLE) AS mean_sil
         |FROM sv GROUP BY cid ORDER BY cluster_id""".stripMargin),
 
     // same grid quantization, same 3×3 neighbor sum (VALUES offsets in
@@ -1686,13 +1689,13 @@ object Clustering {
         |                         ORDER BY dist ASC, cid ASC) AS rn
         |    FROM s2) WHERE rn = 1
         |)
-        |SELECT CAST(m AS BIGINT) AS m, CAST(64 // m AS BIGINT) AS sub_dim,
-        |  CAST(4 * m AS BIGINT) AS code_bits,
-        |  CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_vecs,
-        |  CAST(COUNT(*) AS BIGINT) AS n_cells,
-        |  CAST(SUM(${graft.ops.Num.fquantSql("dist")}) AS BIGINT)
+        |SELECT CAST(ms.m AS BIGINT) AS m, CAST(64 // ms.m AS BIGINT) AS sub_dim,
+        |  CAST(4 * ms.m AS BIGINT) AS code_bits,
+        |  CAST(COUNT(DISTINCT a2.vec_id) AS BIGINT) AS n_vecs,
+        |  CAST(COUNT(a2.vec_id) AS BIGINT) AS n_cells,
+        |  CAST(COALESCE(SUM(${graft.ops.Num.fquantSql("a2.dist")}), 0) AS BIGINT)
         |    AS distortion_grid
-        |FROM a2 GROUP BY m ORDER BY m""".stripMargin,
+        |FROM ms LEFT JOIN a2 ON a2.m = ms.m GROUP BY ms.m ORDER BY ms.m""".stripMargin,
 
     // the exact-kNN CTE (d5's proven fold contract), cos decimated to
     // integer µ-units BEFORE any aggregation — the calibration sums and

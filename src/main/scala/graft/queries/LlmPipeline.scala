@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 
 /** LLM-training-data pipeline operators over `documents` / `embeddings`
@@ -297,85 +298,15 @@ object LlmPipeline {
       .select($"vec_id", $"nbr", $"cos")
   }
 
-  /** d7's full IVF index build + nprobe-8 exact-reranked top-1 search
-    * — shared by the d7_ann_ivf gate entry and the d7b_ann_ivf_recall
-    * driver envelope (unsorted; callers order). Design rationale at
-    * the d7 entry. */
-  private def d7Top1(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.VecDot
-    // fanout: the single-file embeddings scan would otherwise run the
-    // quantization crossJoin (16 dot products/row) in ONE task
-    val e = graft.ops.Spread.fanout(Tables.embeddings(s, dir))
-      .select($"vec_id",
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("norm", sqrt(VecDot($"v", $"v")))
-    val seeds = broadcast(
-      Clustering.cachedCentroids(s, dir, k = 16, iters = 2)
-        .withColumn("cnorm", sqrt(VecDot($"cv", $"cv"))))
-    val sims = e.crossJoin(seeds)
-      .select($"vec_id", $"cid",
-        (VecDot($"v", $"cv") / ($"norm" * $"cnorm")).as("sim"))
-    // map-side prune to the 6 best cells per vector BEFORE the
-    // exchange (all centroids of a vector share a partition under the
-    // broadcast crossJoin): the nprobe=6 probe set IS this frame, and
-    // the home cell is one more k=1 prune of it — no rank window
-    // needed (the full-width row_number window this replaces shuffled
-    // every (vector, centroid) row and ran as one CPU-bound task
-    // under AQE's byte-based coalescing).
-    // materialized once (consumed by both cells and probes); checkpoint
-    // blocks are ContextCleaner-freed, unlike closure-local cache()
-    val ranked = materialize(graft.plans.TopK.perKey(sims,
-      keys = Seq($"vec_id"), order = Seq($"sim".desc, $"cid".asc), k = 8))
-    val cells = graft.plans.TopK.perKey(ranked,
-        keys = Seq($"vec_id"), order = Seq($"sim".desc, $"cid".asc), k = 1)
-      .select($"vec_id", $"cid")
-    // bounded inverted lists (real-IVF list truncation): keep at most
-    // MaxBucketSize members per cell, deterministically by vec_id,
-    // via the map-side-pruning TopKPerKey operator. A degenerate cell
-    // would otherwise make `cid` a quadratic hot join key at 100 TB —
-    // and dropping whole over-cap cells (the first attempt) zeroes the
-    // query as soon as the corpus outgrows centroids × cap
-    val cappedCells = graft.plans.TopK.perKey(cells,
-      keys = Seq($"cid"), order = Seq($"vec_id".asc), k = MaxBucketSize)
-    // nprobe = 8 of 16 cells (raw-seed quantizer measured recall@1 =
-    // 0.33 at nprobe 2, 0.53 at 4, 0.664 at 6; Lloyd-refined seeds
-    // lifted nprobe-6 to 0.756, nprobe-8 to the AnnRecallSpec-recorded
-    // value) — the standard IVF quality/cost knob (at production scale
-    // the centroid count grows ~sqrt(n) and nprobe stays a small
-    // constant fraction of it)
-    val probes = ranked.select($"vec_id", $"cid")
-    // the capped inverted lists are size-bounded BY CONSTRUCTION
-    // (centroids × MaxBucketSize rows), so they broadcast — the
-    // candidate expansion then runs data-parallel over the probe
-    // side instead of shuffling on the k-cardinality cid key (16
-    // distinct values: a shuffle there caps parallelism at k and
-    // AQE's byte-based coalescing collapsed it to ONE task). When
-    // centroid count outgrows the broadcast budget at extreme scale,
-    // the same join runs as a salted shuffle (q44's pattern).
-    // The ONE explicit exchange — probes hashed by query id and pinned
-    // (graft.ops.Spread.pinned: the candidate set is byte-small but
-    // VecDot-heavy) — then carries the whole tail: hash(vec_id)
-    // satisfies the dedup's, the scoring joins' (e broadcasts) and the
-    // final top-1's clustering, so expansion → distinct → VecDot
-    // scoring → TopKPerKey all run in that one stage with no further
-    // shuffle.
-    val cands = graft.ops.Spread.pinned(probes, $"vec_id").as("p")
-      .join(broadcast(cappedCells.as("c")),
-        $"p.cid" === $"c.cid" && $"p.vec_id" =!= $"c.vec_id")
-      .select($"p.vec_id".as("vec_id"), $"c.vec_id".as("cand")).distinct()
-    val scored = cands
-      .join(e.select($"vec_id", $"v", $"norm"), "vec_id")
-      .join(e.select($"vec_id".as("cand"), $"v".as("cv"), $"norm".as("cnorm")), "cand")
-      .select($"vec_id", $"cand",
-        (VecDot($"v", $"cv") / ($"norm" * $"cnorm")).as("cos"))
-    // per-query top-1 via the map-side-pruning TopKPerKey operator:
-    // (cos DESC, cand ASC) is a total order, so the heap keeps exactly
-    // the row a full window sort would rank first
-    graft.plans.TopK.perKey(scored,
-        keys = Seq($"vec_id"), order = Seq($"cos".desc, $"cand".asc), k = 1)
-      .select($"vec_id", $"cand".as("nbr"), $"cos")
-  }
+  /** d7's search: the exact-reranked top-1 of [[Clustering.ivfProbe]]
+    * at nprobe 8 of 16 cells — shared by the d7_ann_ivf gate entry and
+    * the d7b_ann_ivf_recall recall envelope (unsorted; callers order).
+    * (cos DESC, cand ASC) is a total order, so the TopKPerKey heap keeps
+    * exactly the row a full window sort ranks first. */
+  private def d7Top1(s: SparkSession, dir: String): DataFrame =
+    graft.plans.TopK.perKey(Clustering.ivfProbe(s, dir, nprobe = 8),
+        keys = Seq(col("vec_id")), order = Seq(col("cos").desc, col("cand").asc), k = 1)
+      .select(col("vec_id"), col("cand").as("nbr"), col("cos"))
 
   /** QUERY-SIDE BOUND on the exact-kNN truth set (r13 verdict #4): the
     * artifact's neighbor lists are derived for the first `KnnQueryCap`
@@ -1954,61 +1885,25 @@ object LlmPipeline {
       d6Top1(s, dir).orderBy($"vec_id")
     }),
 
-    // d6's recall, DRIVER-GATED (r15 verdict item 4 — the q11b envelope
-    // posture applied to index quality): recall@1 of the LSH index's
-    // answer against the persisted exact-kNN truth set, next to the
-    // AnnRecallSpec floor as a literal. Both the index output and the
-    // truth set are deterministic and already oracle-replayed, so the
-    // oracle reproduces the recall NUMBER itself — index-quality drift
-    // is a driver hash mismatch, not just a ScalaTest failure. Queries
-    // the index answers not at all (no bucket-mate) count as misses
-    // via the left join; integer ppm arithmetic, no float forms.
-    "d6b_ann_lsh_recall" -> ((s, dir) => {
-      import s.implicits._
-      val truth = cachedKnn(s, dir).filter($"rn" === 1)
-        .select($"vec_id", $"nbr".as("true_nbr"))
-      truth.join(d6Top1(s, dir).select($"vec_id", $"nbr"),
-          Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when($"nbr" === $"true_nbr", 1L).otherwise(0L)).as("n_hits"))
-        .select($"n_queries", $"n_hits",
-          expr("n_hits * 1000000 div n_queries").as("recall_ppm"),
-          lit(700000L).as("floor_ppm"),
-          expr("n_hits * 1000000 div n_queries >= 700000").as("above_floor"))
-    }),
+    // d6's recall envelope ([[recallEnvelope]], floor 0.7) against the
+    // persisted exact-kNN truth set.
+    "d6b_ann_lsh_recall" -> ((s, dir) =>
+      recallEnvelope(knnTop1(s, dir), d6Top1(s, dir), floorPpm = 700000L)),
 
-    // similarity search at scale, IVF-shaped: coarse-quantize vectors to
-    // their nearest TRAINED centroid (inverted cell lists), probe the
-    // nearest cells per query, search only inside them. END-TO-END
-    // hash-gated (the whole index build + search replays in DuckDB);
-    // recall quality is floor-asserted in AnnRecallSpec and
-    // driver-gated by d7b. The quantizer is Lloyd-refined
-    // ([[Clustering.centroids]], the standard IVF train step): raw
-    // first-16 seeds measured recall@1 0.664; refined centroids
-    // partition the space where the data lives.
+    // similarity search at scale, IVF-shaped ([[Clustering.ivfProbe]]):
+    // probe the nearest trained cells per query, search only inside
+    // them. END-TO-END hash-gated (the whole index build + search
+    // replays in DuckDB); recall quality is floor-asserted in
+    // AnnRecallSpec and hash-gated as a recall number by d7b.
     "d7_ann_ivf" -> ((s, dir) => {
       import s.implicits._
       d7Top1(s, dir).orderBy($"vec_id")
     }),
 
-    // d7's recall envelope, driver-gated — same posture as d6b (see
-    // there): recall@1 of the IVF top-1 vs the persisted exact-kNN
-    // truth, with the AnnRecallSpec floor (0.75) as a literal; the
-    // oracle replays the whole comparison, so a quantizer/probing
-    // regression turns this row red in the driver artifact.
-    "d7b_ann_ivf_recall" -> ((s, dir) => {
-      import s.implicits._
-      val truth = cachedKnn(s, dir).filter($"rn" === 1)
-        .select($"vec_id", $"nbr".as("true_nbr"))
-      truth.join(d7Top1(s, dir).select($"vec_id", $"nbr"),
-          Seq("vec_id"), "left")
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when($"nbr" === $"true_nbr", 1L).otherwise(0L)).as("n_hits"))
-        .select($"n_queries", $"n_hits",
-          expr("n_hits * 1000000 div n_queries").as("recall_ppm"),
-          lit(750000L).as("floor_ppm"),
-          expr("n_hits * 1000000 div n_queries >= 750000").as("above_floor"))
-    }),
+    // d7's recall envelope ([[recallEnvelope]], floor 0.75) against the
+    // persisted exact-kNN truth set.
+    "d7b_ann_ivf_recall" -> ((s, dir) =>
+      recallEnvelope(knnTop1(s, dir), d7Top1(s, dir), floorPpm = 750000L)),
 
     // IVF PROBE SWEEP — d7's quality/cost knob measured instead of
     // asserted (d33 swept LSH bands, d37 the Jaccard threshold; this
@@ -2018,54 +1913,13 @@ object LlmPipeline {
     // `prn` — the probe rank at which each candidate's home cell
     // enters the query's probe list — and every nprobe level is a
     // re-filter (prn ≤ p) of that one scored frame, the d33/sel5
-    // one-pass-many-refilters idiom. Quantizer, capping and scoring
-    // reuse d7's machinery verbatim (same Lloyd centroids, same
-    // MaxBucketSize inverted-list truncation), so the curve measures
-    // exactly the index d7 ships. Deterministic end-to-end → fully
-    // hash-gated, like d7. The brute-force truth is the same n² pass
-    // d5 bills — the harness cost of an honest recall number.
+    // one-pass-many-refilters idiom. The probe is d7's own
+    // ([[Clustering.ivfProbe]]), so the curve measures exactly the index
+    // d7 ships. Deterministic end-to-end → fully hash-gated, like d7.
     "d39_ivf_probe_sweep" -> ((s, dir) => {
       import s.implicits._
-      import graft.functions.VecDot
-      val e = graft.ops.Spread.fanout(Tables.embeddings(s, dir))
-        .select($"vec_id",
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        .withColumn("norm", sqrt(VecDot($"v", $"v")))
-      val seeds = broadcast(
-        Clustering.cachedCentroids(s, dir, k = 16, iters = 2)
-          .withColumn("cnorm", sqrt(VecDot($"cv", $"cv"))))
-      val sims = e.crossJoin(seeds)
-        .select($"vec_id", $"cid",
-          (VecDot($"v", $"cv") / ($"norm" * $"cnorm")).as("sim"))
-      val top8 = materialize(graft.plans.TopK.perKey(sims,
-        keys = Seq($"vec_id"), order = Seq($"sim".desc, $"cid".asc), k = 8))
-      val wp = Window.partitionBy($"vec_id").orderBy($"sim".desc, $"cid".asc)
-      // pinned BEFORE the window, not between window and join (opt
-      // r16): the window's own hash(vec_id) exchange coalesced to one
-      // task on the checkpoint's small bytes, and that task carried the
-      // window AND the fused candidate expansion (measured 1.3 s at
-      // sf0.1). The window reuses the pinned exchange, and the
-      // broadcast join + partial agg fuse behind it at full width.
-      val probes = graft.ops.Spread.pinned(top8, $"vec_id")
-        .withColumn("prn", row_number().over(wp).cast("long"))
-      val home = probes.filter($"prn" === 1).select($"vec_id", $"cid")
-      val capped = graft.plans.TopK.perKey(home,
-        keys = Seq($"cid"), order = Seq($"vec_id".asc), k = MaxBucketSize)
-      val cands = probes.as("p")
-        .join(broadcast(capped.as("c")),
-          $"p.cid" === $"c.cid" && $"p.vec_id" =!= $"c.vec_id")
-        .groupBy($"p.vec_id".as("vec_id"), $"c.vec_id".as("cand"))
-        .agg(min($"p.prn").as("prn"))
-      val scored = materialize(cands
-        .join(e.select($"vec_id", $"v", $"norm"), "vec_id")
-        .join(e.select($"vec_id".as("cand"), $"v".as("cv"),
-          $"norm".as("cnorm")), "cand")
-        .select($"vec_id", $"cand", $"prn",
-          (VecDot($"v", $"cv") / ($"norm" * $"cnorm")).as("cos")))
-      // ground truth from the persisted exact-kNN artifact (rank-1 row
-      // — same (cos DESC, nbr ASC) total order)
-      val truth = cachedKnn(s, dir).filter($"rn" === 1)
-        .select($"vec_id", $"nbr".as("true_nbr"))
+      val scored = materialize(Clustering.ivfProbe(s, dir, nprobe = 8))
+      val truth = knnTop1(s, dir)
       // ALL FOUR nprobe levels from ONE pass over the scored frame (opt
       // r16): the per-level form ran 4 × (TopK + truth join + two aggs)
       // over the same materialized frame — ~20 stages for a 4-row
@@ -2920,8 +2774,6 @@ object LlmPipeline {
     // order-sensitive sum is DECIMAL(38,6)-stabilized.
     "d17_sparse_cosine" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.types.DecimalType
-      def dsumL(c: Column) = sum(c.cast(DecimalType(38, 6))).cast("double")
       val docs = graft.ops.Spread.fanout(Tables.documents(s, dir))
         .select($"doc_id", toks($"text").as("toks"))
       val bi = docs.filter(size($"toks") >= 2)
@@ -2933,11 +2785,11 @@ object LlmPipeline {
         .filter($"df" <= MaxShingleDf)
       val w = materialize(bi.join(rare, "term")
         .select($"doc_id", $"term", ($"tf".cast("double") / $"df").as("w")))
-      val nrm = w.groupBy($"doc_id").agg(sqrt(dsumL($"w" * $"w")).as("nn"))
+      val nrm = w.groupBy($"doc_id").agg(sqrt(dsum($"w" * $"w")).as("nn"))
       val dot = w.as("a")
         .join(w.as("b"), $"a.term" === $"b.term" && $"a.doc_id" < $"b.doc_id")
         .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2"), ($"a.w" * $"b.w").as("p"))
-        .groupBy($"d1", $"d2").agg(dsumL($"p").as("dot"))
+        .groupBy($"d1", $"d2").agg(dsum($"p").as("dot"))
       dot
         .join(nrm.select($"doc_id".as("d1"), $"nn".as("n1")), "d1")
         .join(nrm.select($"doc_id".as("d2"), $"nn".as("n2")), "d2")
@@ -2965,7 +2817,6 @@ object LlmPipeline {
     // never reshuffled by bucket.
     "d18_importance_weights" -> ((s, dir) => {
       import s.implicits._
-      def dsumL(c: Column) = sum(c.cast(DecimalType(38, 6))).cast("double")
       val words = graft.ops.Spread.fanout(Tables.documents(s, dir))
         .select($"doc_id", $"source", explode(toks($"text")).as("word"))
         .filter(length($"word") >= 1)
@@ -2984,7 +2835,7 @@ object LlmPipeline {
       words.join(broadcast(ratio), "b")
         .groupBy($"doc_id")
         .agg(count(lit(1)).as("n_terms"),
-          (dsumL($"r") / count(lit(1))).as("score"))
+          (dsum($"r") / count(lit(1))).as("score"))
         .orderBy($"doc_id")
     }),
 
@@ -5287,12 +5138,52 @@ object LlmPipeline {
         |  FROM scored) WHERE rn = 1
         |ORDER BY vec_id""".stripMargin
 
+  /** The exact cosine top-1 (vec_id, true_nbr) of every query in the
+    * persisted kNN truth set — same (cos DESC, nbr ASC) total order as
+    * the index searches it grades. */
+  private def knnTop1(s: SparkSession, dir: String): DataFrame =
+    cachedKnn(s, dir).filter(col("rn") === 1)
+      .select(col("vec_id"), col("nbr").as("true_nbr"))
+
+  /** The ANN recall envelope shared by d6b, d7b and d26b, the Spark twin
+    * of [[recallEnvelopeSql]]: recall@1 of an index's answer `found`
+    * (vec_id, nbr) against the exact top-1 `truth` (vec_id, true_nbr),
+    * in integer ppm, with the AnnRecallSpec floor as a literal — so
+    * index-quality drift is an oracle hash mismatch, not only a ScalaTest
+    * failure. A query the index does not answer (no bucket- or
+    * cell-mate) counts as a miss through the left join. An empty query
+    * set reports zeros and above_floor false, not NULLs. */
+  private[graft] def recallEnvelope(truth: DataFrame, found: DataFrame,
+                                    floorPpm: Long): DataFrame =
+    truth.join(found.select(col("vec_id"), col("nbr")), Seq("vec_id"), "left")
+      .agg(count(lit(1)).as("n_queries"),
+        coalesce(sum(when(col("nbr") === col("true_nbr"), 1L).otherwise(0L)), lit(0L))
+          .as("n_hits"))
+      .withColumn("recall_ppm",
+        expr("CASE WHEN n_queries = 0 THEN 0 ELSE n_hits * 1000000 div n_queries END"))
+      .withColumn("floor_ppm", lit(floorPpm))
+      .withColumn("above_floor", col("recall_ppm") >= col("floor_ppm"))
+
+  /** The recall tally of [[recallEnvelope]] over the CTEs `truth`
+    * (vec_id, true_nbr) and `found` (vec_id, nbr), zeros included. */
+  private[graft] def recallTallySql(floorPpm: Long): String =
+    s"""SELECT n_queries, n_hits, recall_ppm,
+       |  CAST($floorPpm AS BIGINT) AS floor_ppm, recall_ppm >= $floorPpm AS above_floor
+       |FROM (
+       |  SELECT n_queries, n_hits,
+       |    CAST(CASE WHEN n_queries = 0 THEN 0 ELSE n_hits * 1000000 // n_queries END
+       |      AS BIGINT) AS recall_ppm
+       |  FROM (
+       |    SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
+       |      CAST(COALESCE(SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END), 0)
+       |        AS BIGINT) AS n_hits
+       |    FROM truth tr LEFT JOIN found f ON f.vec_id = tr.vec_id) c) r""".stripMargin
+
   /** Oracle for the ANN recall envelopes (d6b/d7b): wrap an index
     * replay (a full SELECT vec_id, nbr, ... query) as a subquery,
     * re-derive the exact-kNN cosine truth over the bounded
     * [[knnQuerySide]] sample (the bf/truth CTE pair d39's oracle
-    * carries, verbatim), and emit the recall comparison in integer
-    * ppm with the floor as a literal. */
+    * carries, verbatim), and emit [[recallTallySql]]. */
   private def recallEnvelopeSql(indexSql: String, floorPpm: Long): String =
     s"""WITH found AS (SELECT vec_id, nbr FROM ($indexSql) t),
        |e AS (
@@ -5317,14 +5208,7 @@ object LlmPipeline {
        |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, nbr ASC) AS rn
        |    FROM bf) WHERE rn = 1
        |)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-       |  CAST(SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |  CAST(SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END) * 1000000
-       |    // COUNT(*) AS BIGINT) AS recall_ppm,
-       |  CAST($floorPpm AS BIGINT) AS floor_ppm,
-       |  SUM(CASE WHEN f.nbr = tr.true_nbr THEN 1 ELSE 0 END) * 1000000
-       |    // COUNT(*) >= $floorPpm AS above_floor
-       |FROM truth tr LEFT JOIN found f ON f.vec_id = tr.vec_id""".stripMargin
+       |${recallTallySql(floorPpm)}""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     // DSv2 generator demos, value-gated by replaying the generator's
@@ -6186,14 +6070,16 @@ object LlmPipeline {
         |),
         |tc AS (SELECT nprobe, COUNT(*) AS total_candidates FROM sel GROUP BY 1)
         |SELECT ks.k AS nprobe,
-        |  CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(SUM(CASE WHEN t.ivf_nbr = tr.true_nbr THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |  CAST(SUM(CASE WHEN t.ivf_nbr = tr.true_nbr THEN 1 ELSE 0 END) * 1000000
-        |    // COUNT(*) AS BIGINT) AS recall_ppm,
-        |  CAST(MAX(tc.total_candidates) AS BIGINT) AS total_candidates
-        |FROM truth tr CROSS JOIN ks
+        |  CAST(COUNT(tr.vec_id) AS BIGINT) AS n_queries,
+        |  CAST(COALESCE(SUM(CASE WHEN t.ivf_nbr = tr.true_nbr THEN 1 ELSE 0 END), 0)
+        |    AS BIGINT) AS n_hits,
+        |  CAST(CASE WHEN COUNT(tr.vec_id) = 0 THEN 0
+        |    ELSE SUM(CASE WHEN t.ivf_nbr = tr.true_nbr THEN 1 ELSE 0 END) * 1000000
+        |      // COUNT(tr.vec_id) END AS BIGINT) AS recall_ppm,
+        |  CAST(COALESCE(MAX(tc.total_candidates), 0) AS BIGINT) AS total_candidates
+        |FROM ks LEFT JOIN truth tr ON TRUE
         |LEFT JOIN top t ON t.nprobe = ks.k AND t.vec_id = tr.vec_id
-        |JOIN tc ON tc.nprobe = ks.k
+        |LEFT JOIN tc ON tc.nprobe = ks.k
         |GROUP BY ks.k
         |ORDER BY ks.k""".stripMargin,
 

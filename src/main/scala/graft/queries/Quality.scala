@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 
 /** DATA-QUALITY operators — the Deequ/Great-Expectations-style gate a
@@ -16,8 +17,6 @@ import graft.sources.Tables
   * filter-count or an anti-join, never a collect.
   */
 object Quality {
-
-  private def dsum(c: Column) = graft.ops.Num.dsum(c)
 
   /** One profile row per requested column: row count, null count,
     * distinct count, and min/max/mean of the column's CANONICAL NUMERIC

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 
 /** Relational / analytical operator battery (SURVEY.md §2.5 [EXT]).
@@ -20,11 +21,6 @@ import graft.sources.Tables
   *   - column names are aliased identically on both sides.
   */
 object Relational {
-
-  /** sum(cast(x as decimal(38,6))) cast back to double — deterministic
-    * across row orderings and engines, unlike a raw double sum. */
-  private def dsum(c: org.apache.spark.sql.Column) =
-    graft.ops.Num.dsum(c)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: scan → filter → hash agg (partial+final map-side

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 
 /** Retrieval / corpus-scoring operators over `documents` (the [EXT]
@@ -26,8 +27,6 @@ import graft.sources.Tables
 object Retrieval {
 
   private def toks(c: Column): Column = split(lower(c), "\\s+")
-
-  private def dsum(c: Column) = graft.ops.Num.dsum(c)
 
   /** t21's five Gopher-style gate names in their canonical order —
     * t40's co-failure matrix and its oracle generate the 10 unordered

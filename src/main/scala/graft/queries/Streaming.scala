@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 import graft.streaming.Streams
 
@@ -17,8 +18,6 @@ import graft.streaming.Streams
   * shapes run as genuine Structured Streaming plans in
   * [[graft.streaming.Streams]] (proven equal in StreamingSpec). */
 object Streaming {
-
-  private def dsum(c: Column) = graft.ops.Num.dsum(c)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

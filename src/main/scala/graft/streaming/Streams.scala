@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ops.Num.dsum
 import graft.sources.Tables
 
 /** A mergeable summary, the one shape of the incremental streaming
@@ -54,8 +55,6 @@ final case class Summary(keys: Seq[(String, Column)],
   * proven in batch and the same plan runs incrementally with watermarked
   * state. */
 object Streams {
-
-  private def dsum(c: Column) = graft.ops.Num.dsum(c)
 
   /** `readStream` source over the fixture table `table` with the
     * batch-derived schema (a streaming scan cannot infer), including the

@@ -13,6 +13,11 @@ object BenchOne {
       val n = body
       println(f"[benchone] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
     }
+    // the bench's plan-preserving action: df.count() would let Catalyst
+    // dead-code-eliminate aggregates/sorts and time a plan the bench
+    // never bills (dq1 measured 0.65 s under count() vs 7.5 s billed)
+    def act(df: org.apache.spark.sql.DataFrame): Long =
+      df.queryExecution.toRdd.count()
     if (name == "_shingleab") {
       import org.apache.spark.sql.functions._
       val docs = graft.sources.Tables.documents(spark, sfDir)
@@ -31,13 +36,6 @@ object BenchOne {
       // per-stage attribution: warm once, then run instrumented
       val q = name.stripPrefix("_jobs:")
       val fn = SparkEntry.queries(q)
-      // the bench's plan-preserving action: df.count() would let
-      // Catalyst dead-code-eliminate aggregates/sorts and attribute a
-      // plan the bench never bills (dq1 profiled 0.65 s under count()
-      // vs 7.5 s billed — the round-7 accounting lesson applies to the
-      // profiler too)
-      def act(df: org.apache.spark.sql.DataFrame): Long =
-        df.queryExecution.toRdd.count()
       (1 to 2).foreach { i => time(s"$q warm$i")(act(fn(spark, sfDir))) }
       import org.apache.spark.scheduler._
       import scala.collection.mutable
@@ -63,14 +61,14 @@ object BenchOne {
       println(f"[benchone] stage total: ${stages.map(_._3).sum} ms over ${stages.size} stages")
     } else if (name.startsWith("_seq:")) {
       // battery-context reproduction: run the listed queries in order
-      // in ONE JVM with the bench's own plan-preserving action, to
+      // in ONE JVM with the bench's plan-preserving action, to
       // separate isolated-vs-in-battery cost (e.g. dq1's 0.85 s
       // isolated vs 7.5-8.3 s billed in the 149-query battery)
       val qs = name.stripPrefix("_seq:").split(",").toSeq
       qs.foreach { q =>
         val fn = SparkEntry.queries(q)
         (1 to 2).foreach { i =>
-          time(s"$q seq$i")(fn(spark, sfDir).queryExecution.toRdd.count())
+          time(s"$q seq$i")(act(fn(spark, sfDir)))
           spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
           spark.sqlContext.clearCache()
           System.gc()
@@ -122,20 +120,11 @@ object BenchOne {
       // print with per-exchange partition specs visible
       val q = name.stripPrefix("_aqe:")
       val df = SparkEntry.queries(q)(spark, sfDir)
-      df.queryExecution.toRdd.count()
+      act(df)
       println(df.queryExecution.executedPlan.toString)
-    } else if (name.startsWith("_rdd:")) {
-      // the bench main's plan-preserving action, for apples-to-apples
-      val q = name.stripPrefix("_rdd:")
-      val fn = SparkEntry.queries(q)
-      (1 to 3).foreach { i =>
-        time(s"$q rdd run$i")(fn(spark, sfDir).queryExecution.toRdd.count())
-      }
     } else {
       val fn = SparkEntry.queries(name)
-      (1 to 3).foreach { i =>
-        time(s"$name run$i")(fn(spark, sfDir).count())
-      }
+      (1 to 3).foreach { i => time(s"$name run$i")(act(fn(spark, sfDir))) }
     }
     spark.stop()
   }

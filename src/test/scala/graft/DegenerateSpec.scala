@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Degenerate corpora through the near-dup family's shared bucket kernel
-  * (d2, d24, d37, d42, d43) and d39's probe sweep: an empty corpus must
-  * answer with the non-empty schema and zero rows or zero counts, and a
-  * corpus of identical documents must report exactly the pairs a
-  * brute-force count over the same sample predicates finds. Each corpus
-  * is written to its own directory, so derived artifacts never leak
-  * between runs. */
+  * (d2, d24, d37, d42, d43) and the ANN family (d6b, d7, d7b, d26b,
+  * d39, e9, e12): an empty corpus must answer with the non-empty schema
+  * and zero rows or zero counts, and a corpus of identical documents
+  * must report exactly the pairs a brute-force count over the same
+  * sample predicates finds. Each corpus is written to its own directory,
+  * so derived artifacts never leak between runs. */
 class DegenerateSpec extends SparkTestBase {
 
   private val docSchema = StructType(Seq(
@@ -178,16 +178,37 @@ class DegenerateSpec extends SparkTestBase {
     }
   }
 
-  test("d39 reports zero totals, not NULL, when no probe finds a candidate") {
+  test("ANN family on empty embeddings reports zero totals, not NULL or an exception") {
     val schema = StructType(Seq(StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType)))
+    def zero(q: String, r: Row, cols: Seq[String]): Unit =
+      for (c <- cols)
+        assert(!r.isNullAt(r.fieldIndex(c)) && r.getAs[Long](c) == 0L, s"$q.$c in $r")
     withCorpus(Seq.empty) { dir =>
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         .write.parquet(s"$dir/embeddings.parquet")
-      val rows = run("d39_ivf_probe_sweep", dir).collect()
-      assert(rows.map(_.getAs[Long]("nprobe")).toSeq == Seq(1L, 2L, 4L, 8L))
-      for (r <- rows; c <- Seq("n_queries", "n_hits", "recall_ppm", "total_candidates"))
-        assert(!r.isNullAt(r.fieldIndex(c)) && r.getAs[Long](c) == 0L, s"$c in $r")
+      val d39 = run("d39_ivf_probe_sweep", dir).collect()
+      assert(d39.map(_.getAs[Long]("nprobe")).toSeq == Seq(1L, 2L, 4L, 8L))
+      for (r <- d39)
+        zero("d39", r, Seq("n_queries", "n_hits", "recall_ppm", "total_candidates"))
+
+      assert(run("d7_ann_ivf", dir).collect().isEmpty)
+
+      for (q <- Seq("d6b_ann_lsh_recall", "d7b_ann_ivf_recall", "d26b_ann_pq_recall")) {
+        val rows = run(q, dir).collect()
+        assert(rows.length == 1, s"$q: ${rows.toSeq}")
+        zero(q, rows.head, Seq("n_queries", "n_hits", "recall_ppm"))
+        assert(!rows.head.isNullAt(rows.head.fieldIndex("above_floor")) &&
+          !rows.head.getAs[Boolean]("above_floor"), s"$q: ${rows.head}")
+      }
+
+      val e12 = run("e12_recall_at_k", dir).collect()
+      assert(e12.map(_.getAs[Long]("k")).toSeq == Seq(1L, 3L, 5L))
+      for (r <- e12) zero("e12", r, Seq("n_queries", "n_overlap", "recall_ppm"))
+
+      val e9 = run("e9_pq_rate_distortion", dir).collect()
+      assert(e9.map(_.getAs[Long]("m")).toSeq == Seq(4L, 8L, 16L))
+      for (r <- e9) zero("e9", r, Seq("n_vecs", "n_cells", "distortion_grid"))
     }
   }
 }

@@ -5,8 +5,9 @@ package graft
   * broadcast, accidental cartesian) fails CI — not just a slower bench. */
 class PlanSpec extends SparkTestBase {
 
-  private def plan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sf0001)
+  private def plan(name: String): String = executed(SparkEntry.queries(name)(spark, sf0001))
+
+  private def executed(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // materialize so AQE's FINAL plan (incl. codegen spans) prints
     df.queryExecution.executedPlan.toString
   }
@@ -275,13 +276,31 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  // the shared IVF probe's posture (Clustering.ivfProbe): the cell lists
+  // are size-bounded by construction and broadcast into the candidate
+  // join — a shuffle on the 16-value cid key would cap parallelism at
+  // k. The one cid exchange is the capping TopKPerKey's own, over home
+  // rows already pruned map-side to at most the cap per cell.
+  private def auditIvf(what: String, p: String): Unit = {
+    assert(p.contains("BroadcastExchange"), s"$what: " + p)
+    val ops = p.split("\n")
+      .filterNot(l => l.contains("ShuffleQueryStage") || l.contains("AQEShuffleRead"))
+    for (i <- ops.indices if ops(i).contains("Exchange hashpartitioning(cid"))
+      assert(i > 0 && ops(i - 1).contains("TopKPerKey false, [cid"),
+        s"$what: a cid exchange outside the capping TopKPerKey\n" + p)
+  }
+
   test("d39: capped inverted lists broadcast; candidates never shuffle on cid") {
-    // d7's posture must survive in the sweep: the cell lists are
-    // size-bounded by construction and broadcast — a hash exchange on
-    // the 16-value cid key would cap parallelism at k
-    val p = finalPlan("d39_ivf_probe_sweep")
-    assert(p.contains("BroadcastExchange"), p)
-    assert(!p.contains("Exchange hashpartitioning(cid"), p)
+    // d39 checkpoints the probe's output, so the kernel is audited too
+    auditIvf("d39_ivf_probe_sweep", finalPlan("d39_ivf_probe_sweep"))
+    val probe = executed(graft.queries.Clustering.ivfProbe(spark, sf0001, nprobe = 8))
+      .split("== Initial Plan ==").head
+    auditIvf("ivfProbe", probe)
+    assert(probe.contains("BroadcastHashJoin [cid"), probe)
+  }
+
+  test("d7/e12: the IVF probe keeps its posture inside ANN search and recall@k") {
+    Seq("d7_ann_ivf", "e12_recall_at_k").foreach(q => auditIvf(q, finalPlan(q)))
   }
 
   test("gr14: mutual-kNN edges come from an equi self-join, no cartesian") {
