@@ -268,24 +268,21 @@ object LlmPipeline {
     val m = (nVec + 24L) / 25L
     val bitsPerTable = math.max(5,
       64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, m - 1L)))
-    val sig = e.select($"vec_id",
+    val sig = e.select($"vec_id".as("doc_id"),
         posexplode(LshSignature($"v", nTables, bitsPerTable)))
-      .select($"vec_id", $"pos".as("t"), $"col".as("bucket"))
+      .select($"doc_id", $"pos".as("t"), $"col".as("bucket"))
     // HOT-BUCKET BACKSTOP: even with log-scaled bits, a degenerate
     // projection (mass on one side of a hyperplane set) can pile a
     // constant FRACTION of the corpus into one bucket; buckets over
-    // MaxBucketSize are dropped whole — the d2/d3/d24 df-cap
-    // posture at the (table, bucket) grain.
-    val hot = sig.groupBy($"t", $"bucket")
-      .agg(count(lit(1)).as("df")).filter($"df" > MaxBucketSize)
-      .select($"t", $"bucket")
-    val kept = sig.join(hot, Seq("t", "bucket"), "left_anti")
-    val cand = kept.as("a")
-      .join(kept.as("b"),
-        $"a.t" === $"b.t" && $"a.bucket" === $"b.bucket" &&
-          $"a.vec_id" =!= $"b.vec_id")
-      .select($"a.vec_id".as("vec_id"), $"b.vec_id".as("nbr"))
-      .distinct()
+    // MaxBucketSize are dropped whole — the family's df cap at the
+    // (table, bucket) grain, applied by [[buckets]]. Each distinct
+    // pair is emitted in both orientations: every vector ranks all of
+    // its candidates.
+    val cand = candidatePairs(sig, Seq("t", "bucket"), MaxBucketSize)
+      .select(explode(array(
+        struct($"d1".as("vec_id"), $"d2".as("nbr")),
+        struct($"d2".as("vec_id"), $"d1".as("nbr")))).as("p"))
+      .select($"p.vec_id", $"p.nbr")
     val n = e.select($"vec_id", $"v", sqrt(VecDot($"v", $"v")).as("norm"))
     val scored = cand
       .join(n, "vec_id")
@@ -748,13 +745,20 @@ object LlmPipeline {
   }
 
   /** Under-cap posting-list buckets of an inverted index, the ONE bucket
-    * kernel of the near-dup family (d2, d3, d24, d32, d33, d37, d40, d42,
-    * `exactInterFor` and the shared-shingle graph edges): one row per
-    * key group of at most `maxDf` members, carrying `keys` and `ids`,
-    * the group's sorted `doc_id`s. A group over the cap (a boilerplate
-    * shingle, a degenerate band bucket) is dropped whole — the df cap,
-    * the family's heavy-hitter bound — so no bucket expands to more than
-    * maxDf·(maxDf-1)/2 pairs.
+    * kernel of every capped posting list (d2, d3, d6's LSH tables, d13's
+    * SimHash bands, d24, d25's winnow fingerprints, d32, d33, d37, d40,
+    * d42, d43, `exactInterFor` and the shared-shingle graph edges): one
+    * row per key group of at most `maxDf` members, carrying `keys` and
+    * `ids`, the group's sorted `doc_id`s. A group over the cap (a
+    * boilerplate shingle, a degenerate band bucket) is dropped whole —
+    * the df cap, the family's heavy-hitter bound — so no bucket expands
+    * to more than maxDf·(maxDf-1)/2 pairs.
+    *
+    * Two capped joins stay outside on purpose: d14's batch×index join
+    * ([[incrementalDedup]]) pairs only across its two sides, so buckets
+    * would expand the batch–batch and index–index pairs only to drop
+    * them; d17's postings carry a per-(doc, term) weight, and a bucket
+    * carries ids only.
     *
     * Shape: [[graft.ops.Spread.pinned]] ships the raw `(key, doc_id)`
     * postings through one exchange, and [[graft.functions.CappedCollect]]
@@ -792,32 +796,6 @@ object LlmPipeline {
 
   def candidatePairs(index: DataFrame, keys: Seq[String], maxDf: Int): DataFrame =
     bucketPairs(buckets(index, keys, maxDf)).distinct()
-
-  /** Candidate pairs from an inverted index carrying extra per-doc
-    * columns through the self-join as `d1_<c>` / `d2_<c>` — saves the
-    * two doc-keyed re-join shuffles a verify step would otherwise pay
-    * to recover them. Hot keys (document frequency > maxDf) are dropped
-    * with an anti-join, then the self-join runs inside the surviving key
-    * groups: never all-pairs, never quadratic in a hot key. No broadcast
-    * hint on the hot set: its cardinality (number of distinct keys over
-    * the cap) is unbounded at 100 TB — common trigrams alone could blow
-    * a forced broadcast. AQE broadcasts it at runtime when it is
-    * actually small. */
-  def candidatePairsWith(index: DataFrame, keys: Seq[String], maxDf: Int,
-                         carry: Seq[String]): DataFrame = {
-    val kc = keys.map(col)
-    val hot = index.groupBy(kc: _*).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).drop("df")
-    // both sides of the self-join consume idx: materialize once instead
-    // of recomputing the upstream chain (for d3 that chain is the whole
-    // minhash signature pipeline) per side
-    val idx = materialize(index.join(hot, keys, "left_anti"))
-    val joinCond = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
-      col("a.doc_id") < col("b.doc_id")
-    val sel = Seq(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")) ++
-      carry.flatMap(c => Seq(col(s"a.$c").as(s"d1_$c"), col(s"b.$c").as(s"d2_$c")))
-    idx.as("a").join(idx.as("b"), joinCond).select(sel: _*).distinct()
-  }
 
   /** The prune of the hot-only verify, shared by d2, d24, d42 and d43:
     * join each pair's shared under-cap count `ri` with both docs' stats
@@ -910,7 +888,8 @@ object LlmPipeline {
     * intersect only the per-doc HOT arrays (a handful of shingles
     * each). inter = ri + |hotA ∩ hotB| exactly — same verdicts as the
     * full-set intersect, transient allocation bounded by hot-set size,
-    * never doc length. Returns (d1, d2, inter, na, nb).
+    * never doc length. `pairs` holds distinct (d1, d2) rows, as
+    * [[candidatePairs]] emits them. Returns (d1, d2, inter, na, nb).
     *
     * Exactness holds for ANY partition of the shingles into hot/cold
     * (rare shared count + hot intersect always sums to the full
@@ -934,13 +913,8 @@ object LlmPipeline {
     *     with corpus-df arrays vs 4.8 s with the restricted split). */
   private[graft] def exactInterFor(sh: DataFrame, pairs: DataFrame,
                                    hotDf: Int = 64,
-                                   pairsUnique: Boolean = false,
                                    localDf: Boolean = true): DataFrame = {
-    // callers that hand over an already-deduped candidate frame
-    // (candidatePairs ends .distinct()) skip a full exchange+agg stage
-    val uniq =
-      if (pairsUnique) pairs.select(col("d1"), col("d2"))
-      else pairs.select(col("d1"), col("d2")).distinct()
+    val uniq = pairs.select(col("d1"), col("d2"))
     val ids = uniq.select(col("d1").as("doc_id"))
       .union(uniq.select(col("d2").as("doc_id"))).distinct()
     val shc = sh.join(ids, Seq("doc_id"), "left_semi")
@@ -1022,30 +996,6 @@ object LlmPipeline {
                                       tau: Double): (DataFrame, DataFrame) =
     prunedPairs(sh, maxDf,
       col("ubi").cast("double") / least(col("na"), col("nb")) >= tau)
-
-  /** Exact Jaccard for candidate pairs, scored on the FULL shingle sets
-    * (capping above affects only which pairs are considered, never the
-    * reported similarity). The index is first semi-join-restricted to
-    * documents that appear in some candidate pair — the verify joins
-    * then touch only the (typically tiny) candidate neighborhood instead
-    * of re-exploding every document's shingles. */
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    val ids = cand.select(col("d1").as("doc_id"))
-      .union(cand.select(col("d2").as("doc_id"))).distinct()
-    // gather per-candidate-doc shingle sets once and intersect per pair
-    // (see nearDupJaccard's verify for the shape rationale); bounded by
-    // the candidate neighborhood, never a full-corpus collect
-    val sets = sh.join(ids, Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("shingle")).as("shs"), count(lit(1)).as("n"))
-    cand
-      .join(sets.select(col("doc_id").as("d1"), col("shs").as("sa"), col("n").as("na")), "d1")
-      .join(sets.select(col("doc_id").as("d2"), col("shs").as("sb"), col("n").as("nb")), "d2")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .select(col("d1"), col("d2"),
-        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
 
   /** Incremental batch-vs-corpus dedup (the d14 core, extracted for unit
     * testing): keep only batch docs (source == `batchSource`) that match
@@ -1280,7 +1230,11 @@ object LlmPipeline {
       // verification restricted to the CANDIDATES — the point of LSH:
       // at scale the full pair set is never materialized
       val cand = candidatePairs(bands, Seq("band", "bkey"), MaxBucketSize)
-      verifyJaccard(cand, sh, 0.5).orderBy($"d1", $"d2")
+      exactInterFor(sh, cand, localDf = false)
+        .select($"d1", $"d2",
+          ($"inter".cast("double") / ($"na" + $"nb" - $"inter")).as("jaccard"))
+        .filter($"jaccard" >= 0.5)
+        .orderBy($"d1", $"d2")
     }),
 
     // DEDUP SAVINGS: the headline number a dedup run reports — per
@@ -1441,7 +1395,8 @@ object LlmPipeline {
       val sampled = allCand.filter(
         substring(md5(concat($"d1".cast("string"), lit(":"),
           $"d2".cast("string"))), 1, 1) === "0")
-      val ex = exactInterFor(sh, sampled.select($"d1", $"d2"))
+      // one pair can be a candidate of several configs
+      val ex = exactInterFor(sh, sampled.select($"d1", $"d2").distinct())
         .select($"d1", $"d2",
           (expr("inter * 2") >= expr("na + nb - inter")).as("good"))
       allCand.groupBy($"config").agg(count(lit(1)).as("n_cand"))
@@ -1500,7 +1455,7 @@ object LlmPipeline {
         // exact inter/sizes via the hot-only split; the candidate
         // neighborhood is bucket-cap-bounded, so the zero-aggregation
         // corpus-df split basis applies — see exactInterFor
-        .join(exactInterFor(sh, cand, pairsUnique = true, localDf = false),
+        .join(exactInterFor(sh, cand, localDf = false),
           Seq("d1", "d2"))
         .withColumn("matches",
           expr("CAST(size(filter(zip_with(ma, mb, (a, b) -> a = b), v -> v)) AS BIGINT)"))
@@ -1545,7 +1500,7 @@ object LlmPipeline {
           "CAST(size(filter(zip_with(sa, sb, (a, b) -> a <> 'E' AND b <> 'E'), v -> v)) AS BIGINT)"))
         .withColumn("matches", expr(
           "CAST(size(filter(zip_with(sa, sb, (a, b) -> a <> 'E' AND a = b), v -> v)) AS BIGINT)"))
-        .join(exactInterFor(sh, cand, pairsUnique = true, localDf = false),
+        .join(exactInterFor(sh, cand, localDf = false),
           Seq("d1", "d2"))
         .select($"d1", $"d2", $"filled_both", $"matches",
           when($"filled_both" === 0L, 0L)
@@ -1751,14 +1706,15 @@ object LlmPipeline {
     "d13_simhash_neardup" -> ((s, dir) => {
       import s.implicits._
       val sh = materialize(simhashes(s, dir))
-      val bands = sh.select($"doc_id", $"simhash",
+      val bands = sh.select($"doc_id",
           posexplode(array((0 until 4).map(i =>
             $"simhash".cast("long").bitwiseAND(lit(32767L) * lit(1L << (15 * i)))): _*)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bval")
-      val cand = candidatePairsWith(bands, Seq("band", "bval"), MaxBucketSize,
-        Seq("simhash"))
-      cand
-        .withColumn("hamming", bit_count($"d1_simhash".bitwiseXOR($"d2_simhash")))
+      // sh holds one row per doc, so both simhash joins can broadcast
+      candidatePairs(bands, Seq("band", "bval"), MaxBucketSize)
+        .join(sh.select($"doc_id".as("d1"), $"simhash".as("s1")), "d1")
+        .join(sh.select($"doc_id".as("d2"), $"simhash".as("s2")), "d2")
+        .withColumn("hamming", bit_count($"s1".bitwiseXOR($"s2")))
         .filter($"hamming" <= 3)
         .select($"d1", $"d2", $"hamming")
         .orderBy($"d1", $"d2")

@@ -557,18 +557,15 @@ object Retrieval {
     // collide here — at ~2/(w+1) the index this joins is 5x smaller
     // than d2's full shingle posting list, which is the whole point of
     // winnowing at 100 TB. Hot fingerprints (df > 100) are capped out
-    // of candidate generation, the d2 convention.
+    // of candidate generation by the family's bucket kernel, the d2
+    // convention; a pair's shared-fingerprint count is its bucket-pair
+    // count, the graph edges' shape.
     "d25_winnow_match" -> ((s, dir) => {
       import s.implicits._
-      val fps = graft.ops.Materialize(
-        winnowSelect(graft.ops.Spread.fanout(Tables.documents(s, dir)))
-          .select($"doc_id", expr("wmin div 2147483648").as("fp")).distinct())
-      val ok = fps.groupBy($"fp").agg(count(lit(1)).as("df"))
-        .filter($"df" <= 100).select($"fp")
-      val idx = fps.join(ok, Seq("fp"), "left_semi")
-      idx.as("a").join(idx.as("b"),
-          $"a.fp" === $"b.fp" && $"a.doc_id" < $"b.doc_id")
-        .groupBy($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
+      val fps = winnowSelect(graft.ops.Spread.fanout(Tables.documents(s, dir)))
+        .select($"doc_id", expr("wmin div 2147483648").as("fp")).distinct()
+      LlmPipeline.bucketPairs(LlmPipeline.buckets(fps, Seq("fp"), 100))
+        .groupBy($"d1", $"d2")
         .agg(count(lit(1)).as("n_shared"))
         .filter($"n_shared" >= 3)
         .orderBy($"d1", $"d2")

@@ -1,6 +1,7 @@
 package graft
 
-/** Dev probe: time one registered query (3 runs) or ad-hoc stages.
+/** Dev probe: time one registered query (one untimed warm run, then 3
+  * timed runs) or ad-hoc stages.
   * Usage: Test/runMain graft.BenchOne <query_name> [sfDir]
   */
 object BenchOne {
@@ -18,21 +19,14 @@ object BenchOne {
     // never bills (dq1 measured 0.65 s under count() vs 7.5 s billed)
     def act(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
-    if (name == "_shingleab") {
-      import org.apache.spark.sql.functions._
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      def hof = graft.queries.LlmPipeline.shingleIndex(docs)
-      def codegen = docs
-        .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), col("toks"),
-          explode(sequence(lit(0), size(col("toks")) - 3)).as("i"))
-        .select(col("doc_id"), concat_ws(" ",
-          expr("toks[i]"), expr("toks[i+1]"), expr("toks[i+2]")).as("shingle"))
-        .distinct()
-      (1 to 3).foreach { i => time(s"hof run$i")(hof.count()) }
-      (1 to 3).foreach { i => time(s"codegen run$i")(codegen.count()) }
-    } else if (name.startsWith("_jobs:")) {
+    // per-run state drop: no checkpoint, cached plan or garbage from one
+    // run is billed to the next
+    def drop(): Unit = {
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      spark.sqlContext.clearCache()
+      System.gc()
+    }
+    if (name.startsWith("_jobs:")) {
       // per-stage attribution: warm once, then run instrumented
       val q = name.stripPrefix("_jobs:")
       val fn = SparkEntry.queries(q)
@@ -69,41 +63,7 @@ object BenchOne {
         val fn = SparkEntry.queries(q)
         (1 to 2).foreach { i =>
           time(s"$q seq$i")(act(fn(spark, sfDir)))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-          spark.sqlContext.clearCache()
-          System.gc()
-        }
-      }
-    } else if (name == "_audioprof") {
-      // raw javax.sound op costs, single-threaded: which codec call
-      // dominates the audio family's per-doc bill?
-      import javax.sound.sampled._
-      def encode(pcm: Array[Byte], n: Int): Array[Byte] = {
-        val fmt = new AudioFormat(8000f, 16, 1, true, false)
-        val ais = new AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-        bos.toByteArray
-      }
-      def decode(bytes: Array[Byte]): Array[Byte] = {
-        val in = AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        try in.readAllBytes() finally in.close()
-      }
-      val n = 384
-      val pcm = new Array[Byte](n * 2)
-      java.util.Arrays.fill(pcm, 7.toByte)
-      val wav = encode(pcm, n)
-      val reps = 20000
-      (1 to 2).foreach { round =>
-        time(s"encode x$reps round$round") {
-          var i = 0; var acc = 0L
-          while (i < reps) { acc += encode(pcm, n).length; i += 1 }; acc
-        }
-        time(s"decode x$reps round$round") {
-          var i = 0; var acc = 0L
-          while (i < reps) { acc += decode(wav).length; i += 1 }; acc
+          drop()
         }
       }
     } else if (name.startsWith("_explain:")) {
@@ -124,7 +84,11 @@ object BenchOne {
       println(df.queryExecution.executedPlan.toString)
     } else {
       val fn = SparkEntry.queries(name)
-      (1 to 3).foreach { i => time(s"$name run$i")(act(fn(spark, sfDir))) }
+      // run 0 is untimed: it pays artifact derivation and JIT warm-up,
+      // so the three timed runs compare warm against warm
+      act(fn(spark, sfDir))
+      drop()
+      (1 to 3).foreach { i => time(s"$name run$i")(act(fn(spark, sfDir))); drop() }
     }
     spark.stop()
   }

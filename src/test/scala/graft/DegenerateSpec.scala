@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Degenerate corpora through the near-dup family's shared bucket kernel
-  * (d2, d24, d37, d42, d43) and the ANN family (d6b, d7, d7b, d26b,
-  * d39, e9, e12): an empty corpus must answer with the non-empty schema
-  * and zero rows or zero counts, and a corpus of identical documents
+  * (d2, d3, d13, d24, d25, d37, d42, d43) and the ANN family (d6, d6b,
+  * d7, d7b, d26b, d39, e9, e12): an empty corpus must answer with the
+  * non-empty schema and zero rows or zero counts, a bucket over the cap
+  * must emit no pairs, and a corpus of identical documents
   * must report exactly the pairs a brute-force count over the same
   * sample predicates finds. Each corpus is written to its own directory,
   * so derived artifacts never leak between runs. */
@@ -47,7 +48,17 @@ class DegenerateSpec extends SparkTestBase {
   private val family = Seq("d2_dedup_ngram_jaccard", "d24_containment_dedup",
     "d37_jaccard_threshold_sweep", "d42_dfcap_sweep", "d43_shingle_width_sweep")
 
+  /** The pair-emitting users of the kernel: one row per near-dup pair. */
+  private val pairQueries = Seq("d2_dedup_ngram_jaccard", "d3_dedup_minhash_lsh",
+    "d13_simhash_neardup", "d24_containment_dedup", "d25_winnow_match")
+
   private def run(q: String, dir: String): DataFrame = SparkEntry.queries(q)(spark, dir)
+
+  private def pairIds(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"))).toSeq
+
+  private val embSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType)))
 
   private def toks(t: String): IndexedSeq[String] = t.toLowerCase.split("\\s+").toIndexedSeq
 
@@ -60,8 +71,11 @@ class DegenerateSpec extends SparkTestBase {
 
   // four identical docs and one that shares nothing with them; the ids
   // pass both d42's (doc_id % 4 = 0) and d43's (md5 first hex c or d)
-  // sample, so every query sees the whole corpus
-  private val dupText = "the quick brown fox jumps over the lazy dog twice"
+  // sample, so every query sees the whole corpus. The text is long
+  // enough for winnowing to select the three shared fingerprints d25
+  // needs to pair two docs
+  private val dupText = "the quick brown fox jumps over the lazy dog twice " +
+    "and then runs far away into the green hills beyond the old river"
   private val ids = Iterator.from(1).map(_ * 4L)
     .filter(i => Set('c', 'd')(md5(i.toString).head)).take(5).toSeq
   private val dupDocs = ids.take(4).map(_ -> dupText) :+
@@ -104,14 +118,15 @@ class DegenerateSpec extends SparkTestBase {
   }
 
   test("near-dup family on an empty corpus: same schema, zero rows or zero counts") {
-    val schemas = withCorpus(dupDocs)(dir => family.map(q => q -> run(q, dir).schema).toMap)
+    val queries = (family ++ pairQueries).distinct
+    val schemas = withCorpus(dupDocs)(dir => queries.map(q => q -> run(q, dir).schema).toMap)
     withCorpus(Seq.empty) { dir =>
-      for (q <- family) {
+      for (q <- queries) {
         val df = run(q, dir)
         assert(df.schema == schemas(q), s"$q schema")
         val rows = df.collect()
         q match {
-          case "d2_dedup_ngram_jaccard" | "d24_containment_dedup" =>
+          case _ if pairQueries.contains(q) =>
             assert(rows.isEmpty, s"$q: ${rows.toSeq}")
           case _ =>
             assert(rows.nonEmpty, s"$q keeps its tier rows")
@@ -131,6 +146,29 @@ class DegenerateSpec extends SparkTestBase {
       val d2 = pairs(sh3, 100).filter { case (_, _, it, na, nb) => it.toDouble / (na + nb - it) >= 0.5 }
       assert(d2.size == 6)
       assert(run("d2_dedup_ngram_jaccard", dir).count() == d2.size)
+      // d3's MinHash bands meet exactly the identical docs, all verified
+      assert(pairIds(run("d3_dedup_minhash_lsh", dir)) == d2.map(p => (p._1, p._2)))
+
+      // d13: every pair of d4's fingerprints within Hamming distance 3
+      val fp = run("d4_simhash", dir).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
+      val near = for {
+        i <- fp.keys.toSeq.sorted; j <- fp.keys.toSeq.sorted if i < j
+        h = java.lang.Long.bitCount(fp(i) ^ fp(j)).toLong if h <= 3
+      } yield (i, j, h)
+      assert(near.size >= 6)
+      assert(run("d13_simhash_neardup", dir).collect()
+        .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"), r.getAs[Long]("hamming"))).toSeq == near)
+
+      // d25: pairs sharing >= 3 selected winnow fingerprints of df <= 100
+      val wfp = graft.queries.Retrieval.winnowSelect(spark.read.parquet(s"$dir/documents.parquet"))
+        .selectExpr("doc_id", "wmin div 2147483648 AS fp").distinct().collect()
+        .groupBy(_.getAs[Long]("doc_id")).view.mapValues(_.map(_.getAs[Long]("fp")).toSet).toMap
+      val shared = pairs(wfp.view.mapValues(_.map(_.toString)).toMap, 100)
+        .collect { case (i, j, it, _, _) if it >= 3 => (i, j, it.toLong) }
+      assert(shared.size == 6)
+      assert(run("d25_winnow_match", dir).collect()
+        .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"), r.getAs[Long]("n_shared"))).toSeq == shared)
 
       val d24 = pairs(sh3, 100).flatMap { case (_, _, it, na, nb) =>
         Seq(it.toDouble / na, it.toDouble / nb).filter(_ >= 0.5) }
@@ -163,6 +201,19 @@ class DegenerateSpec extends SparkTestBase {
     }
   }
 
+  test("a bucket over the cap is dropped whole: 101 identical docs or vectors give no pairs") {
+    val over = graft.queries.LlmPipeline.MaxBucketSize + 1
+    withCorpus((1 to over).map(_.toLong -> dupText)) { dir =>
+      for (q <- Seq("d3_dedup_minhash_lsh", "d13_simhash_neardup", "d25_winnow_match"))
+        assert(run(q, dir).collect().isEmpty, q)
+      val v = Array.tabulate(64)(i => (i % 7 - 3).toFloat)
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          (1 to over).map(i => Row(i.toLong, v.toSeq, i % 3)), 1), embSchema)
+        .write.parquet(s"$dir/embeddings.parquet")
+      assert(run("d6_ann_lsh", dir).collect().isEmpty)
+    }
+  }
+
   test("d42 on a corpus rewritten in place counts the new docs, not its old artifacts") {
     // two duplicates of a new text and three unrelated docs, against the
     // four duplicates of the first corpus: one pair at every cap, not six
@@ -179,13 +230,11 @@ class DegenerateSpec extends SparkTestBase {
   }
 
   test("ANN family on empty embeddings reports zero totals, not NULL or an exception") {
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType)))
     def zero(q: String, r: Row, cols: Seq[String]): Unit =
       for (c <- cols)
         assert(!r.isNullAt(r.fieldIndex(c)) && r.getAs[Long](c) == 0L, s"$q.$c in $r")
     withCorpus(Seq.empty) { dir =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], embSchema)
         .write.parquet(s"$dir/embeddings.parquet")
       val d39 = run("d39_ivf_probe_sweep", dir).collect()
       assert(d39.map(_.getAs[Long]("nprobe")).toSeq == Seq(1L, 2L, 4L, 8L))

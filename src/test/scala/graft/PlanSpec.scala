@@ -121,9 +121,16 @@ class PlanSpec extends SparkTestBase {
     assert(aggExchanges == 2, s"expected dedup+stats exchanges, got $aggExchanges: $p")
   }
 
+  /** The shared bucket kernel's aggregate is in the plan: candidates come
+    * from `buckets()`, not from a hand-rolled capped self-join. */
+  private def assertKernel(q: String, p: String): Unit =
+    assert(p.contains("cappedcollectagg("), s"$q must build its buckets with CappedCollect: " + p)
+
   test("LSH paths never degenerate into a cartesian product") {
     assert(!plan("d3_dedup_minhash_lsh").contains("CartesianProduct"))
     assert(!plan("d6_ann_lsh").contains("CartesianProduct"))
+    assertKernel("d6_ann_lsh", finalPlan("d6_ann_lsh"))
+    assertKernel("d25_winnow_match", finalPlan("d25_winnow_match"))
     // d5's sanctioned brute-force cross join now lives inside the
     // cachedKnn artifact derivation (paid once per corpus snapshot);
     // the serving read is a plain scan of the persisted lists
@@ -136,6 +143,7 @@ class PlanSpec extends SparkTestBase {
     val p = finalPlan("d13_simhash_neardup")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assertKernel("d13_simhash_neardup", p)
   }
 
   test("d14 incremental dedup: bipartite posting-list join, never all-pairs") {
