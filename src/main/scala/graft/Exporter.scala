@@ -1,5 +1,8 @@
 package graft
 
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, FileOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.DataFrame
 
 import graft.sinks._
@@ -22,17 +25,24 @@ final case class Exporter(df: DataFrame) {
 
 object Exporter {
   /** A (source, codec) pair ready to write: `content` yields the codec's
-    * driver-stream chunks afresh on each call. */
-  final class Bound(content: () => Iterator[String]) {
-    def writeString: String = content().mkString
+    * driver-stream chunks, UTF-8 bytes, afresh on each call. The encoded
+    * rows arrive from the tasks as byte chunks of whole rows; only the
+    * framing is added on the driver. */
+  final class Bound(content: () => Iterator[Array[Byte]]) {
+    /** The whole output, decoded once at the end. */
+    def writeString: String = {
+      val out = new ByteArrayOutputStream()
+      content().foreach(b => out.write(b))
+      out.toString(UTF_8)
+    }
 
-    /** Streams the chunks to a single local file — the `exporter.WriteFile`
-      * coordinator (`exporter.go:36-48`): one writer, constant memory,
-      * UTF-8 whatever the JVM's default charset. */
+    /** Streams the chunks' bytes to a single local file — the
+      * `exporter.WriteFile` coordinator (`exporter.go:36-48`): one
+      * writer, constant memory, UTF-8 whatever the JVM's default
+      * charset, and no byte decoded or encoded again on the way. */
     def writeFile(path: String): Unit = {
-      val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        new java.io.FileOutputStream(path), java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
-      try content().foreach(w.write) finally w.close()
+      val out = new BufferedOutputStream(new FileOutputStream(path), 1 << 16)
+      try content().foreach(b => out.write(b)) finally out.close()
     }
   }
 }

@@ -920,8 +920,9 @@ object LlmPipeline {
     val shc = sh.join(ids, Seq("doc_id"), "left_semi")
     // pinned before the checkpoint: the frozen frame must scan at
     // cluster parallelism, not at whatever AQE coalesced the flag-join's
-    // exchanges to, and the bucket exchange below then reuses its
-    // shingle partitioning
+    // exchanges to. The checkpoint keeps that partition count but not
+    // the shingle partitioning, so `buckets` below hash-exchanges the
+    // cold postings on shingle again, right above the checkpoint's scan
     val fl = materialize(graft.ops.Spread.pinned(
       if (!localDf)
         shc.select(col("doc_id"), col("shingle"),

@@ -3,13 +3,14 @@ package graft.sinks
 import java.time.ZoneId
 
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.GoTime
 
-/** Pure row→string formatting, shared by the distributed path
-  * (`Dataset.map` over rendered rows) and the driver-stream path (exact
-  * sequential semantics for rowID-dependent hooks). Mirrors the byte-level
-  * behavior of the reference codecs; each function cites its source.
+/** The reference codecs' fixed markup, CSV's space rule and the JSON
+  * hook's value writer; the row encoders of CSV, XML and HTML are the
+  * [[RowEncoder]]s. Each function cites its source.
   */
 object Format {
 
@@ -25,89 +26,17 @@ object Format {
     case _ => false
   }
 
-  /** Go `encoding/csv` quoting decision (writer.go `fieldNeedsQuotes`):
-    * empty fields are never quoted; `\.` always is (postgres dump quirk);
-    * fields containing the delimiter, a quote, CR or LF are quoted; so are
-    * fields whose first rune is a space (Go `unicode.IsSpace`, which
-    * includes NEL and NBSP). */
-  def csvNeedsQuotes(field: String, delimiter: Char): Boolean = {
-    if (field.isEmpty) false
-    else if (field == "\\.") true
-    else if (field.indexOf(delimiter) >= 0) true
-    else if (field.exists(c => c == '"' || c == '\r' || c == '\n')) true
-    else goIsSpace(field.codePointAt(0))
-  }
-
-  /** Encode one CSV field: double inner quotes; in CRLF mode, newlines
-    * inside quoted fields become CRLF and bare CRs are dropped (Go
-    * csv.Writer's quoted-field loop). */
-  def csvField(field: String, delimiter: Char, useCRLF: Boolean): String = {
-    if (!csvNeedsQuotes(field, delimiter)) field
-    else {
-      val doubled = field.replace("\"", "\"\"")
-      val body =
-        if (useCRLF) doubled.replace("\r", "").replace("\n", "\r\n")
-        else doubled
-      "\"" + body + "\""
-    }
-  }
-
-  /** One CSV record, no line terminator. `null` cells must already be
-    * replaced by the configured nullValue (`csv.go:195-198`). */
-  def csvLine(fields: IndexedSeq[String], delimiter: Char, useCRLF: Boolean): String =
-    fields.map(csvField(_, delimiter, useCRLF)).mkString(delimiter.toString)
-
-  /** Go `xml.EscapeText` on a valid-UTF-8 string: the five XML specials
-    * plus tab/LF/CR as character references (`xml.go:118`), and U+FFFD for
-    * every other character outside XML's Char production (the C0 controls,
-    * U+FFFE and U+FFFF). */
-  def xmlEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '"'  => sb.append("&#34;")
-        case '\'' => sb.append("&#39;")
-        case '&'  => sb.append("&amp;")
-        case '<'  => sb.append("&lt;")
-        case '>'  => sb.append("&gt;")
-        case '\t' => sb.append("&#x9;")
-        case '\n' => sb.append("&#xA;")
-        case '\r' => sb.append("&#xD;")
-        case c if c < ' ' || c >= '\uFFFE' => sb.append('\uFFFD')
-        case c    => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** One `<row>` element: NULL cells omitted entirely, values escaped,
-    * element names taken raw from column names (`xml.go:111-122`). `null`
-    * entries in `mask` (the rendered cells) mark NULL; the other cells
-    * are written from `row`, so a row rewritten by a hook never brings a
-    * NULL back (`xml.go:94-96,113-115`). */
-  def xmlRow(names: IndexedSeq[String], mask: Array[String], row: IndexedSeq[String]): String = {
-    val sb = new java.lang.StringBuilder("<row>")
-    var i = 0
-    while (i < names.length) {
-      if (mask(i) != null) {
-        sb.append('<').append(names(i)).append('>')
-        sb.append(xmlEscape(row(i)))
-        sb.append("</").append(names(i)).append('>')
-      }
-      i += 1
-    }
-    sb.append("</row>").toString
+  /** The first code point of `u`, well-formed UTF-8 and not empty. */
+  private[sinks] def firstRune(u: UTF8String): Int = {
+    def at(j: Int) = Platform.getByte(u.getBaseObject, u.getBaseOffset + j) & 0x3F
+    val b0 = Platform.getByte(u.getBaseObject, u.getBaseOffset) & 0xFF
+    if (b0 < 0x80) b0
+    else if (b0 < 0xE0) (b0 & 0x1F) << 6 | at(1)
+    else if (b0 < 0xF0) (b0 & 0x0F) << 12 | at(1) << 6 | at(2)
+    else (b0 & 0x07) << 18 | at(1) << 12 | at(2) << 6 | at(3)
   }
 
   val xmlDeclaration = "<?xml version=\"1.0\" encoding=\"UTF-8\"?>"
-
-  /** One `<tr>`: cells are written RAW (the reference does not HTML-escape
-    * cell contents, `html.go:155-162`); NULL cells must already carry the
-    * configured nullValue markup. */
-  def htmlRow(cells: IndexedSeq[String]): String =
-    cells.mkString("<tr><td>", "</td><td>", "</td></tr>")
 
   /** The reference's document prefix: CSS collapsed to single spaces via
     * `strings.Join(strings.Fields(...), " ")` (`html.go:194-227`). */

@@ -1,14 +1,19 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.AbstractIterator
-import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
+import net.jpountz.lz4.LZ4Factory
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Render
 
@@ -50,49 +55,79 @@ private[graft] object SinkIO {
     header
   }
 
-  /** Rendered rows as string arrays; `null` entries are NULL cells. */
-  def renderedRows(df: DataFrame, mappers: Mappers): Dataset[Array[String]] = {
-    val rendered = Render.renderAll(df, mappers)
-    val n = rendered.schema.length
-    val sp = rendered.sparkSession
-    import sp.implicits._
-    rendered.map { row =>
-      Array.tabulate(n)(i => if (row.isNullAt(i)) null else row.getString(i))
-    }
-  }
+  /** Bytes a task gathers into one driver-stream chunk before it ships
+    * them. */
+  private final val ChunkBytes = 1 << 20
 
   /** The one driver-stream loop — the `exporter.Write` coordinator
-    * (`exporter.go:17-48`) with the codec plugged in as a [[Frame]] and a
-    * row step. `step` gets the 1-based rowID, counting KEPT rows, and
-    * returns the encoded row or None to drop it. The loop stops pulling
-    * from `source` once `limit` rows are kept (so `limit == 0` never
-    * opens it), and opens `source` only after `head` is consumed. */
-  def stream[A](frame: Frame, limit: Int, source: => Iterator[A])(
-      step: (Int, A) => Option[String]): Iterator[String] = {
-    var kept = 0
-    val rows = new AbstractIterator[String] {
-      private lazy val src = source
-      private var pending: String = null
-      private def advance(): Unit =
-        while (pending == null && (limit < 0 || kept < limit) && src.hasNext)
-          step(kept + 1, src.next()).foreach { s =>
-            pending = (if (kept == 0) frame.open else frame.sep) + s
-            kept += 1
-          }
-      def hasNext: Boolean = { advance(); pending != null }
-      def next(): String = {
-        if (!hasNext) Iterator.empty.next()
-        val s = pending; pending = null; s
-      }
-    }
-    def chunk(s: String) = if (s.isEmpty) Iterator.empty else Iterator.single(s)
-    // `++` is lazy: the trailer is chosen once the rows are exhausted
-    chunk(frame.head) ++ rows ++ chunk(if (kept > 0) frame.close else frame.empty)
+    * (`exporter.go:17-48`) with the codec plugged in as a [[Frame]]:
+    * `head`, then each piece of `pieces` after `open` (the first) or
+    * `sep`, then `close`, or `empty` when there was no piece. A piece is
+    * one or more encoded rows, joined by `sep`. `pieces` is opened only
+    * after `head` is consumed. */
+  def stream(frame: Frame, pieces: => Iterator[Array[Byte]]): Iterator[Array[Byte]] = {
+    def chunk(s: String) = if (s.isEmpty) Iterator.empty else Iterator.single(s.getBytes(UTF_8))
+    var any = false
+    // `++` is lazy: the trailer is chosen once the pieces are exhausted
+    chunk(frame.head) ++ pieces.flatMap { p =>
+      val before = chunk(if (any) frame.sep else frame.open)
+      any = true
+      before ++ Iterator.single(p)
+    } ++ chunk(if (any) frame.close else frame.empty)
   }
 
-  /** Pre-encoded rows of a distributed row builder, framed on the driver. */
-  def stream(frame: Frame, limit: Int, rows: => Dataset[String]): Iterator[String] =
-    stream(frame, limit, rows.toLocalIterator().asScala)((_, s) => Some(s))
+  /** A distributed row builder's rows as pieces for [[stream]]: each task
+    * joins its partition's rows with `sep` into chunks of about
+    * [[ChunkBytes]], LZ4-packed for the trip, and the driver pulls them
+    * partition by partition and unpacks one at a time. So it holds one
+    * partition's packed chunks plus one chunk, as Spark's own
+    * `toLocalIterator` holds one partition's packed rows. `rows` already
+    * holds at most `limit` rows; `limit == 0` starts no job. */
+  def chunks(rows: Dataset[String], sep: String, limit: Int): Iterator[Array[Byte]] =
+    if (limit == 0) Iterator.empty
+    else {
+      val s = sep.getBytes(UTF_8)
+      rows.queryExecution.toRdd.mapPartitions(joined(s, _)).toLocalIterator.map { case (n, packed) =>
+        LZ4Factory.fastestInstance().fastDecompressor().decompress(packed, n)
+      }
+    }
+
+  /** `rows` joined with `sep` into chunks, each as its length and its LZ4
+    * block. */
+  private def joined(sep: Array[Byte], rows: Iterator[InternalRow]): Iterator[(Int, Array[Byte])] =
+    new AbstractIterator[(Int, Array[Byte])] {
+      private val buf = new ByteBuf(1 << 16)
+      private val lz4 = LZ4Factory.fastestInstance().fastCompressor()
+      def hasNext: Boolean = rows.hasNext
+      def next(): (Int, Array[Byte]) = {
+        buf.truncate(0)
+        buf.put(rows.next().getUTF8String(0))
+        while (buf.size < ChunkBytes && rows.hasNext) {
+          buf.put(sep)
+          buf.put(rows.next().getUTF8String(0))
+        }
+        (buf.size, buf.packed(lz4))
+      }
+    }
+
+  /** Rows that a sequential hook keeps, as pieces for [[stream]]: `step`
+    * gets the 1-based rowID, counting KEPT rows, and returns the encoded
+    * row or None to drop it. Pulling from `source` stops once `limit`
+    * rows are kept, so `limit == 0` never opens it. */
+  def kept[A](limit: Int, source: => Iterator[A])(step: (Int, A) => Option[Array[Byte]]): Iterator[Array[Byte]] =
+    new AbstractIterator[Array[Byte]] {
+      private lazy val src = source
+      private var kept = 0
+      private var pending: Array[Byte] = null
+      private def advance(): Unit =
+        while (pending == null && (limit < 0 || kept < limit) && src.hasNext)
+          step(kept + 1, src.next()).foreach { b => pending = b; kept += 1 }
+      def hasNext: Boolean = { advance(); pending != null }
+      def next(): Array[Byte] = {
+        if (!hasNext) Iterator.empty.next()
+        val b = pending; pending = null; b
+      }
+    }
 
   /** Distributed write of pre-encoded rows of a line format
     * (`sep == close`) through Spark's text writer: each partition with
@@ -132,13 +167,18 @@ private[graft] object SinkIO {
       .mode("overwrite").save(path)
 }
 
-/** A codec's driver-stream surface: its [[contentIterator]] chunks, and
-  * the string and single-file writers over them. */
+/** A codec's driver-stream surface: its UTF-8 byte [[chunks]], and the
+  * string and single-file writers over them. */
 private[graft] abstract class Codec[O](defaults: O) {
-  def contentIterator(df: DataFrame, opts: O = defaults): Iterator[String]
+  protected def chunks(df: DataFrame, opts: O): Iterator[Array[Byte]]
+
+  /** The driver stream's chunks, each decoded: a chunk is whole rows or
+    * framing, so each is well-formed UTF-8 on its own. */
+  def contentIterator(df: DataFrame, opts: O = defaults): Iterator[String] =
+    chunks(df, opts).map(new String(_, UTF_8))
 
   private[graft] def bound(df: DataFrame, opts: O): graft.Exporter.Bound =
-    new graft.Exporter.Bound(() => contentIterator(df, opts))
+    new graft.Exporter.Bound(() => chunks(df, opts))
 
   def writeString(df: DataFrame, opts: O = defaults): String = bound(df, opts).writeString
 
@@ -153,18 +193,17 @@ private[sinks] trait CellOptions {
   def mappers: Mappers
 }
 
-/** What a codec whose rows are rendered cells states: its [[Frame]], the
-  * string NULL cells become, and one row encoder. The encoder gets the
-  * rendered cells (`null` marks a NULL) and the row to write. */
-private[sinks] final case class CellFormat(frame: Frame, nullAs: String,
-                                           encode: (Array[String], IndexedSeq[String]) => String)
+/** What a codec whose rows are rendered cells states: its [[Frame]] and
+  * its row encoder. */
+private[sinks] final case class CellFormat(frame: Frame, encoder: RowEncoder)
 
 /** CSV, XML and HTML: both write paths derived from one [[CellFormat]].
-  * The distributed builder renders in a codegen'd projection and encodes
-  * each row with its own cells in one narrow map, the same shape as
-  * Spark's own CSV `FileFormatWriter`. The driver stream frames the
-  * builder's rows; with a hook, it encodes the hook's rows instead, and
-  * the hook sees NULL cells as `nullAs`. */
+  * The distributed builder renders and encodes each row in one codegen'd
+  * projection ([[EncodeRow]]). The driver stream ships the builder's rows
+  * as byte chunks; with a hook, it encodes the hook's rows through the
+  * same encoder instead. The hook sees a NULL cell as the encoder's
+  * `nullAs`, or `""` where NULL cells are left out, and a cell that was
+  * NULL stays left out whatever the hook writes there. */
 private[sinks] abstract class CellCodec[O <: CellOptions](defaults: O) extends Codec[O](defaults) {
   protected def format(df: DataFrame, opts: O): CellFormat
 
@@ -174,28 +213,24 @@ private[sinks] abstract class CellCodec[O <: CellOptions](defaults: O) extends C
       "the sequential preProcessor runs on the driver-stream path (writeString/writeFile); " +
       "use ops.Pipeline filter/project for distributed writes")
     import SinkIO.stringEnc
-    val fmt = format(df, opts)
-    val (nv, encode) = (fmt.nullAs, fmt.encode)
-    SinkIO.renderedRows(SinkIO.limited(df, opts.limit), opts.mappers)
-      .map(cells => encode(cells, CellCodec.filled(cells, nv)))
+    val rendered = Render.renderAll(SinkIO.limited(df, opts.limit), opts.mappers)
+    val cells = rendered.queryExecution.analyzed.output
+    rendered.select(ColumnBridge.column(EncodeRow(cells, format(df, opts).encoder)).as("value")).as[String]
   }
 
-  def contentIterator(df: DataFrame, opts: O): Iterator[String] = {
-    val fmt = format(df, opts)
-    opts.preProcessor.fold(SinkIO.stream(fmt.frame, opts.limit, encoded(df, opts))) { hook =>
-      SinkIO.stream(fmt.frame, opts.limit, SinkIO.renderedRows(df, opts.mappers).toLocalIterator().asScala) {
-        (rowID, cells) =>
-          val (row, keep) = hook(rowID, CellCodec.filled(cells, fmt.nullAs))
-          if (keep) Some(fmt.encode(cells, row)) else None
+  protected def chunks(df: DataFrame, opts: O): Iterator[Array[Byte]] = {
+    val CellFormat(frame, enc) = format(df, opts)
+    SinkIO.stream(frame, opts.preProcessor.fold(SinkIO.chunks(encoded(df, opts), frame.sep, opts.limit)) { hook =>
+      val shown = enc.nullAs.getOrElse("")
+      SinkIO.kept(opts.limit, Render.renderAll(df, opts.mappers).toLocalIterator().asScala) { (rowID, r) =>
+        val (row, keep) = hook(rowID, IndexedSeq.tabulate(r.length)(i => if (r.isNullAt(i)) shown else r.getString(i)))
+        if (!keep) None
+        else Some(enc.encode(Array.tabulate(r.length) { i =>
+          if (r.isNullAt(i) && enc.nullAs.isEmpty) null else UTF8String.fromString(row(i))
+        }).getBytes)
       }
-    }
+    })
   }
-}
-
-private object CellCodec {
-  /** `cells` with each NULL as `nullAs`, in one new array. */
-  def filled(cells: Array[String], nullAs: String): IndexedSeq[String] =
-    ArraySeq.unsafeWrapArray(cells).map(c => if (c == null) nullAs else c)
 }
 
 // ---------------------------------------------------------------------------
@@ -228,10 +263,9 @@ object CsvSink extends CellCodec(CsvOptions()) {
   protected def format(df: DataFrame, opts: CsvOptions): CellFormat = {
     val (d, crlf, eol) = (opts.delimiter, opts.useCRLF, opts.eol)
     val hdr = SinkIO.checkedHeader(df, opts.customHeader.getOrElse(df.schema.fieldNames.toSeq))
-    val line = if (opts.writeHeader && hdr.nonEmpty) Format.csvLine(hdr.toIndexedSeq, d, crlf) + eol else ""
-    CellFormat(
-      if (opts.writeHeaderWhenNoData) Frame("", eol, eol, head = line) else Frame(line, eol, eol),
-      opts.nullValue, (_, row) => Format.csvLine(row, d, crlf))
+    val enc = CsvRow(d, crlf, opts.nullValue)
+    val line = if (opts.writeHeader && hdr.nonEmpty) enc.encode(hdr.map(UTF8String.fromString).toArray).toString + eol else ""
+    CellFormat(if (opts.writeHeaderWhenNoData) Frame("", eol, eol, head = line) else Frame(line, eol, eol), enc)
   }
 
   /** Distributed directory write ([[SinkIO.writeParts]]) with the one CSV
@@ -294,9 +328,9 @@ object JsonSink extends Codec(JsonOptions()) {
   private[sinks] val arrayFrame = Frame("[\n", ",\n", "\n]\n")
   private[sinks] val ndjsonFrame = Frame("", "\n", "\n")
 
-  def contentIterator(df: DataFrame, opts: JsonOptions): Iterator[String] = {
+  protected def chunks(df: DataFrame, opts: JsonOptions): Iterator[Array[Byte]] = {
     val frame = if (opts.newlineDelimited) ndjsonFrame else arrayFrame
-    opts.preProcessor.fold(SinkIO.stream(frame, opts.limit, objects(df, opts))) { hook =>
+    SinkIO.stream(frame, opts.preProcessor.fold(SinkIO.chunks(objects(df, opts), frame.sep, opts.limit)) { hook =>
       // the map hook sees native values; custom mappers apply BEFORE it,
       // like `json.go:111-128`; GoJson serializes std-compatibly
       val mapped = df.select(df.schema.fields.map { f =>
@@ -304,12 +338,12 @@ object JsonSink extends Codec(JsonOptions()) {
       }.toIndexedSeq: _*)
       val names = mapped.schema.fieldNames
       val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get("spark.sql.session.timeZone"))
-      SinkIO.stream(frame, opts.limit, mapped.toLocalIterator().asScala) { (rowID, row) =>
+      SinkIO.kept(opts.limit, mapped.toLocalIterator().asScala) { (rowID, row) =>
         val m: Map[String, Any] = names.indices.map(i => names(i) -> row.get(i)).toMap
         val (rewritten, keep) = hook(rowID, m)
-        if (keep) Some(Format.GoJson.writeRow(rewritten, zone)) else None
+        if (keep) Some(Format.GoJson.writeRow(rewritten, zone).getBytes(UTF_8)) else None
       }
-    }
+    })
   }
 
   /** Distributed directory write ([[SinkIO.writeParts]]), NDJSON whatever
@@ -339,9 +373,8 @@ object XmlSink extends CellCodec(XmlOptions()) {
     * first kept row; zero kept rows → EMPTY output. NULL elements stay
     * omitted even where a hook rewrote the cell (`xml.go:94-96,113-115`). */
   protected def format(df: DataFrame, opts: XmlOptions): CellFormat = {
-    val names = df.schema.fieldNames.toIndexedSeq
-    CellFormat(Frame(Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n"), "",
-      (cells, row) => Format.xmlRow(names, cells, row))
+    CellFormat(Frame(Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n"),
+      XmlRow(df.schema.fieldNames.toIndexedSeq))
   }
 
   /** Distributed write WITH the reference's global framing — the same
@@ -398,7 +431,7 @@ object HtmlSink extends CellCodec(HtmlOptions()) {
       if (opts.writeHeaderWhenNoData && header.nonEmpty)
         Frame("<tbody>", "", close, "</table></body></html>", head = header)
       else Frame(header + "<tbody>", "", close),
-      opts.nullValue, (_, row) => Format.htmlRow(row))
+      HtmlRow(opts.nullValue))
   }
 
   /** Distributed write WITH the reference's whole-document framing —

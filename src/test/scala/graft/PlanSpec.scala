@@ -317,4 +317,16 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+
+  test("plain CSV/XML/HTML exports encode in the render projection: no object round trip") {
+    import graft.sinks._
+    val df = graft.sources.Tables.table(spark, sf0001, "lineitem")
+    for ((codec, rows) <- Seq("csv" -> CsvSink.lines(df, CsvOptions()), "xml" -> XmlSink.rows(df),
+        "html" -> HtmlSink.rows(df))) {
+      val p = rows.queryExecution.executedPlan.toString
+      for (node <- Seq("DeserializeToObject", "MapElements", "SerializeFromObject"))
+        assert(!p.contains(node), s"$codec: $node in\n$p")
+      assert(p.contains("encoderow"), s"$codec: no row encoder in\n$p")
+    }
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.sinks._
 import graft.sources.Slice
 
@@ -441,7 +443,7 @@ class SinkSpec extends SparkTestBase {
     for (d <- Seq(',', ';'); crlf <- Seq(false, true)) {
       val opts = CsvOptions(delimiter = d, useCRLF = crlf, nullValue = " N,A;")
       val tag = s"${if (d == ',') "comma" else "semi"}_$crlf"
-      val header = Format.csvLine(schema.fieldNames.toIndexedSeq, d, crlf) + opts.eol
+      val header = StringFormat.csvLine(schema.fieldNames.toIndexedSeq, d, crlf) + opts.eol
       CsvSink.writeDir(one, outDir(s"go_one_$tag"), opts)
       assert(parts(outDir(s"go_one_$tag")) == Seq(CsvSink.writeString(one, opts)), tag)
       // a session cap on records per file must not split a partition's file
@@ -565,5 +567,136 @@ class SinkSpec extends SparkTestBase {
     val keepAll = (_: Int, m: Map[String, Any]) => (m, true)
     assert(JsonSink.writeString(src, JsonOptions(limit = 1, preProcessor = Some(keepAll))) ==
       "[\n{\"id\":0,\"v\":0}\n]\n")
+  }
+
+  // ---- byte-chunk delivery against the String encoders it replaced ----
+
+  private def fileBytes(path: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+
+  /** The directory's non-hidden files' bytes, concatenated in name order. */
+  private def dirBytes(dir: String): Array[Byte] =
+    new java.io.File(dir).listFiles().filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.getName).flatMap(f => java.nio.file.Files.readAllBytes(f.toPath))
+
+  private def bound(codec: String, df: org.apache.spark.sql.DataFrame, limit: Int): Exporter.Bound = {
+    val e = Exporter(df)
+    codec match {
+      case "csv" => e.csv(CsvOptions(limit = limit))
+      case "json" => e.json(JsonOptions(limit = limit))
+      case "xml" => e.xml(XmlOptions(limit = limit))
+      case "html" => e.html(HtmlOptions(limit = limit))
+    }
+  }
+
+  /** What the String encoders made of `df` under `limit`, with default
+    * options: the rendered rows (JSON: the objects) pulled through a
+    * local iterator, each encoded by [[StringFormat]], then framed. */
+  private def stringExport(codec: String, df: org.apache.spark.sql.DataFrame, limit: Int): String = {
+    val names = df.schema.fieldNames.toIndexedSeq
+    def rendered = graft.functions.Render.renderAll(SinkIO.limited(df, limit)).toLocalIterator().asScala
+      .map(r => Array.tabulate(r.length)(i => if (r.isNullAt(i)) null else r.getString(i))).toSeq
+    def filled(cells: Array[String], nullAs: String) = cells.map(c => if (c == null) nullAs else c).toIndexedSeq
+    def framed(rows: Seq[String], open: String, sep: String, close: String, empty: String = "") =
+      if (rows.isEmpty) empty else open + rows.mkString(sep) + close
+    codec match {
+      case "csv" => StringFormat.csvLine(names, ',', useCRLF = false) + "\n" +
+        rendered.map(c => StringFormat.csvLine(filled(c, ""), ',', useCRLF = false) + "\n").mkString
+      case "json" => framed(JsonSink.objects(df, JsonOptions(limit = limit)).toLocalIterator().asScala.toSeq,
+        "[\n", ",\n", "\n]\n")
+      case "xml" => framed(rendered.map(c => StringFormat.xmlRow(names, c, filled(c, ""))),
+        Format.xmlDeclaration + "\n<data>\n", "\n", "\n</data>\n")
+      case "html" => HtmlSink.headerBlock(df) + framed(rendered.map(c => StringFormat.htmlRow(filled(c, Format.htmlNullValue))),
+        "<tbody>", "", "</tbody></table></body></html>", "</table></body></html>")
+    }
+  }
+
+  /** Ids of the jobs started while `body` ran. */
+  private def jobsOf(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull, e.jobId))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-watched", "watched")
+      try body finally sc.clearJobGroup()
+      // the bus delivers events in order: once this marker job is seen,
+      // every job the body started has been seen too
+      sc.setJobGroup("graft-marker", "marker")
+      try spark.range(1).queryExecution.toRdd.count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._1 == "graft-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(_._1 == "graft-marker"), "the marker job was never seen")
+      seen.asScala.collect { case ("graft-watched", id) => id }.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("byte chunks: every codec and limit gives the String encoders' bytes, across chunks and an empty partition") {
+    import org.apache.spark.sql.functions._
+    // four partitions of 1000 ids; the second is empty, the first holds
+    // about 1.5 MB of cells, more than one chunk
+    val df = spark.range(0, 4000, 1, 4).where(col("id") < 1000 || col("id") >= 2000)
+      .select(col("id"),
+        when(col("id") < 1000, repeat(lit("é<&\"x,\t😀"), 120)).otherwise(concat(lit("r "), col("id").cast("string"))).as("text"),
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 1.5).as("d"))
+    assert(df.rdd.getNumPartitions == 4)
+    assert(SinkIO.chunks(CsvSink.lines(df, CsvOptions()), "\n", -1).length >= 4,
+      "the first partition must span two chunks")
+    val dir = java.nio.file.Files.createTempDirectory("graft_chunks").toString
+    for (codec <- Seq("csv", "json", "xml", "html"); limit <- Seq(-1, 0, 1, 700, 1500, 3000, 5000)) {
+      val want = stringExport(codec, df, limit).getBytes("UTF-8")
+      val b = bound(codec, df, limit)
+      assert(b.writeString.getBytes("UTF-8").sameElements(want), s"$codec writeString limit=$limit")
+      b.writeFile(s"$dir/out.$codec")
+      assert(fileBytes(s"$dir/out.$codec").sameElements(want), s"$codec writeFile limit=$limit")
+    }
+    // limit 0: the frame alone, and no job
+    val jobs = jobsOf(Seq("csv", "json", "xml", "html").foreach(c => bound(c, df, 0).writeFile(s"$dir/zero.$c")))
+    assert(jobs.isEmpty, s"limit = 0 started jobs $jobs")
+  }
+
+  test("invalid UTF-8 cells export as their U+FFFD decoding on every path") {
+    import org.apache.spark.sql.functions._
+    val raw = Seq(1 -> Array(0x61, 0xC3, 0x28, 0x62), 2 -> Array(0xFF), 3 -> Array(0x78, 0xE2, 0x82))
+    val bin = spark.createDataFrame(raw.map { case (id, b) => (id, b.map(_.toByte)) }).toDF("id", "b")
+    // a parquet string column holding the same malformed bytes
+    val pq = java.nio.file.Files.createTempDirectory("graft_badutf8").toString + "/t"
+    bin.select(col("id"), col("b"), col("b").cast("string").as("s")).write.parquet(pq)
+    val df = spark.read.parquet(pq).orderBy("id").coalesce(1)
+    assert(df.schema.map(_.dataType.typeName) == Seq("integer", "binary", "string"))
+
+    val (r1, r2, r3) = ("a\uFFFD(b", "\uFFFD", "x\uFFFD")
+    val rows = Seq((1, r1), (2, r2), (3, r3))
+    val csv = "id,b,s\n" + rows.map { case (i, t) => s"$i,$t,$t\n" }.mkString
+    val b64 = Seq("YcMoYg==", "/w==", "eOKC")
+    val objects = rows.zip(b64).map { case ((i, t), b) => s"""{"b":"$b","id":$i,"s":"$t"}""" }
+    val json = objects.mkString("[\n", ",\n", "\n]\n")
+    val ndjson = objects.map(_ + "\n").mkString
+    val xml = Format.xmlDeclaration + "\n<data>\n" +
+      rows.map { case (i, t) => s"<row><id>$i</id><b>$t</b><s>$t</s></row>" }.mkString("\n") + "\n</data>\n"
+    val html = HtmlSink.headerBlock(df) + "<tbody>" +
+      rows.map { case (i, t) => s"<tr><td>$i</td><td>$t</td><td>$t</td></tr>" }.mkString +
+      "</tbody></table></body></html>"
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_badutf8_out").toString
+    val e = Exporter(df)
+    for ((name, b, want) <- Seq(("csv", e.csv(), csv), ("json", e.json(), json), ("xml", e.xml(), xml),
+        ("html", e.html(), html))) {
+      assert(b.writeString == want, name)
+      b.writeFile(s"$dir/out.$name")
+      assert(fileBytes(s"$dir/out.$name").sameElements(want.getBytes("UTF-8")), name)
+    }
+    CsvSink.writeDir(df, s"$dir/csv")
+    assert(dirBytes(s"$dir/csv").sameElements(csv.getBytes("UTF-8")))
+    JsonSink.writeDir(df, s"$dir/ndjson")
+    assert(dirBytes(s"$dir/ndjson").sameElements(ndjson.getBytes("UTF-8")))
+    XmlSink.writeDirFramed(df, s"$dir/xml")
+    assert(dirBytes(s"$dir/xml").sameElements(xml.getBytes("UTF-8")))
+    HtmlSink.writeDirFramed(df, s"$dir/html")
+    assert(dirBytes(s"$dir/html").sameElements(html.getBytes("UTF-8")))
   }
 }
